@@ -27,7 +27,7 @@ Quick start — near-dup dedup of your own table in 5 lines::
 from __future__ import annotations
 
 from collections import OrderedDict
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -69,6 +69,7 @@ __all__ = [
     "ewma_smooth",
     "holt_smooth",
     "winnow_fingerprints",
+    "memo_stage",
     "clear_stage_caches",
 ]
 
@@ -169,20 +170,8 @@ def minhash_pairs(
     shared expression (measured on 4.1.2), silently yielding
     ``n_perm`` identical permutations.
 
-    Fault-tolerance note: the shingle-set stage is
-    ``localCheckpoint``-ed (constructing the returned — otherwise
-    lazy — plan triggers an immediate job, and lineage is truncated
-    WITHOUT fault tolerance: losing an executor mid-query fails the
-    query instead of recomputing). At 100 TB, if recomputation-on-
-    loss matters, materialize the shingle stage to a table (or use
-    reliable ``checkpoint()``) and pass that in instead.
-
-    Caching contract: that stage is memoized per (application, plan,
-    source-file listing) and shared with the other dedup operators.
-    File rewrites are detected automatically (fresh part-file names →
-    fresh key); if you mutate the SAME files in place within one
-    application, or lose an executor, call
-    :func:`clear_stage_caches` before the next call.
+    The shingle-set and candidate stages are memoized and shared with
+    the other dedup operators; caching contract: :func:`memo_stage`.
 
     >>> minhash_pairs(docs, "doc_id", "text", threshold=0.5)
     """
@@ -219,33 +208,17 @@ def _staged_minhash_parts(
     MinHash consumer in a suite run (llm_dedup_minhash,
     llm_bleu_pairs, llm_rouge_pairs, the near-dup cluster family's
     label builder, llm_dedup_candidate_stats), so the candidate pair
-    list (near-dup-sized, tiny) is ``localCheckpoint``-ed once per
-    (application, corpus, parameters) under the gram-stage cache's
-    keying/eviction/staleness contract. Returns (sets, cands) exactly
-    like :func:`_minhash_parts`."""
-    spark = df.sparkSession
-    key = (
-        "mhcands",
-        spark.sparkContext.applicationId,
-        df.semanticHash(),
-        str(df.schema),
-        _data_version(df),
-        id_col,
-        text_col,
-        shingle_k,
-        n_perm,
-        n_bands,
+    list (near-dup-sized, tiny) goes through :func:`memo_stage`.
+    Returns (sets, cands) exactly like :func:`_minhash_parts`."""
+    sets = _staged_shingle_sets(df, id_col, text_col, shingle_k)
+    cands = memo_stage(
+        "minhash_cands",
+        [df],
+        (id_col, text_col, shingle_k, n_perm, n_bands),
+        lambda: _minhash_parts(
+            df, id_col, text_col, shingle_k, n_perm, n_bands
+        )[1],
     )
-    hit = _GRAM_STAGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    sets, cands = _minhash_parts(
-        df, id_col, text_col, shingle_k, n_perm, n_bands
-    )
-    cands = cands.localCheckpoint(eager=True)
-    _GRAM_STAGE_CACHE[key] = (sets, cands)
-    while len(_GRAM_STAGE_CACHE) > _GRAM_STAGE_CACHE_MAX:
-        _GRAM_STAGE_CACHE.popitem(last=False)
     return sets, cands
 
 
@@ -261,17 +234,12 @@ def _minhash_parts(
     candidate-volume plan guard. Returns (sets, cands)."""
     assert n_perm >= 2 * n_bands, "need ≥2 minhash rows per band"
     rows = n_perm // n_bands
-    # localCheckpoint, not cache(): the shingle sets are referenced by
-    # the lazily returned plan (minhash build + exact refine), and a
-    # cache() here would pin executor storage for the whole session —
-    # checkpoint blocks are instead released by the ContextCleaner
-    # when the cache entry is evicted. Session-memoized and spread to
-    # defaultParallelism first (the _staged_gram_sets device): a
-    # single-file corpus plans as ONE partition, and the 128 xxhash64
-    # evaluations per posting row run at the CHECKPOINT's partition
-    # width — the narrow source serialized the whole minhash build on
-    # one core. Shared across every minhash caller in the session
-    # (dedup, threshold sweep, candidate stats, component labels).
+    # memoized (see memo_stage) and spread to defaultParallelism: the
+    # 128 xxhash64 evaluations per posting row run at the
+    # CHECKPOINT's partition width — a narrow single-file source
+    # serialized the whole minhash build on one core. Shared across
+    # every minhash caller in the session (dedup, threshold sweep,
+    # candidate stats, component labels).
     sets = _staged_shingle_sets(df, id_col, text_col, shingle_k)
     inv = sets.select(id_col, F.explode("shingles").alias("sh"))
     # (r12 note: a hash-distinct-shingles-then-join variant was
@@ -949,31 +917,18 @@ def char_gram_sets(
     )
 
 
-#: session-scoped memo of the raw char-gram checkpoint shared by the
-#: jaccard/containment candidate stages (the operators/_cc_cache
-#: precedent): the gram-set expression (transform + array_distinct
-#: over the corpus) is the single most re-evaluated stage in a full
-#: query-suite run — jaccard, containment, and their report queries
-#: each re-derived it from scratch pre-round-11. Keyed by
-#: (applicationId, df.semanticHash(), schema, inputFiles snapshot,
-#: id_col, text_col, k). The inputFiles snapshot (sorted source-file
-#: listing) is the DATA-version component: rewriting a parquet path
-#: produces fresh UUID part-file names, so a re-read of the same path
-#: misses the cache instead of returning stale grams (round-11 advice
-#: item). Residual contract — in-place mutation of the SAME file
-#: names within one application (or non-file sources, where
-#: inputFiles() is empty) is still assumed not to happen; callers
-#: that do that must call :func:`clear_stage_caches` first. The
-#: cached stages are ``localCheckpoint`` blocks: NON-recoverable
-#: after an executor loss — :func:`clear_stage_caches` also resets
-#: that state so the next call recomputes. FIFO-capped — evicted
-#: DataFrames are GC'd and the ContextCleaner releases their blocks.
-_GRAM_STAGE_CACHE: "OrderedDict[tuple, DataFrame]" = OrderedDict()
-_GRAM_STAGE_CACHE_MAX = 8
+#: the one session memo behind :func:`memo_stage`. FIFO cap, set by
+#: measurement: one sf0.01 registry pass creates 12 distinct keys (2
+#: co-purchase projections × edges/pairs, and one each of gram sets,
+#: shingle sets, minhash, simhash, cosine base, cosine candidates,
+#: component labels, IVF top-3), so a full pass never evicts an entry;
+#: the 4 spare slots hold stages a caller builds on its own tables.
+_STAGE_MEMO: "OrderedDict[tuple, DataFrame]" = OrderedDict()
+_STAGE_MEMO_MAX = 16
 
 
 def _data_version(df: DataFrame) -> int:
-    """Driver-side data-version fingerprint for stage-cache keys: a
+    """Driver-side data-version fingerprint for stage-memo keys: a
     hash of the sorted source-file listing behind ``df``. File-based
     rewrites (new part-file UUIDs) change it; non-file sources hash
     the empty listing (fall back to plan-only keying)."""
@@ -984,109 +939,92 @@ def _data_version(df: DataFrame) -> int:
     return hash(tuple(sorted(files)))
 
 
+def memo_stage(
+    tag: str,
+    sources: Sequence[DataFrame],
+    params: Sequence,
+    build: Callable[[], DataFrame],
+) -> DataFrame:
+    """Build a stage once per session and serve it from the memo after.
+
+    ``build()`` returns the stage's DataFrame. It is run on a miss and
+    materialized with ``localCheckpoint(eager=True)``, so constructing
+    the caller's (otherwise lazy) plan triggers an immediate job.
+
+    Caching contract — every memoized stage in the engine has this one:
+
+    - The key is ``(tag, applicationId, params)`` plus
+      ``(semanticHash, schema, data version)`` of EVERY DataFrame in
+      ``sources``, where the data version hashes the sorted source-file
+      listing. A stage must list every DataFrame its build reads.
+      Rewriting a parquet path produces fresh part-file names, so a
+      re-read of a rewritten source misses instead of serving stale
+      data.
+    - Mutating the SAME files in place within one application (or a
+      non-file source, whose listing is empty) is not detected: call
+      :func:`clear_stage_caches` first.
+    - localCheckpoint truncates lineage WITHOUT fault tolerance: after
+      an executor loss a later hit fails instead of recomputing, so
+      call :func:`clear_stage_caches`. At 100 TB, if recomputation on
+      loss matters, materialize the stage to a table (or use reliable
+      ``checkpoint()``) upstream and pass that in instead.
+    - One FIFO cap (:data:`_STAGE_MEMO_MAX`); evicted DataFrames are
+      GC'd and the ContextCleaner releases their blocks.
+    """
+    key = (
+        tag,
+        sources[0].sparkSession.sparkContext.applicationId,
+        tuple(params),
+        *((s.semanticHash(), str(s.schema), _data_version(s)) for s in sources),
+    )
+    hit = _STAGE_MEMO.get(key)
+    if hit is not None:
+        return hit
+    out = build().localCheckpoint(eager=True)
+    _STAGE_MEMO[key] = out
+    while len(_STAGE_MEMO) > _STAGE_MEMO_MAX:
+        _STAGE_MEMO.popitem(last=False)
+    return out
+
+
 def clear_stage_caches() -> None:
-    """Drop every session-memoized dedup/graph stage: the gram/shingle
-    ``localCheckpoint`` memo here, the near-dup component-label
-    cache in ``operators.llm_text``, and the co-purchase projection
-    memo in ``operators.graph``. Call this after mutating a
-    source table in place within one application, or after an
-    executor loss (the memoized localCheckpoint blocks are not
-    fault-tolerant — a later cache hit would fail on truncated
-    lineage instead of recomputing)."""
-    _GRAM_STAGE_CACHE.clear()
-    try:
-        from hadoop_deliver_spark.operators import llm_text
+    """Drop every stage in the :func:`memo_stage` memo (see its
+    caching contract for when to call this)."""
+    _STAGE_MEMO.clear()
 
-        for cached in llm_text._cc_cache.values():
-            try:
-                cached.unpersist()
-            except Exception:
-                pass
-        llm_text._cc_cache.clear()
-    except Exception:
-        pass
-    try:
-        from hadoop_deliver_spark.operators import graph as _graph_ops
 
-        _graph_ops._co_purchase_cache.clear()
-    except Exception:
-        pass
-    try:
-        from hadoop_deliver_spark.operators import llm_ivf as _ivf_ops
-
-        _ivf_ops._ivf_cache.clear()
-    except Exception:
-        pass
+def _spread(df: DataFrame) -> DataFrame:
+    """``df`` spread to the session's default parallelism when it
+    arrives narrower: a single small parquet file plans as ONE
+    partition, serializing a whole per-document map on one core (the
+    round-10 sf0.1 profile showed exactly that)."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(par) if df.rdd.getNumPartitions() < par else df
 
 
 def _staged_gram_sets(
     df: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
-    """The memoized raw gram stage: ``char_gram_sets`` over ``df``,
-    spread to the session's default parallelism when the source
-    arrives narrow (a single small parquet file plans as ONE
-    partition, serializing the whole gram map on one core — the
-    round-10 sf0.1 profile showed exactly that), then
-    ``localCheckpoint``-ed once per (application, corpus, k) and
-    shared by every caller in the session."""
-    spark = df.sparkSession
-    key = (
-        spark.sparkContext.applicationId,
-        df.semanticHash(),
-        str(df.schema),
-        _data_version(df),
-        id_col,
-        text_col,
-        k,
+    """The memoized raw gram stage: ``char_gram_sets`` over the
+    spread ``df``, shared by every caller in the session."""
+    return memo_stage(
+        "gram_sets",
+        [df],
+        (id_col, text_col, k),
+        lambda: char_gram_sets(_spread(df), id_col, text_col, k=k),
     )
-    hit = _GRAM_STAGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    par = spark.sparkContext.defaultParallelism
-    src = df
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
-    grams = char_gram_sets(src, id_col, text_col, k=k).localCheckpoint(
-        eager=True
-    )
-    _GRAM_STAGE_CACHE[key] = grams
-    while len(_GRAM_STAGE_CACHE) > _GRAM_STAGE_CACHE_MAX:
-        _GRAM_STAGE_CACHE.popitem(last=False)
-    return grams
 
 
 def _staged_shingle_sets(
     df: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
-    """The word-shingle twin of :func:`_staged_gram_sets`: memoized
-    ``shingle_sets`` checkpoint per (application, corpus, k), spread
-    to default parallelism when the source arrives narrow. Shares the
-    same FIFO-capped cache (keys carry a stage discriminator)."""
-    spark = df.sparkSession
-    key = (
-        "shingle",
-        spark.sparkContext.applicationId,
-        df.semanticHash(),
-        str(df.schema),
-        _data_version(df),
-        id_col,
-        text_col,
-        k,
+    """The word-shingle twin of :func:`_staged_gram_sets`."""
+    return memo_stage(
+        "shingle_sets",
+        [df],
+        (id_col, text_col, k),
+        lambda: shingle_sets(_spread(df), id_col, text_col, k=k),
     )
-    hit = _GRAM_STAGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    par = spark.sparkContext.defaultParallelism
-    src = df
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
-    sets = shingle_sets(src, id_col, text_col, k=k).localCheckpoint(
-        eager=True
-    )
-    _GRAM_STAGE_CACHE[key] = sets
-    while len(_GRAM_STAGE_CACHE) > _GRAM_STAGE_CACHE_MAX:
-        _GRAM_STAGE_CACHE.popitem(last=False)
-    return sets
 
 
 #: refine-path switch for :func:`jaccard_pairs` / :func:`containment_pairs`
@@ -1122,9 +1060,10 @@ def _bitmap_arrow_refine(
     share one arithmetic contract. Returns None when the gate fails:
     ids must be non-negative integrals whose RANGE (max_id+1) times
     ``n_chunks`` fits the word budget (a sparse id space past the
-    budget falls back to the join paths). Driver-side state: one
-    bounded collect of the gated bitmap table (≤ 32 MiB of longs) —
-    the same bytes the join path ships as a broadcast relation."""
+    budget falls back to the join paths). Driver-side state: a 1-row
+    id-range probe, then, only inside the gate, one bounded collect of
+    the bitmap table (≤ 32 MiB of longs) — the same bytes the join
+    path ships as a broadcast relation."""
     import numpy as np
     from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
@@ -1133,16 +1072,15 @@ def _bitmap_arrow_refine(
         (ByteType, ShortType, IntegerType, LongType),
     ):
         return None
+    # the id range is probed first: nothing is collected past the gate
+    lo, hi = bitmaps.agg(F.min(id_col), F.max(id_col)).first()
+    if lo is not None and (
+        lo < 0 or (hi + 1) * n_chunks > _BITMAP_REFINE_MAX_WORDS
+    ):
+        return None
+    nmax = 1 if hi is None else hi + 1
     cols = [id_col, "bm"] + ([n_col] if n_col else [])
     rows = bitmaps.select(*cols).collect()
-    if rows:
-        lo = min(r[id_col] for r in rows)
-        hi = max(r[id_col] for r in rows)
-        if lo < 0 or (hi + 1) * n_chunks > _BITMAP_REFINE_MAX_WORDS:
-            return None
-        nmax = hi + 1
-    else:
-        nmax = 1
     mat = np.zeros((nmax, n_chunks), dtype=np.uint64)
     for r in rows:
         mat[r[id_col]] = np.array(r["bm"], dtype=np.int64).view(np.uint64)
@@ -1245,16 +1183,8 @@ def jaccard_pairs(
     count). The candidate stages are identical under every refine and
     remain the sub-quadratic story.
 
-    Fault-tolerance note: the gram-set stage is
-    ``localCheckpoint``-ed (plan construction triggers an immediate
-    job; lineage is truncated WITHOUT fault tolerance — an executor
-    loss mid-query fails the query instead of recomputing). At
-    100 TB, if recomputation-on-loss matters, materialize the gram
-    stage to a table (or use reliable ``checkpoint()``) upstream.
-    The stage is memoized per (application, plan, source-file
-    listing); in-place same-file mutation within one application
-    needs :func:`clear_stage_caches` first (file REWRITES re-key
-    automatically via the part-file listing).
+    The gram-set stage is memoized; caching contract:
+    :func:`memo_stage`.
 
     >>> jaccard_pairs(docs, "pk", "body", threshold=0.6)
     """
@@ -1357,10 +1287,9 @@ def _jaccard_parts(
     candidate-volume plan guard (tests/test_properties.py) so the
     guard measures the REAL stage, not a replica. Returns
     (grams, inv, gdf, cands)."""
-    # session-memoized localCheckpoint (see _staged_gram_sets):
-    # referenced by the lazily returned plan (candidate stage +
-    # bitmap refine) and shared with the containment twin; blocks are
-    # released by the ContextCleaner on cache eviction
+    # memoized (see memo_stage): referenced by the lazily returned
+    # plan (candidate stage + bitmap refine) and shared with the
+    # containment twin
     grams = _staged_gram_sets(df, id_col, text_col, char_k)
     inv = grams.select(
         id_col, F.size("gs").alias("_jp_n"), F.explode("gs").alias("_jp_g")
@@ -1488,14 +1417,8 @@ def containment_pairs(
     quadratic hot keys into a bounded fan-out: every surviving
     posting list is ≤ P‰ of the corpus. Driver-side state: two or
     three scalar collects (max gram id, corpus count, and with the
-    cap the pre-cap doc count). Fault-tolerance note: the gram-set
-    stage is
-    ``localCheckpoint``-ed — same immediate-job / truncated-lineage
-    trade as :func:`jaccard_pairs`; materialize the gram stage
-    upstream if recomputation-on-loss matters. Same memo contract
-    too: keyed by (application, plan, source-file listing); call
-    :func:`clear_stage_caches` after in-place same-file mutation or
-    an executor loss.
+    cap the pre-cap doc count). The gram-set stage is memoized;
+    caching contract: :func:`memo_stage`.
 
     >>> containment_pairs(docs, "pk", "body", threshold=0.9)
     """
@@ -1625,15 +1548,13 @@ def _containment_parts(
     The cap is the published web-dedup fan-out bound: no surviving
     posting list exceeds P‰ of the corpus, so the prefix×posting
     candidate join has bounded per-key fan-out at any corpus size."""
-    # session-memoized localCheckpoint (see _staged_gram_sets) — same
-    # storage-lifecycle argument as jaccard_pairs/minhash_pairs, plus
-    # cross-query reuse: the raw gram stage is SHARED with the
-    # jaccard twin, so in a full suite run only the first of the two
-    # pays the corpus gram map. With the cap there is a SECOND
-    # checkpoint below, and it earns its keep (measured at sf0.1):
-    # the capped rebuild is consumed twice (df count + posting
-    # rebuild), and checkpointing turns both consumers into ~1 s
-    # scans.
+    # memoized (see memo_stage) for cross-query reuse: the raw gram
+    # stage is SHARED with the jaccard twin, so in a full suite run
+    # only the first of the two pays the corpus gram map. With the
+    # cap there is a SECOND checkpoint below, and it earns its keep
+    # (measured at sf0.1): the capped rebuild is consumed twice (df
+    # count + posting rebuild), and checkpointing turns both consumers
+    # into ~1 s scans.
     grams = _staged_gram_sets(df, id_col, text_col, char_k)
     par = df.sparkSession.sparkContext.defaultParallelism
     if max_df_permille is not None:
@@ -2087,30 +2008,13 @@ def _staged_simhash_parts(
     """Session-memoized :func:`_simhash_parts` (r12): the 64-bit-vote
     fingerprint build + band self-join re-runs identically for
     llm_dedup_simhash and llm_dedup_candidate_stats; the candidate
-    pair list (near-dup-sized) is ``localCheckpoint``-ed once per
-    (application, corpus, n_bands) under the gram-stage cache's
-    keying/eviction/staleness contract."""
-    spark = df.sparkSession
-    key = (
-        "shcands",
-        spark.sparkContext.applicationId,
-        df.semanticHash(),
-        str(df.schema),
-        _data_version(df),
-        id_col,
-        text_col,
-        n_bands,
+    pair list (near-dup-sized) goes through :func:`memo_stage`."""
+    return memo_stage(
+        "simhash_cands",
+        [df],
+        (id_col, text_col, n_bands),
+        lambda: _simhash_parts(df, id_col, text_col, n_bands),
     )
-    hit = _GRAM_STAGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    cands = _simhash_parts(df, id_col, text_col, n_bands).localCheckpoint(
-        eager=True
-    )
-    _GRAM_STAGE_CACHE[key] = cands
-    while len(_GRAM_STAGE_CACHE) > _GRAM_STAGE_CACHE_MAX:
-        _GRAM_STAGE_CACHE.popitem(last=False)
-    return cands
 
 
 def _simhash_parts(
@@ -2260,30 +2164,36 @@ def _staged_cosine_parts(
     grid + Bessel candidate join re-run identically for
     llm_dedup_embedding / llm_semdedup-style consumers and
     llm_dedup_candidate_stats; the surviving candidate id pairs
-    (near-dup-sized) are ``localCheckpoint``-ed once per
-    (application, embedding plan, tau, k) under the gram-stage
-    cache's keying/eviction/staleness contract."""
-    spark = df.sparkSession
-    key = (
-        "coscands",
-        spark.sparkContext.applicationId,
-        df.semanticHash(),
-        str(df.schema),
-        _data_version(df),
-        id_col,
-        vec_col,
-        tau,
-        k,
+    (near-dup-sized) go through :func:`memo_stage`."""
+    base = _cosine_base(df, id_col, vec_col)
+    cands = memo_stage(
+        "cosine_cands",
+        [df],
+        (id_col, vec_col, tau, k),
+        lambda: _cosine_parts(df, id_col, vec_col, tau, k)[1],
     )
-    hit = _GRAM_STAGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    base, cands = _cosine_parts(df, id_col, vec_col, tau, k)
-    cands = cands.localCheckpoint(eager=True)
-    _GRAM_STAGE_CACHE[key] = (base, cands)
-    while len(_GRAM_STAGE_CACHE) > _GRAM_STAGE_CACHE_MAX:
-        _GRAM_STAGE_CACHE.popitem(last=False)
     return base, cands
+
+
+def _cosine_base(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(_cp_id, _cp_e, nrm), memoized: referenced by the moment pass,
+    the candidate grid AND the verify join-back. Hash-repartitioned by
+    id BEFORE the checkpoint: the grid cell key has few distinct values
+    on isotropic data (the whole corpus can land in a handful of
+    cells), so downstream parallelism must come from the base
+    partitioning, not the join key — one cheap shuffle of the narrow
+    (id, vec) table spreads the moment pass, the cell-join probe side
+    and both verify joins across the cluster."""
+    return memo_stage(
+        "cosine_base",
+        [df],
+        (id_col, vec_col),
+        lambda: df.select(
+            F.col(id_col).alias("_cp_id"), F.col(vec_col).alias("_cp_e")
+        )
+        .repartition("_cp_id")
+        .withColumn("nrm", vec_norm("_cp_e")),
+    )
 
 
 def _cosine_parts(
@@ -2303,24 +2213,7 @@ def _cosine_parts(
     # than the exact inequality, so rounding in the projections can
     # only add candidates (killed by the exact refine), never drop one
     delta2 = (delta * delta) * (1.0 + 1e-9) + 1e-12
-    # localCheckpoint, not cache(): referenced by the moment pass, the
-    # candidate grid AND the verify join-back; checkpoint blocks are
-    # released by the ContextCleaner on GC instead of pinning executor
-    # storage for the session. Trade-off (documented in cosine_pairs):
-    # lineage is truncated, so losing an executor mid-query fails the
-    # query instead of recomputing the normalize step.
-    # hash-repartition by id BEFORE the checkpoint: the grid cell key
-    # has few distinct values on isotropic data (the whole corpus can
-    # land in a handful of cells), so downstream parallelism must come
-    # from the base partitioning, not the join key — one cheap shuffle
-    # of the narrow (id, vec) table spreads the moment pass, the
-    # cell-join probe side and both verify joins across the cluster
-    base = (
-        df.select(F.col(id_col).alias("_cp_id"), F.col(vec_col).alias("_cp_e"))
-        .repartition("_cp_id")
-        .withColumn("nrm", vec_norm("_cp_e"))
-        .localCheckpoint(eager=True)
-    )
+    base = _cosine_base(df, id_col, vec_col)
     U = _principal_directions(base, k)
     if U is None:
         U = [[1.0]]  # empty input: any direction works on zero rows
@@ -2422,10 +2315,8 @@ def cosine_pairs(
 
     Driver-side state: one bounded collect of the d² reduced moment
     entries (NOT data rows — see :func:`_principal_directions`).
-    Fault-tolerance note: the normalized base is localCheckpoint-ed
-    (lineage truncated, storage GC-managed); an executor loss mid-query
-    fails the query rather than recomputing — at 100 TB prefer an
-    upstream materialized normalize step if recomputation matters.
+    The normalized base and the candidate stage are memoized; caching
+    contract: :func:`memo_stage`.
 
     >>> cosine_pairs(emb, "vec_id", "embedding_f64", tau=0.9)
     """

@@ -44,19 +44,13 @@ _SCALE = 1_000_000_000
 # common_neighbors / adamic_adar on the full projection, and the five
 # Brand#23-scoped ops (clustering_global/local, rich_club, kcore_peel,
 # jaccard_linkpred, bfs_layers). Pre-r12 each rebuilt the edge list
-# AND re-paid the O(sum deg(c)^2) pair fan-out from scratch. This memo
-# (the api._GRAM_STAGE_CACHE precedent: keyed by application + source
-# file listing, FIFO-capped, localCheckpoint blocks released on
-# eviction) computes each projection once per session:
-#   edges — deduped (c, p) bipartite memberships, checkpointed
+# AND re-paid the O(sum deg(c)^2) pair fan-out from scratch. Both
+# stages go through api.memo_stage (caching contract there):
+#   edges — deduped (c, p) bipartite memberships
 #   pairs — (u, v, n_common, w_sum) via api.pair_cooccurrence_stats:
 #           one pair fan-out serves the distinct-pair consumers
 #           (select u, v), the common-neighbor counters (n_common)
 #           and Adamic-Adar (w_sum of round(1e12/ln deg(c))) alike.
-# Same within-application immutability contract as the gram memo;
-# api.clear_stage_caches() drops this cache too.
-_co_purchase_cache: "dict[tuple, tuple[DataFrame, DataFrame]]" = {}
-_CO_PURCHASE_CACHE_MAX = 4
 
 
 def co_purchase_graph(
@@ -72,57 +66,54 @@ def co_purchase_graph(
 
     o = tbl(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     li = tbl(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    key = (
-        spark.sparkContext.applicationId,
-        brand,
-        api._data_version(o),
-        api._data_version(li),
-    )
-    hit = _co_purchase_cache.get(key)
-    if hit is not None:
-        return hit
+    sources = [o, li]
     if brand is not None:
         pt = (
             tbl(spark, sf_dir, "part")
             .filter(F.col("p_brand") == brand)
             .select("p_partkey")
         )
+        sources.append(pt)
         li = li.join(
             F.broadcast(pt), li["l_partkey"] == pt["p_partkey"]
         ).select("l_orderkey", "l_partkey")
-    edges = (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"])
+    edges = api.memo_stage(
+        "co_purchase_edges",
+        sources,
+        (),
+        lambda: o.join(li, o["o_orderkey"] == li["l_orderkey"])
         .select(F.col("o_custkey").alias("c"), F.col("l_partkey").alias("p"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
     )
+    return edges, api.memo_stage(
+        "co_purchase_pairs", sources, (), lambda: _co_purchase_pairs(edges, brand)
+    )
+
+
+def _co_purchase_pairs(edges: DataFrame, brand: str | None) -> DataFrame:
+    from hadoop_deliver_spark import api
+
     if brand is not None:
         # the Brand#23 consumers use the distinct pair list only —
         # no Adamic-Adar weight needed
-        stats = api.pair_cooccurrence_stats(
+        return api.pair_cooccurrence_stats(
             edges, "c", "p", dedup=False, materialize=False
         )
-    else:
-        cdeg = (
-            edges.groupBy("c")
-            .agg(F.count(F.lit(1)).cast("long").alias("d"))
-            .filter(F.col("d") >= 2)
-            .select(
-                "c",
-                F.round(F.lit(1e12) / F.log(F.col("d").cast("double")))
-                .cast("long")
-                .alias("w"),
-            )
+    cdeg = (
+        edges.groupBy("c")
+        .agg(F.count(F.lit(1)).cast("long").alias("d"))
+        .filter(F.col("d") >= 2)
+        .select(
+            "c",
+            F.round(F.lit(1e12) / F.log(F.col("d").cast("double")))
+            .cast("long")
+            .alias("w"),
         )
-        du = edges.join(F.broadcast(cdeg), "c")
-        stats = api.pair_cooccurrence_stats(
-            du, "c", "p", "w", dedup=False, materialize=False
-        )
-    pairs = stats.localCheckpoint(eager=True)
-    _co_purchase_cache[key] = (edges, pairs)
-    while len(_co_purchase_cache) > _CO_PURCHASE_CACHE_MAX:
-        _co_purchase_cache.pop(next(iter(_co_purchase_cache)))
-    return edges, pairs
+    )
+    du = edges.join(F.broadcast(cdeg), "c")
+    return api.pair_cooccurrence_stats(
+        du, "c", "p", "w", dedup=False, materialize=False
+    )
 
 _ITERS = 6
 

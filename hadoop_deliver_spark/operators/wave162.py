@@ -31,7 +31,9 @@ from hadoop_deliver_spark.operators.wave69 import (
 from hadoop_deliver_spark.registry import register
 from hadoop_deliver_spark.tables import tbl
 
-
+#: driver-path gate of ts_passing_bablok: most joined daily rows
+#: collected for the NumPy pairwise-slope selection
+_PB_DRIVER_MAX_DAYS = 4096
 
 
 def _pb_slope_distributed(spark: SparkSession, d: DataFrame) -> DataFrame:
@@ -227,10 +229,11 @@ def ts_passing_bablok(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ascending sort, signed-geometric-mean even-case), and feed the
     # 1-row slope frame to the unchanged intercept stage. The
     # distributed pair join below stays as the past-gate fallback and
-    # the formulation of record.
-    _drows = d.collect()
+    # the formulation of record. The series size is probed first:
+    # nothing is collected past the gate.
     b = None
-    if 0 < len(_drows) <= 4096:
+    if 0 < d.count() <= _PB_DRIVER_MAX_DAYS:
+        _drows = d.collect()
         import math
 
         import numpy as np

@@ -33,6 +33,9 @@ from hadoop_deliver_spark.tables import dec2, tbl
 _CHI2_4_95 = "9.487729"
 _KUIPER_SQ_1E6 = 3052009
 _Z95_SQ = "2.705543"
+#: driver-path gate of agg_hl_shift_2sample: most daily rows (both
+#: samples together) collected for the NumPy pair ranking
+_HL_DRIVER_MAX_DAYS = 8192
 
 _DAILY_2SAMPLE_SQL = """
     daily AS (
@@ -132,11 +135,14 @@ def agg_hl_shift_2sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the two series once, rank the differences in NumPy, return the
     # same exact-integer order statistics. The distributed pair join
     # below stays as the past-gate fallback and the formulation of
-    # record.
-    _rows = daily.select("smp", "cents").collect()
-    _ca = [r["cents"] for r in _rows if r["smp"] == 1]
-    _cb = [r["cents"] for r in _rows if r["smp"] == 2]
-    if _ca and _cb and len(_ca) + len(_cb) <= 8192:
+    # record. The series size is probed first: nothing is collected
+    # past the gate.
+    _ca = _cb = None
+    if daily.count() <= _HL_DRIVER_MAX_DAYS:
+        _rows = daily.select("smp", "cents").collect()
+        _ca = [r["cents"] for r in _rows if r["smp"] == 1]
+        _cb = [r["cents"] for r in _rows if r["smp"] == 2]
+    if _ca and _cb:
         import numpy as np
 
         _d = (

@@ -154,7 +154,11 @@ def agg_raking_ipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (row pass: x·(n/5)/rowsum off the pre-pass snapshot, left-fold
     # rowsums; column pass: x·tg/colsum; gap: left-fold rowsums,
     # max-fold of |rowsum − n/5|) — bit-identical doubles; the
-    # round/stack/compare stays in Spark SQL unchanged.
+    # round/stack/compare stays in Spark SQL unchanged. A zero margin
+    # (a priority or status with no orders) divides by zero: NaN/inf
+    # here where SQL yields NULL, which propagates through the same
+    # arithmetic. So non-finite cells map to NULL, and the gap fold
+    # skips NaN (np.fmax) the way GREATEST skips NULL.
     import numpy as np
 
     _r0 = it.collect()[0]
@@ -195,12 +199,16 @@ def agg_raking_ipf(spark: SparkSession, sf_dir: str) -> DataFrame:
                     _x[(i, c)] if rowsum is None else rowsum + _x[(i, c)]
                 )
             g = np.abs(rowsum - _n / 5)
-            _gap = g if _gap is None else np.maximum(_gap, g)
+            _gap = g if _gap is None else np.fmax(_gap, g)
+
+    def _sql(v):
+        return float(v) if np.isfinite(v) else None
+
     it = spark.createDataFrame(
         [
-            tuple(float(_x[(i, c)]) for i in _ROWS for c in _COLS)
+            tuple(_sql(_x[(i, c)]) for i in _ROWS for c in _COLS)
             + tuple(float(_tg[c]) for c in _COLS)
-            + (float(_n), float(_gap))
+            + (float(_n), _sql(_gap))
         ],
         ", ".join(
             [f"x{i}{c} double" for i in _ROWS for c in _COLS]

@@ -633,4 +633,25 @@ def test_gram_cache_rekeys_on_file_rewrite(spark, tmp_path):
 
     # the explicit invalidation helper runs clean and empties the memo
     api.clear_stage_caches()
-    assert not api._GRAM_STAGE_CACHE
+    assert not api._STAGE_MEMO
+
+
+def test_memo_stage_keys_on_params_and_sources(spark):
+    """One build per (tag, params, sources): a repeat call is a hit
+    returning the same materialized stage; a new param or a different
+    source plan is a miss."""
+    from hadoop_deliver_spark import api
+
+    src = spark.range(5)
+    calls = []
+
+    def build():
+        calls.append(1)
+        return src.selectExpr("id * 2 AS v")
+
+    got = api.memo_stage("t", [src], (1,), build)
+    assert api.memo_stage("t", [src], (1,), build) is got
+    api.memo_stage("t", [src], (2,), build)
+    api.memo_stage("t", [spark.range(6)], (1,), build)
+    assert len(calls) == 3
+    assert sorted(r.v for r in got.collect()) == [0, 2, 4, 6, 8]

@@ -7,6 +7,7 @@ from __future__ import annotations
 import re
 
 import pandas as pd
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -1898,6 +1899,36 @@ def test_no_unjustified_driver_collects():
     assert not gone, f"stale allowlist entries (update _COLLECT_OK): {sorted(gone)}"
 
 
+def test_one_stage_memo():
+    """Static guard: every memoized stage goes through api.memo_stage,
+    whose key always covers the data version of every source. A
+    module-level cache or memo anywhere else in the engine package
+    brings back a private key policy (the stale-key defect class) and
+    fails here by name."""
+    import ast
+    import pathlib
+
+    import hadoop_deliver_spark
+
+    pkg = pathlib.Path(hadoop_deliver_spark.__file__).parent
+    pat = re.compile(r"(?i)_.*(cache|memo)")
+    found = set()
+    for py in pkg.rglob("*.py"):
+        for node in ast.parse(py.read_text()).body:
+            if isinstance(node, ast.Assign):
+                targets = node.targets
+            elif isinstance(node, ast.AnnAssign):
+                targets = [node.target]
+            else:
+                continue
+            found |= {
+                (py.name, t.id)
+                for t in targets
+                if isinstance(t, ast.Name) and pat.search(t.id)
+            }
+    assert found == {("api.py", "_STAGE_MEMO"), ("api.py", "_STAGE_MEMO_MAX")}
+
+
 def test_candidate_volume_bounds(spark, sf_dir):
     """Dynamic scale guard #5: the three standing plan sweeps catch
     NLJ/window/collect regressions but not a QUADRATIC CANDIDATE
@@ -2392,3 +2423,186 @@ def test_pair_cooccurrence_stats_first_principles(spark):
             du.select("blk", "nid"), "blk", "nid"
         ).collect()
         assert {(r["u"], r["v"]): r["n_common"] for r in got2} == want_n
+
+
+# ---------------------------------------------------------------------------
+# stage memo under source rewrites
+# ---------------------------------------------------------------------------
+
+# one consumer per memoized stage family, by the source table it reads:
+# branded and unbranded co-purchase (orders, lineitem, part), component
+# labels and gram sets (documents), IVF top-3 (embeddings). The branded
+# consumer is graph_clustering_local: graph_jaccard_linkpred is empty at
+# sf0.001, so a stale projection could not show in its result.
+_MEMO_CONSUMERS = {
+    "orders": ("graph_clustering_local", "graph_adamic_adar"),
+    "lineitem": ("graph_clustering_local", "graph_adamic_adar"),
+    "part": ("graph_clustering_local",),
+    "documents": ("llm_dedup_clusters", "llm_dedup_ngram_jaccard"),
+    "embeddings": ("llm_sim_ivf_recall",),
+}
+
+
+def _write_table(sf, name, table):
+    """Replace table ``name`` under ``sf`` with ONE new part file: same
+    table path, fresh part-file name, the way a delivery job rewrites
+    a source."""
+    import os
+    import shutil
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    tdir = os.path.join(sf, f"{name}.parquet")
+    shutil.rmtree(tdir, ignore_errors=True)
+    os.makedirs(tdir)
+    pq.write_table(table, os.path.join(tdir, f"part-{uuid.uuid4().hex}.parquet"))
+
+
+@pytest.mark.parametrize("table", sorted(_MEMO_CONSUMERS))
+def test_memo_misses_after_source_rewrite(spark, sf_dir, tmp_path, table):
+    """A memoized stage must never serve stale data after a source
+    rewrite. Run the memo consumers that read ``table`` on a copy of
+    the fixtures, rewrite ``table`` in place as a seeded row subset,
+    and rerun: the memo must miss (grow), and every result must match
+    the DuckDB oracle over the rewritten files (rows-only queries: a
+    rerun from an empty memo)."""
+    import duckdb
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hadoop_deliver_spark import api
+    from hadoop_deliver_spark.registry import load_all
+    from hadoop_deliver_spark.tables import TABLES
+    from tests.parity import assert_frames_match
+
+    R = load_all()
+    sf = str(tmp_path)
+    for t in TABLES:
+        _write_table(sf, t, pq.read_table(f"{sf_dir}/{t}.parquet"))
+    consumers = _MEMO_CONSUMERS[table]
+    api.clear_stage_caches()
+    for name in consumers:
+        R[name].fn(spark, sf).collect()
+    before = len(api._STAGE_MEMO)
+
+    base = pq.read_table(f"{sf_dir}/{table}.parquet")
+    keep = np.random.default_rng(7).random(base.num_rows) < 0.8
+    _write_table(sf, table, base.filter(pa.array(keep)))
+    got = {name: R[name].fn(spark, sf).toPandas() for name in consumers}
+    assert len(api._STAGE_MEMO) > before, f"no memo miss after rewriting {table}"
+
+    duck = duckdb.connect()
+    for t in TABLES:
+        duck.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM "
+            f"read_parquet('{sf}/{t}.parquet/*.parquet')"
+        )
+    api.clear_stage_caches()
+    for name, pdf in got.items():
+        q = R[name]
+        want = (
+            duck.execute(q.oracle).df()
+            if q.oracle is not None
+            else q.fn(spark, sf).toPandas()
+        )
+        assert_frames_match(pdf, want, name)
+    duck.close()
+
+
+# ---------------------------------------------------------------------------
+# driver-path gates: probe first, collect only inside the gate; the
+# past-gate path must equal the driver path
+# ---------------------------------------------------------------------------
+
+
+def _collect_sizes(monkeypatch, df):
+    """Spy on every driver collect (first/take/head go through it):
+    returns the list the row count of each collect is appended to."""
+    sizes = []
+    cls = type(df)
+    orig = cls.collect
+
+    def spy(self):
+        rows = orig(self)
+        sizes.append(len(rows))
+        return rows
+
+    monkeypatch.setattr(cls, "collect", spy)
+    return sizes
+
+
+def test_hl_shift_past_gate_matches_driver_path(spark, sf_dir, monkeypatch):
+    from hadoop_deliver_spark.operators import wave65
+    from tests.parity import assert_frames_match
+
+    want = wave65.agg_hl_shift_2sample(spark, sf_dir).toPandas()
+    n_days = wave65._daily_2sample(spark, sf_dir).count()
+    monkeypatch.setattr(wave65, "_HL_DRIVER_MAX_DAYS", n_days - 1)
+    with monkeypatch.context() as m:
+        sizes = _collect_sizes(m, tbl(spark, sf_dir, "orders"))
+        df = wave65.agg_hl_shift_2sample(spark, sf_dir)
+    assert max(sizes, default=0) < n_days, "daily series collected past gate"
+    assert_frames_match(df.toPandas(), want, "agg_hl_shift_2sample")
+
+
+def test_passing_bablok_past_gate_matches_driver_path(
+    spark, sf_dir, monkeypatch
+):
+    from hadoop_deliver_spark.operators import wave162
+    from tests.parity import assert_frames_match
+
+    want = wave162.ts_passing_bablok(spark, sf_dir).toPandas()
+    n_days = int(want["n_days"][0])
+    monkeypatch.setattr(wave162, "_PB_DRIVER_MAX_DAYS", n_days - 1)
+    with monkeypatch.context() as m:
+        sizes = _collect_sizes(m, tbl(spark, sf_dir, "orders"))
+        df = wave162.ts_passing_bablok(spark, sf_dir)
+    assert max(sizes, default=0) < n_days, "daily series collected past gate"
+    assert_frames_match(df.toPandas(), want, "ts_passing_bablok")
+
+
+def test_arrow_refine_past_gate_matches_driver_path(
+    spark, sf_dir, monkeypatch
+):
+    """An explicit refine="arrow" past the word budget must fall back
+    to the bitmap join path WITHOUT collecting the bitmap table: every
+    collect made while planning is a 1-row probe."""
+    from hadoop_deliver_spark import api
+
+    docs = tbl(spark, sf_dir, "documents").select("doc_id", "text")
+    want = api.jaccard_pairs(docs, "doc_id", "text", refine="arrow").collect()
+    assert want
+    monkeypatch.setattr(api, "_BITMAP_REFINE_MAX_WORDS", 1)
+    with monkeypatch.context() as m:
+        sizes = _collect_sizes(m, docs)
+        df = api.jaccard_pairs(docs, "doc_id", "text", refine="arrow")
+    assert max(sizes, default=0) <= 1, "bitmap table collected past gate"
+    assert sorted(df.collect()) == sorted(want)
+
+
+def test_raking_ipf_zero_priority_matches_oracle(spark, sf_dir, tmp_path):
+    """Degenerate input: a priority with no orders makes a zero row
+    margin. SQL yields NULL for the 0/0 sweeps; the driver-side NumPy
+    sweeps must report NULL too, not NaN/inf."""
+    import duckdb
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from hadoop_deliver_spark.registry import load_all
+    from tests.parity import assert_frames_match
+
+    o = pq.read_table(f"{sf_dir}/orders.parquet")
+    o = o.filter(pc.invert(pc.starts_with(o["o_orderpriority"], "3")))
+    _write_table(str(tmp_path), "orders", o)
+    q = load_all()["agg_raking_ipf"]
+    df = q.fn(spark, str(tmp_path))
+    assert all(r["fitted"] is None for r in df.collect())
+    duck = duckdb.connect()
+    duck.execute(
+        "CREATE VIEW orders AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/orders.parquet/*.parquet')"
+    )
+    assert_frames_match(df.toPandas(), duck.execute(q.oracle).df(), q.name)
+    duck.close()
