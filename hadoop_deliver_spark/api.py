@@ -31,6 +31,7 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
 __all__ = [
     "dot",
@@ -1027,13 +1028,15 @@ def _staged_shingle_sets(
     )
 
 
-#: refine-path switch for :func:`jaccard_pairs` / :func:`containment_pairs`
-#: ("auto" mode): the dense bitmap table is |corpus| × ⌈|vocab|/64⌉
-#: longs and is BROADCAST — safe only while that product stays small.
-#: 2²² longs = 32 MiB; past it, auto switches to shuffle joins +
-#: array intersection (no broadcast, no dense bitmaps — the
-#: web-scale path).
-_BITMAP_REFINE_MAX_WORDS = 1 << 22
+#: the one broadcast budget, in 64-bit words: every table the engine
+#: ships whole to each task (the near-dup bitmap matrix of
+#: :func:`_exact_overlap`, the successor bitmaps of
+#: :func:`triangle_count`, the block and neighbor bitmaps of the
+#: co-membership core) must fit 2²² longs = 32 MiB. Past it each core
+#: runs its join formulation, which broadcasts nothing O(corpus).
+_BROADCAST_MAX_WORDS = 1 << 22
+
+_INTEGRAL = (ByteType, ShortType, IntegerType, LongType)
 
 
 def _bitmap_arrow_refine(
@@ -1043,81 +1046,60 @@ def _bitmap_arrow_refine(
     a_col: str,
     b_col: str,
     n_chunks: int,
-    n_col: str | None = None,
-) -> DataFrame | None:
+) -> DataFrame:
     """Arrow-vectorized exact-intersection refine (r12, guide §4.2):
-    the dense :func:`bitmap_sets` table is collected once (bounded by
-    the same :data:`_BITMAP_REFINE_MAX_WORDS` gate that already
-    authorizes broadcasting it), shipped to the Python workers as a
-    NumPy uint64 matrix, and each candidate batch is scored with ONE
-    vectorized ``&`` + SWAR popcount per 64-bit word — replacing the
-    per-row zip_with/aggregate fold, which Spark evaluates
-    interpreted (no codegen for HOF lambdas; measured at sf0.1 the
-    fold was ~5× the cost of the batch path on 5.4M candidates).
-    Returns (a_col, b_col, _ni, _na, _nb) with the EXACT intersection
-    and set sizes — thresholds stay in Spark SQL at the caller, in
-    the same expression form as the other refine paths, so all paths
-    share one arithmetic contract. Returns None when the gate fails:
-    ids must be non-negative integrals whose RANGE (max_id+1) times
-    ``n_chunks`` fits the word budget (a sparse id space past the
-    budget falls back to the join paths). Driver-side state: a 1-row
-    id-range probe, then, only inside the gate, one bounded collect of
-    the bitmap table (≤ 32 MiB of longs) — the same bytes the join
-    path ships as a broadcast relation."""
+    the dense :func:`bitmap_sets` table is collected once (the
+    caller's :data:`_BROADCAST_MAX_WORDS` gate bounds it), stored
+    sorted by id and shipped to the Python workers as a NumPy uint64
+    matrix. Each candidate batch maps its ids to matrix rows with
+    ``np.searchsorted`` and is scored with ONE vectorized ``&`` +
+    SWAR popcount per 64-bit word — replacing the per-row
+    zip_with/aggregate fold, which Spark evaluates interpreted (no
+    codegen for HOF lambdas; measured at sf0.1 the fold was ~5× the
+    cost of the batch path on 5.4M candidates). Rows are looked up,
+    not addressed by id, so sparse, huge and negative integral ids
+    all work; every non-NULL candidate id must have a bitmap row. Returns
+    (a_col, b_col, _ni, _na, _nb) with the EXACT intersection and set
+    sizes (|set| == popcount(bm) by :func:`bitmap_sets`
+    construction)."""
     import numpy as np
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
-    if not isinstance(
-        bitmaps.schema[id_col].dataType,
-        (ByteType, ShortType, IntegerType, LongType),
-    ):
-        return None
-    # the id range is probed first: nothing is collected past the gate
-    lo, hi = bitmaps.agg(F.min(id_col), F.max(id_col)).first()
-    if lo is not None and (
-        lo < 0 or (hi + 1) * n_chunks > _BITMAP_REFINE_MAX_WORDS
-    ):
-        return None
-    nmax = 1 if hi is None else hi + 1
-    cols = [id_col, "bm"] + ([n_col] if n_col else [])
-    rows = bitmaps.select(*cols).collect()
-    mat = np.zeros((nmax, n_chunks), dtype=np.uint64)
-    for r in rows:
-        mat[r[id_col]] = np.array(r["bm"], dtype=np.int64).view(np.uint64)
-    if n_col:
-        sizes = np.zeros(nmax, dtype=np.int64)
-        for r in rows:
-            sizes[r[id_col]] = r[n_col]
     m5 = np.uint64(0x5555555555555555)
     m3 = np.uint64(0x3333333333333333)
     mf = np.uint64(0x0F0F0F0F0F0F0F0F)
     mm = np.uint64(0x0101010101010101)
     s1, s2, s4, s56 = (np.uint64(s) for s in (1, 2, 4, 56))
-    if not n_col:
-        # |set| == popcount(bm) by bitmap_sets construction
-        x = mat - ((mat >> s1) & m5)
+
+    def popcount(x):  # per row, over the uint64 words
+        x = x - ((x >> s1) & m5)
         x = (x & m3) + ((x >> s2) & m3)
         x = (x + (x >> s4)) & mf
-        sizes = ((x * mm) >> s56).sum(axis=1).astype(np.int64)
-    bc = cands.sparkSession.sparkContext.broadcast((mat, sizes))
+        return ((x * mm) >> s56).sum(axis=1).astype(np.int64)
+
+    # NULL ids drop out (here and from each batch), as they do from
+    # the shuffle path's equi-joins
+    rows = sorted(bitmaps.select(id_col, "bm").dropna().collect())
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    mat = (
+        np.array([r[1] for r in rows], dtype=np.int64)
+        .reshape(len(rows), n_chunks)
+        .view(np.uint64)
+    )
+    bc = cands.sparkSession.sparkContext.broadcast((ids, mat, popcount(mat)))
 
     def _refine(batches):
         import pyarrow as pa
 
-        m, nl = bc.value
+        ids, m, nl = bc.value
         for batch in batches:
-            ia = batch.column(a_col).to_numpy().astype(np.int64)
-            ib = batch.column(b_col).to_numpy().astype(np.int64)
-            x = m[ia] & m[ib]
-            x = x - ((x >> s1) & m5)
-            x = (x & m3) + ((x >> s2) & m3)
-            x = (x + (x >> s4)) & mf
-            ni = ((x * mm) >> s56).sum(axis=1).astype(np.int64)
+            batch = batch.drop_null()
+            ia = np.searchsorted(ids, batch.column(a_col).to_numpy())
+            ib = np.searchsorted(ids, batch.column(b_col).to_numpy())
             yield pa.RecordBatch.from_arrays(
                 [
                     batch.column(a_col),
                     batch.column(b_col),
-                    pa.array(ni),
+                    pa.array(popcount(m[ia] & m[ib])),
                     pa.array(nl[ia]),
                     pa.array(nl[ib]),
                 ],
@@ -1132,6 +1114,60 @@ def _bitmap_arrow_refine(
     )
 
 
+def _exact_overlap(
+    grams: DataFrame,
+    inv: DataFrame,
+    gdf: DataFrame,
+    cands: DataFrame,
+    id_col: str,
+    g_col: str,
+    a_col: str,
+    b_col: str,
+) -> DataFrame:
+    """The one exact verify step behind :func:`jaccard_pairs` and
+    :func:`containment_pairs`: (a_col, b_col, _ni, _na, _nb) per
+    candidate pair — the exact gram-set intersection size and the two
+    set sizes; each twin applies only its own threshold. Takes a
+    ``_*_parts`` tuple: the (id_col, gs) set table, its posting rows
+    (gram column ``g_col``), the gram vocabulary and the candidates.
+
+    One gate, two paths. With integral ids and
+    |corpus| × ⌈|vocab|/64⌉ within :data:`_BROADCAST_MAX_WORDS`, the
+    dictionary-encoded bitmap table (:func:`bitmap_sets`) is scored
+    by :func:`_bitmap_arrow_refine`. Otherwise (past the budget, or
+    non-integral ids) the candidates shuffle-join the gram-set table
+    on each side and intersect the two gram ARRAYS
+    (``array_intersect``): no dense bitmaps, no broadcast, nothing
+    driver- or executor-resident scales with the corpus — the path
+    that works at any scale. Driver-side state inside the gate: two
+    scalar probes (max gram id, corpus count), then the bounded
+    bitmap collect."""
+    if isinstance(grams.schema[id_col].dataType, _INTEGRAL):
+        gid = encode_ids(gdf, g_col, out="_xo_gid")
+        max_gid = gid.agg(F.max("_xo_gid")).first()[0]
+        n_chunks = ((max_gid if max_gid is not None else 0) + 64) // 64
+        if grams.count() * n_chunks <= _BROADCAST_MAX_WORDS:
+            bitmaps = bitmap_sets(
+                inv.join(F.broadcast(gid), g_col), id_col, "_xo_gid", n_chunks
+            )
+            return _bitmap_arrow_refine(
+                cands, bitmaps, id_col, a_col, b_col, n_chunks
+            )
+    ga = grams.select(F.col(id_col).alias(a_col), F.col("gs").alias("_xo_a"))
+    gb = grams.select(F.col(id_col).alias(b_col), F.col("gs").alias("_xo_b"))
+    return (
+        cands.join(ga, a_col)
+        .join(gb, b_col)
+        .select(
+            a_col,
+            b_col,
+            F.size(F.array_intersect("_xo_a", "_xo_b")).alias("_ni"),
+            F.size("_xo_a").alias("_na"),
+            F.size("_xo_b").alias("_nb"),
+        )
+    )
+
+
 def jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -1139,7 +1175,6 @@ def jaccard_pairs(
     *,
     threshold: float = 0.55,
     char_k: int = 5,
-    refine: str = "auto",
 ) -> DataFrame:
     """EXACT character-k-gram Jaccard near-dup pairs
     (id_a, id_b, jaccard float) with J ≥ threshold — the
@@ -1161,27 +1196,14 @@ def jaccard_pairs(
     shared gram (in the global order) of a truly-similar pair sits
     at rank ≤ |x|−α+1 in both sets (α = required overlap), where the
     bound passes; the compare uses the SAME division form as the
-    refine, so it is exactly as permissive — not an ulp tighter. The
-    exact refine has TWO interchangeable physical paths (both exact;
-    ``refine=`` picks "bitmap" / "shuffle" / "auto"):
+    refine, so it is exactly as permissive — not an ulp tighter.
 
-    - **bitmap** — dictionary-encoded dense bitmaps
-      (:func:`bitmap_sets`, Σ bit_count(a&b) per pair, codegen'd),
-      broadcast to every candidate partition. The bitmap table is
-      |corpus| × ⌈|vocab|/64⌉ longs: unbeatable while that fits an
-      executor (small vocab / modest corpus), fatal past it.
-    - **shuffle** — the web-scale path: candidates shuffle-join the
-      gram-set table on each side and intersect the two gram ARRAYS
-      directly (``array_intersect`` — hash set intersection, no dense
-      bitmaps, no broadcast, nothing driver- or executor-resident
-      scales with the corpus).
-
-    "auto" measures |corpus| × ⌈|vocab|/64⌉ against
-    :data:`_BITMAP_REFINE_MAX_WORDS` (32 MiB of longs) and picks;
-    both paths are pinned exact by the parametrized property fuzz.
-    Driver-side state: two scalar collects (max gram id, corpus
-    count). The candidate stages are identical under every refine and
-    remain the sub-quadratic story.
+    The candidates are verified by :func:`_exact_overlap` (one gate
+    on :data:`_BROADCAST_MAX_WORDS`: the Arrow bitmap refine inside
+    it, the shuffle ``array_intersect`` join past it or for
+    non-integral ids), pinned exact against brute force by the
+    property fuzz. The candidate stage is the same on both paths and
+    remains the sub-quadratic story.
 
     The gram-set stage is memoized; caching contract:
     :func:`memo_stage`.
@@ -1189,89 +1211,17 @@ def jaccard_pairs(
     >>> jaccard_pairs(docs, "pk", "body", threshold=0.6)
     """
     t = threshold
-    grams, inv, gdf, cands = _jaccard_parts(df, id_col, text_col, t, char_k)
-    if refine not in ("auto", "arrow", "bitmap", "shuffle"):
-        raise ValueError(
-            f"refine must be auto|arrow|bitmap|shuffle, got {refine!r}"
-        )
-    scored = None
-    if refine in ("auto", "arrow", "bitmap"):
-        gid = encode_ids(gdf, "_jp_g", out="_jp_gid")
-        max_gid = gid.agg(F.max("_jp_gid")).first()[0]
-        n_chunks = ((max_gid if max_gid is not None else 0) + 64) // 64
-        if refine == "auto":
-            refine = (
-                "arrow"
-                if grams.count() * n_chunks <= _BITMAP_REFINE_MAX_WORDS
-                else "shuffle"
-            )
-    if refine in ("arrow", "bitmap"):
-        bitmaps = bitmap_sets(
-            inv.join(F.broadcast(gid), "_jp_g"),
-            [id_col, "_jp_n"],
-            "_jp_gid",
-            n_chunks,
-        )
-    if refine == "arrow":
-        arrow = _bitmap_arrow_refine(
-            cands,
-            bitmaps.withColumnRenamed(id_col, "_jp_bid"),
-            id_col="_jp_bid",
-            a_col="id_a",
-            b_col="id_b",
-            n_chunks=n_chunks,
-            n_col="_jp_n",
-        )
-        if arrow is not None:
-            scored = arrow.select(
-                "id_a",
-                "id_b",
-                F.col("_ni").alias("_jp_ni"),
-                F.col("_na").alias("na"),
-                F.col("_nb").alias("nb"),
-            )
-        else:
-            refine = "bitmap"  # id-space gate failed: join path
-    if scored is None and refine == "bitmap":
-        ba = bitmaps.select(
-            F.col(id_col).alias("id_a"),
-            F.col("_jp_n").alias("na"),
-            F.col("bm").alias("_jp_bm_a"),
-        )
-        bb = bitmaps.select(
-            F.col(id_col).alias("id_b"),
-            F.col("_jp_n").alias("nb"),
-            F.col("bm").alias("_jp_bm_b"),
-        )
-        scored = (
-            cands.join(F.broadcast(ba), "id_a")
-            .join(F.broadcast(bb), "id_b")
-            .withColumn(
-                "_jp_ni", bitmap_intersect_count("_jp_bm_a", "_jp_bm_b")
-            )
-        )
-    if scored is None:
-        ga = grams.select(
-            F.col(id_col).alias("id_a"),
-            F.size("gs").alias("na"),
-            F.col("gs").alias("_jp_gs_a"),
-        )
-        gb = grams.select(
-            F.col(id_col).alias("id_b"),
-            F.size("gs").alias("nb"),
-            F.col("gs").alias("_jp_gs_b"),
-        )
-        scored = (
-            cands.join(ga, "id_a")
-            .join(gb, "id_b")
-            .withColumn(
-                "_jp_ni", F.size(F.array_intersect("_jp_gs_a", "_jp_gs_b"))
-            )
-        )
+    scored = _exact_overlap(
+        *_jaccard_parts(df, id_col, text_col, t, char_k),
+        id_col,
+        "_jp_g",
+        "id_a",
+        "id_b",
+    )
     return (
         scored.withColumn(
             "jaccard",
-            F.col("_jp_ni") / (F.col("na") + F.col("nb") - F.col("_jp_ni")),
+            F.col("_ni") / (F.col("_na") + F.col("_nb") - F.col("_ni")),
         )
         .filter(F.col("jaccard") >= t)
         .select(
@@ -1381,7 +1331,6 @@ def containment_pairs(
     *,
     threshold: float = 0.85,
     char_k: int = 5,
-    refine: str = "auto",
     max_df_permille: int | None = None,
 ) -> DataFrame:
     """EXACT character-k-gram containment pairs
@@ -1396,12 +1345,10 @@ def containment_pairs(
     one of its ⌈(1−t)·|A|⌉+1 rarest grams with B (if all of A's
     prefix grams miss B, fewer than t·|A| grams can intersect), so
     the inner side is prefix-pruned while the outer side keeps its
-    full posting list; exact refine via the same dual physical path
-    as :func:`jaccard_pairs` — broadcast :func:`bitmap_sets` bitmaps
-    while |corpus| × ⌈|vocab|/64⌉ longs fit
-    :data:`_BITMAP_REFINE_MAX_WORDS`, shuffle joins +
-    ``array_intersect`` past it (``refine=`` "auto"/"bitmap"/
-    "shuffle"; both paths pinned exact by the parametrized property
+    full posting list; the candidates are verified by the same
+    :func:`_exact_overlap` as :func:`jaccard_pairs` (Arrow bitmap
+    refine inside the :data:`_BROADCAST_MAX_WORDS` gate, shuffle
+    ``array_intersect`` join past it; pinned exact by the property
     fuzz). Containment has NO upper size-ratio bound, so candidate
     fan-out is larger than the Jaccard twin's — the 100 TB answer is
     the gram document-frequency cap: ``max_df_permille=P`` DROPS
@@ -1415,112 +1362,34 @@ def containment_pairs(
     that blow up the candidate join AND carry the least evidence of
     containment (boilerplate n-grams), so the cap converts the
     quadratic hot keys into a bounded fan-out: every surviving
-    posting list is ≤ P‰ of the corpus. Driver-side state: two or
-    three scalar collects (max gram id, corpus count, and with the
-    cap the pre-cap doc count). The gram-set stage is memoized;
-    caching contract: :func:`memo_stage`.
+    posting list is ≤ P‰ of the corpus. Driver-side state: the
+    verify step's probes, plus with the cap the pre-cap doc count.
+    The gram-set stage is memoized; caching contract:
+    :func:`memo_stage`.
 
     >>> containment_pairs(docs, "pk", "body", threshold=0.9)
     """
     t = threshold
-    grams, inv, gdf, cands = _containment_parts(
-        df, id_col, text_col, t, char_k, max_df_permille=max_df_permille
+    sized = _exact_overlap(
+        *_containment_parts(
+            df, id_col, text_col, t, char_k, max_df_permille=max_df_permille
+        ),
+        id_col,
+        "_cp_g",
+        "inner_id",
+        "outer_id",
     )
-    if refine not in ("auto", "arrow", "bitmap", "shuffle"):
-        raise ValueError(
-            f"refine must be auto|arrow|bitmap|shuffle, got {refine!r}"
-        )
-    sized = None
-    if refine in ("auto", "arrow", "bitmap"):
-        gid = encode_ids(gdf, "_cp_g", out="_cp_gid")
-        max_gid = gid.agg(F.max("_cp_gid")).first()[0]
-        n_chunks = ((max_gid if max_gid is not None else 0) + 64) // 64
-        if refine == "auto":
-            refine = (
-                "arrow"
-                if grams.count() * n_chunks <= _BITMAP_REFINE_MAX_WORDS
-                else "shuffle"
-            )
-    if refine in ("arrow", "bitmap"):
-        bitmaps = bitmap_sets(
-            inv.join(F.broadcast(gid), "_cp_g"), id_col, "_cp_gid", n_chunks
-        )
-    if refine == "arrow":
-        arrow = _bitmap_arrow_refine(
-            cands,
-            bitmaps.withColumnRenamed(id_col, "_cp_bid"),
-            id_col="_cp_bid",
-            a_col="inner_id",
-            b_col="outer_id",
-            n_chunks=n_chunks,
-        )
-        if arrow is not None:
-            # set sizes ride along from the same bitmap table
-            # (popcount == |gram set| by construction), so the two
-            # 1:1 size joins below are unnecessary on this path
-            sized = arrow.select(
-                "inner_id",
-                "outer_id",
-                F.col("_ni").alias("_cp_ni"),
-                F.col("_na").alias("na"),
-                F.col("_nb").alias("nb"),
-            )
-        else:
-            refine = "bitmap"  # id-space gate failed: join path
-    if sized is None and refine == "bitmap":
-        ba = bitmaps.select(
-            F.col(id_col).alias("inner_id"), F.col("bm").alias("_cp_bm_a")
-        )
-        bb = bitmaps.select(
-            F.col(id_col).alias("outer_id"), F.col("bm").alias("_cp_bm_b")
-        )
-        inter = (
-            cands.join(F.broadcast(ba), "inner_id")
-            .join(F.broadcast(bb), "outer_id")
-            .withColumn(
-                "_cp_ni", bitmap_intersect_count("_cp_bm_a", "_cp_bm_b")
-            )
-            .select("inner_id", "outer_id", "_cp_ni")
-        )
-    elif sized is None:
-        ga = grams.select(
-            F.col(id_col).alias("inner_id"), F.col("gs").alias("_cp_gs_a")
-        )
-        gb = grams.select(
-            F.col(id_col).alias("outer_id"), F.col("gs").alias("_cp_gs_b")
-        )
-        inter = (
-            cands.join(ga, "inner_id")
-            .join(gb, "outer_id")
-            .withColumn(
-                "_cp_ni", F.size(F.array_intersect("_cp_gs_a", "_cp_gs_b"))
-            )
-            .select("inner_id", "outer_id", "_cp_ni")
-        )
-    if sized is None:
-        sizes = grams.select(id_col, F.size("gs").alias("_cp_sz"))
-        sized = inter.join(
-            sizes.select(
-                F.col(id_col).alias("inner_id"), F.col("_cp_sz").alias("na")
-            ),
-            "inner_id",
-        ).join(
-            sizes.select(
-                F.col(id_col).alias("outer_id"), F.col("_cp_sz").alias("nb")
-            ),
-            "outer_id",
-        )
     return (
         sized.withColumn(
-            "_cp_r", F.col("_cp_ni").cast("double") / F.col("na")
+            "_cp_r", F.col("_ni").cast("double") / F.col("_na")
         )
         .withColumn("containment", F.col("_cp_r").cast("float"))
         .where(
             (F.col("_cp_r") >= t)
             & (
-                (F.col("na") < F.col("nb"))
+                (F.col("_na") < F.col("_nb"))
                 | (
-                    (F.col("na") == F.col("nb"))
+                    (F.col("_na") == F.col("_nb"))
                     & (F.col("inner_id") < F.col("outer_id"))
                 )
             )
@@ -1751,16 +1620,6 @@ def concurrency_sweep(
     )
 
 
-#: bitmap-path switch for :func:`triangle_count`: the broadcast
-#: successor-bitmap table is ≤ |V|·⌈|V|/64⌉ longs; past this budget
-#: (2²² longs = 32 MiB — the :data:`_BITMAP_REFINE_MAX_WORDS` budget,
-#: reached near |V| ≈ 16k) the dense formulation stops being a
-#: broadcast and :func:`triangle_count` auto-switches to the
-#: degree-ordered orientation edge join (no broadcast, no O(|V|)-wide
-#: rows — the sparse/billion-node path).
-_TRIANGLE_BITMAP_MAX_WORDS = 1 << 22
-
-
 def _triangle_count_oriented(e: DataFrame) -> int:
     """Sparse-path EXACT triangle count on a normalized edge list
     (``_tc_u < _tc_v``, distinct): degree-ordered orientation
@@ -1820,8 +1679,7 @@ def triangle_count(edges: DataFrame, src: str, dst: str) -> int:
     """EXACT triangle count of an undirected simple graph given as an
     edge list (self-loops and duplicate/reverse edges are normalized
     away). Two formulations, auto-switched on the broadcast budget
-    :data:`_TRIANGLE_BITMAP_MAX_WORDS` (the jaccard/containment
-    refine-switch device):
+    :data:`_BROADCAST_MAX_WORDS`:
 
     - dense path (|V|·⌈|V|/64⌉ longs within budget, |V| ≲ 16k):
       each triangle {a<b<c} counted once as Σ over oriented edges
@@ -1858,7 +1716,7 @@ def triangle_count(edges: DataFrame, src: str, dst: str) -> int:
     )
     if n_nodes == 0:
         return 0
-    if n_nodes * (n_nodes // 64 + 1) > _TRIANGLE_BITMAP_MAX_WORDS:
+    if n_nodes * (n_nodes // 64 + 1) > _BROADCAST_MAX_WORDS:
         return _triangle_count_oriented(e)
     nid = encode_ids(
         e.select(F.col("_tc_u").alias("_tc_n"))
@@ -3060,12 +2918,11 @@ def winnow_fingerprints(
 #: (:func:`co_membership_edges` / :func:`co_membership_degrees`): the
 #: per-id neighbor bitmap is ⌈(max_id+1)/64⌉ longs wide (cap: 4096
 #: words = 32 KiB/row, i.e. ids < 262 144), and the per-block
-#: membership bitmaps are BROADCAST (n_blocks · n_chunks longs ≤ 2²²
-#: = 32 MiB — the jaccard/triangle budget family). Past either gate
-#: the core falls back to the block-equi-join + distinct formulation,
-#: which never materializes anything O(|V|)-wide.
+#: membership bitmaps are BROADCAST (n_blocks · n_chunks longs within
+#: :data:`_BROADCAST_MAX_WORDS`). Past either gate the core falls back
+#: to the block-equi-join + distinct formulation, which never
+#: materializes anything O(|V|)-wide.
 _NEIGHBOR_BITMAP_MAX_CHUNKS = 1 << 12
-_NEIGHBOR_BITMAP_MAX_WORDS = 1 << 22
 
 #: 64 single-bit masks as a literal column (signed-long bit 63), so
 #: bit tests inside higher-order-function lambdas never need a
@@ -3164,12 +3021,7 @@ def _co_membership_gate(du: DataFrame, block_col: str, id_col: str):
     """Probe the dense-path gates: returns ``(n_chunks, n_blocks)``
     when the neighbor-bitmap core applies, else ``None``. One small
     scalar agg action."""
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-    if not isinstance(
-        du.schema[id_col].dataType,
-        (ByteType, ShortType, IntegerType, LongType),
-    ):
+    if not isinstance(du.schema[id_col].dataType, _INTEGRAL):
         return None
     r = du.agg(
         F.min(id_col).alias("lo"),
@@ -3181,7 +3033,7 @@ def _co_membership_gate(du: DataFrame, block_col: str, id_col: str):
     n_chunks = int(r["hi"]) // 64 + 1
     if n_chunks > _NEIGHBOR_BITMAP_MAX_CHUNKS:
         return None
-    if int(r["nb"]) * n_chunks > _NEIGHBOR_BITMAP_MAX_WORDS:
+    if int(r["nb"]) * n_chunks > _BROADCAST_MAX_WORDS:
         return None
     return n_chunks, int(r["nb"])
 
@@ -3213,7 +3065,7 @@ def co_membership_edges(
     adjacent iff they share at least one ``block_col`` value. Dense
     path (ids integral, small, block bitmaps within the broadcast
     budget — see :data:`_NEIGHBOR_BITMAP_MAX_CHUNKS` /
-    :data:`_NEIGHBOR_BITMAP_MAX_WORDS`): decode each id's neighbor
+    :data:`_BROADCAST_MAX_WORDS`): decode each id's neighbor
     bitmap to the neighbors ABOVE it — each edge emitted exactly once
     from its lower endpoint, map-side, so the join formulation's
     quadratic pair shuffle + distinct never runs. Past the gates:
@@ -3277,7 +3129,8 @@ def triangle_stats_from_neighbors(
     :func:`neighbor_bitmaps` table: each edge decodes once from its
     lower endpoint (map-side), and Σ over unordered edges (u<v) of
     |N(u) ∩ N(v)| counts every triangle exactly 3×. The nb table is
-    broadcast (caller's gate already bounds |V|·n_chunks). One
+    broadcast: the caller gates |V|·n_chunks on
+    :data:`_BROADCAST_MAX_WORDS`. One
     aggregate action plus one 1-row width probe."""
     first = nb.select(F.size("bm").alias("w")).first()
     if first is None:

@@ -298,24 +298,21 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     straight from the (day, user) pairs (one block-bitmap reduce, one
     map-side-combined bit_or reduce), edges decode map-side from their
     lower endpoint, and n_edges + 3·triangles come out of ONE
-    aggregate action (api.triangle_stats_from_neighbors); past the
-    gate the prior join formulation runs unchanged."""
-    from hadoop_deliver_spark.api import (
-        _co_membership_gate,
-        neighbor_bitmaps,
-        triangle_count,
-        triangle_stats_from_neighbors,
-    )
+    aggregate action (api.triangle_stats_from_neighbors), which
+    broadcasts the whole |V|·n_chunks neighbor table, so |V|·n_chunks
+    is gated on the broadcast budget too; past either gate the prior
+    join formulation runs unchanged."""
+    from hadoop_deliver_spark import api
 
     e = tbl(spark, sf_dir, "events")
     du = e.select(F.to_date("ts").alias("day"), "user_id")
     n_nodes = e.select("user_id").distinct().count()
-    gate = _co_membership_gate(du, "day", "user_id")
-    if gate is not None:
-        nb = neighbor_bitmaps(du, "day", "user_id", gate[0]).localCheckpoint(
-            eager=True
-        )
-        n_edges, tri = triangle_stats_from_neighbors(nb, "user_id")
+    gate = api._co_membership_gate(du, "day", "user_id")
+    if gate is not None and n_nodes * gate[0] <= api._BROADCAST_MAX_WORDS:
+        nb = api.neighbor_bitmaps(
+            du, "day", "user_id", gate[0]
+        ).localCheckpoint(eager=True)
+        n_edges, tri = api.triangle_stats_from_neighbors(nb, "user_id")
     else:
         a, b = du.distinct().alias("a"), du.distinct().alias("b")
         edges = (
@@ -332,7 +329,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         try:
             n_edges = edges.count()
-            tri = triangle_count(edges, "u", "v")
+            tri = api.triangle_count(edges, "u", "v")
         finally:
             # all actions that needed the cache have run; without this
             # the co-activity edge set (quadratic per day block) stays

@@ -290,8 +290,17 @@ def test_bitmap_sets_intersect_count_matches_set_intersection(spark):
             assert got[(ka, kb)] == len(sets[ka] & sets[kb])
 
 
-@pytest.mark.parametrize("refine", ["auto", "arrow", "bitmap", "shuffle"])
-def test_jaccard_pairs_exact_on_custom_columns(spark, refine):
+@pytest.fixture(params=["arrow", "shuffle"])
+def refine_path(request, monkeypatch):
+    """The exact-overlap path a near-dup test runs on: the Arrow bitmap
+    refine inside the default broadcast budget, the shuffle
+    array_intersect join with the budget at 0."""
+    if request.param == "shuffle":
+        monkeypatch.setattr(api, "_BROADCAST_MAX_WORDS", 0)
+    return request.param
+
+
+def test_jaccard_pairs_exact_on_custom_columns(spark, refine_path):
     base = "abcdefghijklmnopqrstuvwxyz0123456789"
     near = base[:-2] + "xy"  # high 5-gram overlap
     other = "zzzzzyyyyyxxxxxwwwwwvvvvvuuuuutttttsssss"
@@ -299,9 +308,7 @@ def test_jaccard_pairs_exact_on_custom_columns(spark, refine):
         [(7, base), (8, near), (9, other), (10, "tiny")],
         "pk long, body string",
     )
-    got = api.jaccard_pairs(
-        df, "pk", "body", threshold=0.5, char_k=5, refine=refine
-    ).collect()
+    got = api.jaccard_pairs(df, "pk", "body", threshold=0.5, char_k=5).collect()
     assert [(r.id_a, r.id_b) for r in got] == [(7, 8)]
     # exact value: grams(base)=32, grams(near)=32, shared=30 -> 30/34
     import math
@@ -312,20 +319,56 @@ def test_jaccard_pairs_exact_on_custom_columns(spark, refine):
     assert math.isclose(got[0].jaccard, inter / union, rel_tol=1e-6)
 
 
-@pytest.mark.parametrize("refine", ["auto", "arrow", "bitmap", "shuffle"])
-def test_containment_pairs_finds_embedded_doc(spark, refine):
+def test_containment_pairs_finds_embedded_doc(spark, refine_path):
     long_doc = "abcdefghijklmnopqrstuvwxyz0123456789ABCDEFGH"
     short_doc = long_doc[5:25]  # wholly embedded substring
     other = "zzzzzyyyyyxxxxxwwwwwvvvvv"
     df = spark.createDataFrame(
         [(1, long_doc), (2, short_doc), (3, other)], "pk long, body string"
     )
-    got = api.containment_pairs(
-        df, "pk", "body", threshold=0.9, char_k=5, refine=refine
-    ).collect()
+    got = api.containment_pairs(df, "pk", "body", threshold=0.9, char_k=5).collect()
     # short_doc's grams are all in long_doc -> containment 1.0
     assert [(r.inner_id, r.outer_id) for r in got] == [(2, 1)]
     assert abs(got[0].containment - 1.0) < 1e-6
+
+
+def _near_dup_pairs(df):
+    """(jaccard pairs, containment pairs) of ``df`` as sorted id
+    tuples."""
+    jp = api.jaccard_pairs(df, "pk", "body", threshold=0.5)
+    cp = api.containment_pairs(df, "pk", "body", threshold=0.9)
+    return (
+        sorted((r.id_a, r.id_b) for r in jp.collect()),
+        sorted((r.inner_id, r.outer_id) for r in cp.collect()),
+    )
+
+
+def test_near_dup_pairs_on_string_ids(spark, refine_path):
+    """Non-integral ids verify on the shuffle join whatever the
+    budget."""
+    base = "abcdefghijklmnopqrstuvwxyz0123456789ABCDEFGH"
+    df = spark.createDataFrame(
+        [("k1", base), ("k2", base[5:25]), ("k3", base[:-2] + "xy")],
+        "pk string, body string",
+    )
+    assert _near_dup_pairs(df) == (
+        [("k1", "k3")],
+        [("k1", "k3"), ("k2", "k1"), ("k2", "k3")],
+    )
+
+
+def test_near_dup_pairs_on_nulls_and_empty_frame(spark, refine_path):
+    """NULL texts have empty gram sets and pair with nothing; a NULL id
+    pairs with nothing either, though its text is a near-dup of
+    doc 1 and contains doc 3; an empty frame has no pairs."""
+    base = "abcdefghijklmnopqrstuvwxyz0123456789ABCDEFGH"
+    df = spark.createDataFrame(
+        [(1, base), (2, None), (3, base[5:25]), (4, None), (None, base)],
+        "pk long, body string",
+    )
+    assert _near_dup_pairs(df) == ([], [(3, 1)])
+    empty = spark.createDataFrame([], "pk long, body string")
+    assert _near_dup_pairs(empty) == ([], [])
 
 
 def test_simhash_pairs_identical_docs_distance_zero(spark):

@@ -591,21 +591,38 @@ def test_triangle_count_equals_bruteforce_on_random_graphs(
     assert api.triangle_count(df, "x", "y") == want
 
 
+def _fuzz_id(i, sparse):
+    """Doc id ``i`` of a near-dup fuzz corpus: dense from 0, or sparse,
+    huge and (for i = 0) negative; increasing in ``i`` either way."""
+    return i * 10**9 - 7 if sparse else i
+
+
+def _budget(api, past):
+    """Context with the broadcast budget at 0 (``past``) or as is."""
+    from unittest import mock
+
+    return mock.patch.object(
+        api, "_BROADCAST_MAX_WORDS", 0 if past else api._BROADCAST_MAX_WORDS
+    )
+
+
 @settings(max_examples=6, deadline=None)
 @given(
     seed=st.integers(min_value=0, max_value=2**31 - 1),
     n_docs=st.integers(min_value=1, max_value=14),
     t=st.sampled_from([0.3, 0.55, 0.8]),
-    refine=st.sampled_from(["arrow", "bitmap", "shuffle"]),
+    past_budget=st.booleans(),
+    sparse_ids=st.booleans(),
 )
 def test_jaccard_pairs_equals_bruteforce_on_random_texts(
-    spark, seed, n_docs, t, refine
+    spark, seed, n_docs, t, past_budget, sparse_ids
 ):
     """api.jaccard_pairs (PPJoin prefix + size-ratio candidates +
     exact refine) must return EXACTLY the brute-force J >= t pairs —
-    via BOTH physical refine paths (broadcast bitmap AND-popcount,
-    and the web-scale shuffle-join array intersection), which must be
-    indistinguishable. Texts draw from a 2-letter alphabet with
+    on BOTH exact-overlap paths (the Arrow bitmap refine inside the
+    broadcast budget, the shuffle-join array intersection past it),
+    with dense ids or sparse, negative ones (the Arrow path's
+    searchsorted row lookup). Texts draw from a 2-letter alphabet with
     lengths straddling the gram width (0..24 over k=5), so
     high-overlap sets, empty gram sets, and threshold-boundary ratios
     all occur — probing the losslessness of the prefix bound's
@@ -616,7 +633,10 @@ def test_jaccard_pairs_equals_bruteforce_on_random_texts(
 
     rng = random.Random(seed)
     texts = [
-        (i, "".join(rng.choice("ab") for _ in range(rng.randint(0, 24))))
+        (
+            _fuzz_id(i, sparse_ids),
+            "".join(rng.choice("ab") for _ in range(rng.randint(0, 24))),
+        )
         for i in range(n_docs)
     ]
 
@@ -633,12 +653,13 @@ def test_jaccard_pairs_equals_bruteforce_on_random_texts(
             if j >= t:
                 want[(ia, ib)] = j
     df = spark.createDataFrame(texts, "pk long, body string")
-    got = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in api.jaccard_pairs(
-            df, "pk", "body", threshold=t, char_k=5, refine=refine
-        ).collect()
-    }
+    with _budget(api, past_budget):
+        got = {
+            (r.id_a, r.id_b): r.jaccard
+            for r in api.jaccard_pairs(
+                df, "pk", "body", threshold=t, char_k=5
+            ).collect()
+        }
     assert set(got) == set(want)
     for k in want:
         assert abs(got[k] - want[k]) < 1e-6
@@ -649,24 +670,28 @@ def test_jaccard_pairs_equals_bruteforce_on_random_texts(
     seed=st.integers(min_value=0, max_value=2**31 - 1),
     n_docs=st.integers(min_value=1, max_value=12),
     t=st.sampled_from([0.6, 0.85, 1.0]),
-    refine=st.sampled_from(["arrow", "bitmap", "shuffle"]),
+    past_budget=st.booleans(),
+    sparse_ids=st.booleans(),
 )
 def test_containment_pairs_equals_bruteforce_on_random_texts(
-    spark, seed, n_docs, t, refine
+    spark, seed, n_docs, t, past_budget, sparse_ids
 ):
     """api.containment_pairs (inner-side prefix filter + exact
     refine) must return EXACTLY the brute-force C(A,B) >= t pairs for
-    A the smaller gram set (ties by id) — via BOTH physical refine
-    paths. Same adversarial 2-letter corpus as the Jaccard fuzz; also
-    exercises t=1.0 (strict containment) where the inner prefix is a
-    single rarest gram."""
+    A the smaller gram set (ties by id) — on both exact-overlap paths
+    and both id layouts. Same adversarial 2-letter corpus as the
+    Jaccard fuzz; also exercises t=1.0 (strict containment) where the
+    inner prefix is a single rarest gram."""
     import random
 
     from hadoop_deliver_spark import api
 
     rng = random.Random(seed)
     texts = [
-        (i, "".join(rng.choice("ab") for _ in range(rng.randint(0, 24))))
+        (
+            _fuzz_id(i, sparse_ids),
+            "".join(rng.choice("ab") for _ in range(rng.randint(0, 24))),
+        )
         for i in range(n_docs)
     ]
 
@@ -686,12 +711,13 @@ def test_containment_pairs_equals_bruteforce_on_random_texts(
             if c >= t:
                 want[(ia, ib)] = c
     df = spark.createDataFrame(texts, "pk long, body string")
-    got = {
-        (r.inner_id, r.outer_id): r.containment
-        for r in api.containment_pairs(
-            df, "pk", "body", threshold=t, char_k=5, refine=refine
-        ).collect()
-    }
+    with _budget(api, past_budget):
+        got = {
+            (r.inner_id, r.outer_id): r.containment
+            for r in api.containment_pairs(
+                df, "pk", "body", threshold=t, char_k=5
+            ).collect()
+        }
     assert set(got) == set(want)
     for k in want:
         assert abs(got[k] - want[k]) < 1e-6

@@ -1816,13 +1816,12 @@ _COLLECT_OK = {
     # range-partition boundary probe (bounded by #partitions)
     ("fnx2.py", "sink_range_partitioned"),
     # 1-row .first() scalar probes: max gram/node id for bitmap width
-    ("api.py", "jaccard_pairs"),
-    ("api.py", "containment_pairs"),
+    ("api.py", "_exact_overlap"),
     ("api.py", "triangle_count"),
-    # bounded bitmap-table collect for the Arrow refine (r12): gated
-    # by the SAME _BITMAP_REFINE_MAX_WORDS budget that authorizes
-    # broadcasting it on the join path — ≤ 32 MiB of longs, shipped
-    # once to the Python workers as the NumPy intersect matrix
+    # bounded bitmap-table collect for the Arrow refine (r12): only
+    # inside _exact_overlap's _BROADCAST_MAX_WORDS gate — ≤ 32 MiB of
+    # longs, shipped once to the Python workers as the NumPy
+    # intersect matrix
     ("api.py", "_bitmap_arrow_refine"),
     # 1-row .first() scalar probes: id-range/block-count gate and
     # bitmap width for the co-membership neighbor-bitmap core
@@ -2196,7 +2195,7 @@ def test_triangle_count_formulations_agree(spark):
 
     from hadoop_deliver_spark import api
     from hadoop_deliver_spark.api import (
-        _TRIANGLE_BITMAP_MAX_WORDS,
+        _BROADCAST_MAX_WORDS,
         _triangle_count_oriented,
     )
 
@@ -2228,7 +2227,7 @@ def test_triangle_count_formulations_agree(spark):
         assert api.triangle_count(df, "x", "y") == want
 
     n = 20_002
-    assert n * (n // 64 + 1) > _TRIANGLE_BITMAP_MAX_WORDS
+    assert n * (n // 64 + 1) > _BROADCAST_MAX_WORDS
     ring = [(i, (i + 1) % n) for i in range(n)]
     chords = [(i, i + 2) for i in range(0, 200, 5)]
     big = spark.createDataFrame(ring + chords, "x long, y long")
@@ -2566,20 +2565,92 @@ def test_passing_bablok_past_gate_matches_driver_path(
 def test_arrow_refine_past_gate_matches_driver_path(
     spark, sf_dir, monkeypatch
 ):
-    """An explicit refine="arrow" past the word budget must fall back
-    to the bitmap join path WITHOUT collecting the bitmap table: every
-    collect made while planning is a 1-row probe."""
+    """Past the broadcast budget both near-dup twins must verify on
+    the shuffle join WITHOUT collecting the bitmap table (every
+    collect made while planning is a 1-row probe) and return the
+    Arrow path's pairs."""
     from hadoop_deliver_spark import api
 
     docs = tbl(spark, sf_dir, "documents").select("doc_id", "text")
-    want = api.jaccard_pairs(docs, "doc_id", "text", refine="arrow").collect()
-    assert want
-    monkeypatch.setattr(api, "_BITMAP_REFINE_MAX_WORDS", 1)
-    with monkeypatch.context() as m:
-        sizes = _collect_sizes(m, docs)
-        df = api.jaccard_pairs(docs, "doc_id", "text", refine="arrow")
-    assert max(sizes, default=0) <= 1, "bitmap table collected past gate"
-    assert sorted(df.collect()) == sorted(want)
+    for twin in (api.jaccard_pairs, api.containment_pairs):
+        want = twin(docs, "doc_id", "text").collect()
+        assert want, twin.__name__
+        with monkeypatch.context() as m:
+            m.setattr(api, "_BROADCAST_MAX_WORDS", 0)
+            sizes = _collect_sizes(m, docs)
+            df = twin(docs, "doc_id", "text")
+        assert max(sizes, default=0) <= 1, f"{twin.__name__}: collected past gate"
+        assert sorted(df.collect()) == sorted(want)
+
+
+def test_arrow_refine_on_sparse_ids_matches_dense_ids(
+    spark, sf_dir, monkeypatch
+):
+    """Ids far past budget / n_chunks stay on the Arrow path: the
+    bitmap table is collected once and its rows are looked up by id,
+    so both twins return the dense-id pairs shifted by the offset."""
+    from hadoop_deliver_spark import api
+
+    docs = tbl(spark, sf_dir, "documents").select("doc_id", "text")
+    off = 10**12
+    sparse = docs.withColumn("doc_id", F.col("doc_id") + off)
+    for twin in (api.jaccard_pairs, api.containment_pairs):
+        dense = twin(docs, "doc_id", "text").collect()
+        want = sorted((a + off, b + off, v) for a, b, v in dense)
+        assert want, twin.__name__
+        with monkeypatch.context() as m:
+            sizes = _collect_sizes(m, docs)
+            df = twin(sparse, "doc_id", "text")
+        assert sum(n > 1 for n in sizes) == 1, f"{twin.__name__}: {sizes}"
+        assert sorted(map(tuple, df.collect())) == want
+
+
+def test_triangle_count_bounds_neighbor_broadcast(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """graph_triangle_count broadcasts the whole neighbor-bitmap table
+    (|V| × n_chunks longs), so with that table past the broadcast
+    budget it must take the join formulation even though the block
+    bitmaps (days × n_chunks) fit. The events are cut to their first
+    three days, so users outnumber days, and the budget sits between
+    the two tables."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from hadoop_deliver_spark import api
+    from hadoop_deliver_spark.registry import load_all
+    from tests.parity import assert_frames_match
+
+    ev = pq.read_table(f"{sf_dir}/events.parquet")
+    day = pc.floor_temporal(ev["ts"], unit="day")
+    ev = ev.filter(pc.is_in(day, pa.array(sorted(set(day.to_pylist()))[:3])))
+    _write_table(str(tmp_path), "events", ev)
+    n_users = len(pc.unique(ev["user_id"]))
+    n_chunks = pc.max(ev["user_id"]).as_py() // 64 + 1
+    budget = n_users * n_chunks - 1
+    assert 3 * n_chunks <= budget
+
+    q = load_all()["graph_triangle_count"]
+    real, calls = api.neighbor_bitmaps, []
+    monkeypatch.setattr(
+        api, "neighbor_bitmaps", lambda *a: calls.append(a) or real(*a)
+    )
+    want = q.fn(spark, str(tmp_path)).toPandas()
+    assert calls, "the unpatched run must take the neighbor-bitmap path"
+    calls.clear()
+    monkeypatch.setattr(api, "_BROADCAST_MAX_WORDS", budget)
+    got = q.fn(spark, str(tmp_path)).toPandas()
+    assert not calls, "neighbor table broadcast past the budget"
+    assert_frames_match(got, want, q.name)
+    duck = duckdb.connect()
+    duck.execute(
+        "CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/events.parquet/*.parquet')"
+    )
+    assert_frames_match(got, duck.execute(q.oracle).df(), q.name)
+    duck.close()
 
 
 def test_raking_ipf_zero_priority_matches_oracle(spark, sf_dir, tmp_path):
