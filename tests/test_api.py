@@ -290,12 +290,15 @@ def test_bitmap_sets_intersect_count_matches_set_intersection(spark):
             assert got[(ka, kb)] == len(sets[ka] & sets[kb])
 
 
-@pytest.fixture(params=["arrow", "shuffle"])
+@pytest.fixture(params=["auto", "arrow", "shuffle"])
 def refine_path(request, monkeypatch):
-    """The exact-overlap path a near-dup test runs on: the Arrow bitmap
-    refine inside the default broadcast budget, the shuffle
-    array_intersect join with the budget at 0."""
-    if request.param == "shuffle":
+    """The exact-overlap path a near-dup test runs on: whatever the
+    shipped broadcast budget selects (auto), the Arrow bitmap refine
+    with the budget unbounded, the shuffle array_intersect join with
+    the budget at 0."""
+    if request.param == "arrow":
+        monkeypatch.setattr(api, "_BROADCAST_MAX_WORDS", 1 << 62)
+    elif request.param == "shuffle":
         monkeypatch.setattr(api, "_BROADCAST_MAX_WORDS", 0)
     return request.param
 
