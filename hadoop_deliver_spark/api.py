@@ -441,25 +441,108 @@ def _approx_splits(df: DataFrame, value_col: str, nblocks: int) -> list[int]:
     return sorted({int(s) for s in got})
 
 
-def _split_arr(splits: list[int]) -> Column:
-    """Split points as a literal array; typed even when empty (a bare
-    F.array() is array<null>, which the `<` inside the block-assignment
-    lambda cannot compare against numeric columns)."""
-    if not splits:
-        return F.array().cast("array<bigint>")
-    return F.array(*[F.lit(s) for s in splits])
+# block-ranked cores: at most this many blocks per stratum (tests
+# monkeypatch it to force one, two or a few blocks on tiny inputs)
+_NBLOCKS = 32
 
 
-def _offset_map(offsets: dict[int, int]) -> Column:
-    """block id → global offset as a literal map; typed even when empty
-    (a bare F.create_map() is map<void,void>, which cannot be indexed
-    by the INT block column — only reachable on an empty input, where
-    the lookup never evaluates on any row anyway)."""
-    if not offsets:
-        return F.create_map().cast("map<int,bigint>")
-    return F.create_map(
-        *[F.lit(x) for b, off in offsets.items() for x in (b, int(off))]
+def _block_ranked(
+    df: DataFrame,
+    split_col: str,
+    order: Sequence,
+    measures: Sequence,
+    out_cols: Sequence[str],
+    stratum: str | None = None,
+    descending: bool = False,
+) -> tuple[DataFrame, int]:
+    """The one block-ranked core behind every ``exact_*`` rank/cumsum
+    function. Appends ``out_cols[i]`` = EXACT running sum of
+    ``measures[i]`` over rows ordered by ``order`` (within each
+    ``stratum`` when given) WITHOUT a single-partition window, and
+    returns the grand total of ``measures[0]`` beside the frame. A
+    rank is the running sum of ``F.lit(1)``: row_number, row for row.
+
+    One materialize, one percentile_approx split probe on the integer
+    ``split_col``, one per-(stratum, block) aggregate collect covering
+    every measure, one window partitioned by (stratum, block) with a
+    ROWS frame; each block adds the exact total of all strictly-earlier
+    blocks of its stratum — lower blocks, or higher ones when
+    ``descending``. ``split_col`` must be monotone in ``order`` (equal
+    values may tie: ties stay in one block). NULL split values land in
+    block 0, which Spark's default ASC NULLS FIRST / DESC NULLS LAST
+    orders place first / last, as the single-task window does.
+    Integer measures ⇒ associative ⇒ identical to the single-task
+    window at any blocking; the split points only balance work.
+    Driver state is |strata|·_NBLOCKS entries, never the corpus.
+
+    Stratum contract: the offset map is keyed by Spark's OWN
+    ``cast('string')`` of the stratum on both sides (never a Python
+    repr, which diverges for booleans/floats/dates), and a NULL
+    stratum key or NULL per-block measure raises instead of silently
+    yielding NULLs (the ``concat_ws`` lookup drops NULLs)."""
+    df = _materialize_for_probes(df)
+    splits = _approx_splits(df, split_col, _NBLOCKS)
+    # typed even when empty: a bare F.array() is array<null>, which
+    # the `<` below cannot compare against numeric columns
+    split_arr = (
+        F.array(*[F.lit(s) for s in splits])
+        if splits
+        else F.array().cast("array<bigint>")
     )
+    blk = f"_blk_{out_cols[0]}"
+    blocked = df.withColumn(
+        blk, F.size(F.filter(split_arr, lambda s: s < F.col(split_col)))
+    )
+    if stratum is None:
+        groups, part, lookup, key_type = [blk], [blk], F.col(blk), "int"
+    else:
+        skey = F.col(stratum).cast("string")
+        groups, part = [skey.alias("_k"), blk], [stratum, blk]
+        lookup = F.concat_ws("\x1f", skey, F.col(blk).cast("string"))
+        key_type = "string"
+    rows = (
+        blocked.groupBy(*groups)
+        .agg(*[F.sum(m).alias(f"_s{i}") for i, m in enumerate(measures)])
+        .collect()
+    )
+    by_key: dict = {}
+    for r in rows:
+        k = None if stratum is None else r["_k"]
+        sums = [r[f"_s{i}"] for i in range(len(measures))]
+        if stratum is not None and (k is None or None in sums):
+            raise ValueError(
+                f"NULL stratum key or measure in {stratum!r} (the "
+                f"concat_ws offset lookup drops NULLs)"
+            )
+        by_key.setdefault(k, []).append((r[blk], sums))
+    offsets: list[list] = [[] for _ in measures]
+    total = 0
+    for k, blocks in by_key.items():
+        run = [0] * len(measures)
+        for b, sums in sorted(blocks, reverse=descending):
+            at = b if stratum is None else f"{k}\x1f{b}"
+            for i, s in enumerate(sums):
+                offsets[i].append((at, int(run[i])))
+                run[i] += s or 0
+        total += run[0]
+    w = (
+        Window.partitionBy(*part)
+        .orderBy(*order)
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    out = blocked
+    for m, o, offs in zip(measures, out_cols, offsets):
+        # typed even when empty (an empty input): a bare F.create_map()
+        # is map<void,void>, which the lookup key cannot index
+        off_map = (
+            F.create_map(*[F.lit(x) for kv in offs for x in kv])
+            if offs
+            else F.create_map().cast(f"map<{key_type},bigint>")
+        )
+        out = out.withColumn(
+            o, (F.sum(m).over(w) + off_map[lookup]).cast("long")
+        )
+    return out.drop(blk), total
 
 
 def exact_global_ntile(
@@ -468,7 +551,6 @@ def exact_global_ntile(
     key_col: str,
     n_buckets: int,
     out_col: str,
-    nblocks: int = 32,
 ) -> DataFrame:
     """Append ``out_col`` = exact global ntile(n_buckets) of rows
     ordered by (value_col, key_col) — integer-valued value columns;
@@ -476,35 +558,17 @@ def exact_global_ntile(
 
     >>> exact_global_ntile(users, "revenue_cents", "user_id", 5, "quintile")
     """
-    df = _materialize_for_probes(df)
-    splits = _approx_splits(df, value_col, nblocks)
-    split_arr = _split_arr(splits)
-    blk = f"_blk_{out_col}"
-    blocked = df.withColumn(
-        blk, F.size(F.filter(split_arr, lambda s: s < F.col(value_col)))
-    )
-    sizes = sorted(
-        (r[blk], r["count"]) for r in blocked.groupBy(blk).count().collect()
-    )
-    offsets, total = {}, 0
-    for b, cnt in sizes:
-        offsets[b] = total
-        total += cnt
-    off_map = _offset_map(offsets)
-    rn = (
-        F.row_number().over(
-            Window.partitionBy(blk).orderBy(value_col, key_col)
-        )
-        + off_map[F.col(blk)]
+    ranked, total = _block_ranked(
+        df, value_col, [value_col, key_col], [F.lit(1)], [out_col]
     )
     q, r = divmod(total, n_buckets)
     if q == 0:  # fewer rows than buckets: ntile assigns rank directly
-        bucket: Column = rn
-    else:
-        bucket = F.when(
-            rn <= r * (q + 1), F.floor((rn - 1) / F.lit(q + 1)) + 1
-        ).otherwise(F.floor((rn - 1 - r * (q + 1)) / F.lit(q)) + r + 1)
-    return blocked.withColumn(out_col, bucket.cast("long")).drop(blk)
+        return ranked
+    rn = F.col(out_col)
+    bucket = F.when(
+        rn <= r * (q + 1), F.floor((rn - 1) / F.lit(q + 1)) + 1
+    ).otherwise(F.floor((rn - 1 - r * (q + 1)) / F.lit(q)) + r + 1)
+    return ranked.withColumn(out_col, bucket.cast("long"))
 
 
 def exact_global_cumsum_desc(
@@ -512,7 +576,6 @@ def exact_global_cumsum_desc(
     value_col: str,
     key_col: str,
     out_col: str,
-    nblocks: int = 32,
 ) -> DataFrame:
     """Append ``out_col`` = EXACT running sum of ``value_col`` over
     rows ordered by (value_col DESC, key_col ASC) — the cumulative-sum
@@ -521,26 +584,14 @@ def exact_global_cumsum_desc(
     exact total of all strictly-higher blocks. Integer values ⇒
     associative ⇒ identical to the single-task global window at any
     parallelism. key_col must be unique (deterministic tiebreak)."""
-    df = _materialize_for_probes(df)
-    splits = _approx_splits(df, value_col, nblocks)
-    split_arr = _split_arr(splits)
-    blk = f"_blk_{out_col}"
-    blocked = df.withColumn(
-        blk, F.size(F.filter(split_arr, lambda s: s < F.col(value_col)))
-    )
-    sums = {
-        r[blk]: r["s"]
-        for r in blocked.groupBy(blk).agg(F.sum(value_col).alias("s")).collect()
-    }
-    offsets = {b: sum(s for bb, s in sums.items() if bb > b) for b in sums}
-    off_map = _offset_map(offsets)
-    w = (
-        Window.partitionBy(blk)
-        .orderBy(F.col(value_col).desc(), F.col(key_col))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = (F.sum(value_col).over(w) + off_map[F.col(blk)]).cast("long")
-    return blocked.withColumn(out_col, cum).drop(blk)
+    return _block_ranked(
+        df,
+        value_col,
+        [F.col(value_col).desc(), key_col],
+        [value_col],
+        [out_col],
+        descending=True,
+    )[0]
 
 
 def exact_global_rank(
@@ -548,43 +599,24 @@ def exact_global_rank(
     value_col: str,
     key_col: str,
     out_col: str,
-    nblocks: int = 32,
 ) -> DataFrame:
     """Append ``out_col`` = EXACT global 1-based rank of rows ordered
     by (value_col ASC, key_col ASC) — the distributed zipWithIndex
-    done without a single-partition window: row_number runs PER BLOCK
-    and the broadcast cumulative block sizes shift each block to its
-    global offset. key_col must be unique (deterministic total order);
-    integer value columns."""
-    df = _materialize_for_probes(df)
-    splits = _approx_splits(df, value_col, nblocks)
-    split_arr = _split_arr(splits)
-    blk = f"_blk_{out_col}"
-    blocked = df.withColumn(
-        blk, F.size(F.filter(split_arr, lambda s: s < F.col(value_col)))
-    )
-    sizes = sorted(
-        (r[blk], r["count"]) for r in blocked.groupBy(blk).count().collect()
-    )
-    offsets, total = {}, 0
-    for b, cnt in sizes:
-        offsets[b] = total
-        total += cnt
-    off_map = _offset_map(offsets)
-    rn = (
-        F.row_number().over(Window.partitionBy(blk).orderBy(value_col, key_col))
-        + off_map[F.col(blk)]
-    )
-    return blocked.withColumn(out_col, rn.cast("long")).drop(blk)
+    done without a single-partition window: the running count runs
+    PER BLOCK and the broadcast cumulative block sizes shift each
+    block to its global offset. key_col must be unique (deterministic
+    total order); integer value columns."""
+    return _block_ranked(
+        df, value_col, [value_col, key_col], [F.lit(1)], [out_col]
+    )[0]
 
 
 def exact_global_keyed_cumsum(
     df: DataFrame,
     order_col: str,
-    value_col: str,
+    value_col: str | Sequence[str],
     key_col: str,
-    out_col: str,
-    nblocks: int = 32,
+    out_col: str | Sequence[str],
 ) -> DataFrame:
     """Append ``out_col`` = EXACT running sum of ``value_col`` over
     rows ordered by (order_col ASC, key_col ASC) — the generalized
@@ -597,119 +629,19 @@ def exact_global_keyed_cumsum(
     single-task global window at any parallelism. key_col must be
     unique within the block order (deterministic tiebreak).
 
+    ``value_col`` and ``out_col`` may be equal-length sequences: N
+    running sums over the SAME axis in ONE pass (one materialize, one
+    split probe, one block collect, one window) — chaining N calls
+    pays each of those N times (agg_energy_distance sums four).
+
     >>> cdf = exact_global_keyed_cumsum(byval, "cents", "cnt", "cents", "cum")
+    >>> cdf = exact_global_keyed_cumsum(
+    ...     grid, "cents", ["c1", "c2"], "cents", ["cum1", "cum2"])
     """
-    df = _materialize_for_probes(df)
-    splits = _approx_splits(df, order_col, nblocks)
-    split_arr = _split_arr(splits)
-    blk = f"_blk_{out_col}"
-    blocked = df.withColumn(
-        blk, F.size(F.filter(split_arr, lambda s: s < F.col(order_col)))
-    )
-    sums = {
-        r[blk]: r["s"]
-        for r in blocked.groupBy(blk).agg(F.sum(value_col).alias("s")).collect()
-    }
-    offsets = {b: sum(s for bb, s in sums.items() if bb < b) for b in sums}
-    off_map = _offset_map(offsets)
-    w = (
-        Window.partitionBy(blk)
-        .orderBy(F.col(order_col), F.col(key_col))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = (F.sum(value_col).over(w) + off_map[F.col(blk)]).cast("long")
-    return blocked.withColumn(out_col, cum).drop(blk)
-
-
-def exact_global_keyed_cumsum_multi(
-    df: DataFrame,
-    order_col: str,
-    value_cols: "Sequence[str]",
-    key_col: str,
-    out_cols: "Sequence[str]",
-    nblocks: int = 32,
-) -> DataFrame:
-    """N exact running sums over the SAME (order_col, key_col) axis in
-    ONE block-ranked pass (r12) — the chained form
-    ``exact_global_keyed_cumsum(...cum1); exact_global_keyed_cumsum(
-    ...cum2); …`` re-materialized its input and re-ran the split
-    probe, the per-block sum collect and the window PER MEASURE
-    (agg_energy_distance chained four: four checkpoints, eight probe
-    jobs, four windows). Here: one materialize, one split probe, one
-    per-block sum collect covering every measure, one window pass
-    emitting all N columns. Result columns are bit-identical to the
-    chained form — the block assignment only balances work (the
-    running sums are exact at ANY blocking), and the window order
-    (order_col, key_col) is the same total order."""
-    assert len(value_cols) == len(out_cols) and value_cols
-    df = _materialize_for_probes(df)
-    splits = _approx_splits(df, order_col, nblocks)
-    split_arr = _split_arr(splits)
-    blk = f"_blk_{out_cols[0]}"
-    blocked = df.withColumn(
-        blk, F.size(F.filter(split_arr, lambda s: s < F.col(order_col)))
-    )
-    rows = blocked.groupBy(blk).agg(
-        *[F.sum(v).alias(f"_s{i}") for i, v in enumerate(value_cols)]
-    ).collect()
-    w = (
-        Window.partitionBy(blk)
-        .orderBy(F.col(order_col), F.col(key_col))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    out = blocked
-    for i, (v, o) in enumerate(zip(value_cols, out_cols)):
-        sums = {r[blk]: r[f"_s{i}"] for r in rows}
-        offsets = {b: sum(s for bb, s in sums.items() if bb < b) for b in sums}
-        off_map = _offset_map(offsets)
-        out = out.withColumn(
-            o, (F.sum(v).over(w) + off_map[F.col(blk)]).cast("long")
-        )
-    return out.drop(blk)
-
-
-def _stratified_offsets(
-    blocked: DataFrame, key_col: str, blk: str, measure
-) -> Column:
-    """(stratum, block) → exact offset of all strictly-lower blocks of
-    the SAME stratum, broadcast back as a map literal keyed by
-    ``stratum\\x1fblock``. Driver state is |strata|·nblocks entries —
-    bounded by the fixed key domain times the block count, never by
-    the corpus (the same contract as the global cores' offset maps).
-    ``measure`` is the per-group aggregate column (count or sum).
-
-    Contract: stratum keys must be NON-NULL (the lookup side's
-    ``concat_ws`` silently drops NULLs) and the map key is built from
-    Spark's OWN ``cast('string')`` of the key — never a Python repr,
-    which diverges for booleans/floats/dates. Both are enforced here:
-    the groupBy collects ``key_col.cast('string')`` so driver and
-    executor render the key identically, and a NULL key or NULL
-    measure raises instead of silently yielding NULL ranks."""
-    skey = f"_skey_{blk}"
-    rows = (
-        blocked.groupBy(F.col(key_col).cast("string").alias(skey), blk)
-        .agg(measure.alias("_m"))
-        .collect()
-    )
-    by_key: dict = {}
-    for r in rows:
-        if r[skey] is None or r["_m"] is None:
-            raise ValueError(
-                f"_stratified_offsets: NULL stratum key or measure in "
-                f"{key_col!r} (NULLs are dropped by the concat_ws lookup)"
-            )
-        by_key.setdefault(r[skey], []).append((r[blk], r["_m"]))
-    entries = []
-    for kv, lst in by_key.items():
-        total = 0
-        for b, m in sorted(lst):
-            entries.append((f"{kv}\x1f{b}", total))
-            total += int(m)
-    if not entries:
-        return F.create_map().cast("map<string,bigint>")
-    return F.create_map(
-        *[F.lit(x) for key, off in entries for x in (key, off)]
-    )
+    values = [value_col] if isinstance(value_col, str) else list(value_col)
+    outs = [out_col] if isinstance(out_col, str) else list(out_col)
+    assert len(values) == len(outs) and values
+    return _block_ranked(df, order_col, [order_col, key_col], values, outs)[0]
 
 
 def exact_stratified_rank(
@@ -718,7 +650,6 @@ def exact_stratified_rank(
     block_col: str,
     order_cols: list,
     out_col: str,
-    nblocks: int = 32,
 ) -> DataFrame:
     """Append ``out_col`` = EXACT 1-based rank WITHIN each ``key_col``
     stratum, rows ordered by ``order_cols`` — the per-stratum sibling
@@ -726,31 +657,18 @@ def exact_stratified_rank(
     plain ``PARTITION BY stratum`` window caps parallelism at the
     stratum count at ANY data size (the round-7 verdict's
     win_range_interval finding), while here the window partitions by
-    (stratum, block) — nblocks× the tasks. ``block_col`` must be an
+    (stratum, block) — _NBLOCKS× the tasks. ``block_col`` must be an
     INTEGER column MONOTONE in the ``order_cols`` order (equal values
     may tie — ties stay in one block, so cross-block order is total);
     split points come from one global percentile_approx (balance
-    only, correctness never depends on them).
+    only, correctness never depends on them). NULL stratum keys raise.
 
     >>> ranked = exact_stratified_rank(h, "event_type", "h32",
     ...                                ["hx", "event_id"], "pos")
     """
-    df = _materialize_for_probes(df)
-    splits = _approx_splits(df, block_col, nblocks)
-    split_arr = _split_arr(splits)
-    blk = f"_blk_{out_col}"
-    blocked = df.withColumn(
-        blk, F.size(F.filter(split_arr, lambda s: s < F.col(block_col)))
-    )
-    off_map = _stratified_offsets(
-        blocked, key_col, blk, F.count(F.lit(1)).cast("long")
-    )
-    w = Window.partitionBy(key_col, blk).orderBy(*order_cols)
-    lookup = F.concat_ws(
-        "\x1f", F.col(key_col).cast("string"), F.col(blk).cast("string")
-    )
-    rn = (F.row_number().over(w) + off_map[lookup]).cast("long")
-    return blocked.withColumn(out_col, rn).drop(blk)
+    return _block_ranked(
+        df, block_col, order_cols, [F.lit(1)], [out_col], stratum=key_col
+    )[0]
 
 
 def exact_stratified_cumsum(
@@ -760,7 +678,6 @@ def exact_stratified_cumsum(
     value_col: str,
     out_col: str,
     tiebreak_col: str | None = None,
-    nblocks: int = 32,
 ) -> DataFrame:
     """Append ``out_col`` = EXACT inclusive running sum of
     ``value_col`` WITHIN each ``key_col`` stratum, rows ordered by
@@ -769,31 +686,14 @@ def exact_stratified_cumsum(
     rationale as :func:`exact_stratified_rank`. Blocks split on the
     integer ``order_col`` axis; integer measures ⇒ associative ⇒
     identical to the single-task-per-stratum window at any
-    parallelism.
+    parallelism. NULL stratum keys raise.
 
     >>> c = exact_stratified_cumsum(t, "lang", "doc_id", "n_tok", "cum")
     """
-    df = _materialize_for_probes(df)
-    splits = _approx_splits(df, order_col, nblocks)
-    split_arr = _split_arr(splits)
-    blk = f"_blk_{out_col}"
-    blocked = df.withColumn(
-        blk, F.size(F.filter(split_arr, lambda s: s < F.col(order_col)))
-    )
-    off_map = _stratified_offsets(
-        blocked, key_col, blk, F.sum(value_col).cast("long")
-    )
     order = [order_col] + ([tiebreak_col] if tiebreak_col else [])
-    w = (
-        Window.partitionBy(key_col, blk)
-        .orderBy(*[F.col(c) for c in order])
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    lookup = F.concat_ws(
-        "\x1f", F.col(key_col).cast("string"), F.col(blk).cast("string")
-    )
-    cum = (F.sum(value_col).over(w) + off_map[lookup]).cast("long")
-    return blocked.withColumn(out_col, cum).drop(blk)
+    return _block_ranked(
+        df, order_col, order, [value_col], [out_col], stratum=key_col
+    )[0]
 
 
 # --------------------------------------------------------------------------
@@ -1241,7 +1141,9 @@ def _jaccard_parts(
     # plan (candidate stage + bitmap refine) and shared with the
     # containment twin
     grams = _staged_gram_sets(df, id_col, text_col, char_k)
-    inv = grams.select(
+    # NULL ids pair with nothing: least/greatest below skip NULL, so a
+    # NULL posting would turn into the self-pair (x, x) with J = 1.0
+    inv = grams.where(F.col(id_col).isNotNull()).select(
         id_col, F.size("gs").alias("_jp_n"), F.explode("gs").alias("_jp_g")
     )
     gdf = inv.groupBy("_jp_g").agg(F.count(F.lit(1)).alias("_jp_gdf"))

@@ -437,7 +437,7 @@ def orders_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers ⇒ associative ⇒ identical to the single-task plan, at
     32-way parallelism. Two tiny collects (splits, 32 block sums)
     are scalars, not data."""
-    from hadoop_deliver_spark.operators.ranking import exact_global_cumsum_desc
+    from hadoop_deliver_spark.api import exact_global_cumsum_desc
 
     li = tbl(spark, sf_dir, "lineitem")
     rev = li.groupBy("l_partkey").agg(

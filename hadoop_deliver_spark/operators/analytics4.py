@@ -241,7 +241,7 @@ def llm_curriculum_stages(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactness, NO whole-corpus single-partition window (the oracle
     states the same result as a global ntile). Per-stage bounds and
     char totals feed the scheduler."""
-    from hadoop_deliver_spark.operators.ranking import exact_global_ntile
+    from hadoop_deliver_spark.api import exact_global_ntile
 
     d = tbl(spark, sf_dir, "documents").select("doc_id", "n_chars")
     staged = exact_global_ntile(d, "n_chars", "doc_id", 4, "stage")

@@ -588,9 +588,9 @@ def llm_doc_length_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     or a hash-partitioned shuffle; nothing funnels through one task.
     Matches the `ntile(10) OVER (ORDER BY n_chars, doc_id)` oracle
     hash-exactly because ties on n_chars share a block and doc_id is
-    unique. (Implementation shared via operators/ranking.py —
+    unique. (Implementation: api.exact_global_ntile —
     events_rfm_scores runs the same core three times.)"""
-    from hadoop_deliver_spark.operators.ranking import exact_global_ntile
+    from hadoop_deliver_spark.api import exact_global_ntile
 
     d = tbl(spark, sf_dir, "documents").select("doc_id", "n_chars")
     return exact_global_ntile(d, "n_chars", "doc_id", 10, "decile").select(

@@ -169,7 +169,7 @@ def orders_global_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
     monotonically_increasing_id when ids must be contiguous and
     partition-layout-independent (mi_id is neither — fn_misc keeps
     it rows-only for exactly that reason)."""
-    from hadoop_deliver_spark.operators.ranking import exact_global_rank
+    from hadoop_deliver_spark.api import exact_global_rank
 
     o = tbl(spark, sf_dir, "orders").select(
         "o_orderkey",

@@ -1,7 +1,7 @@
 """§2 extensions, fifteenth wave — quantile scoring & kNN labeling.
 
-events_rfm_scores runs the shared exact-ntile core (operators/
-ranking.py — the scale-safe global quantile construction) three
+events_rfm_scores runs the shared exact-ntile core (api.
+exact_global_ntile — the scale-safe global quantile construction) three
 times over integer metrics; llm_knn_classify extends the broadcast-
 probe brute-force shape (llm_sim_bruteforce) from neighbor listing to
 majority-vote label assignment.
@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hadoop_deliver_spark.operators.llm import _norm, _with_cosine, _COS_SQL
-from hadoop_deliver_spark.operators.ranking import exact_global_ntile
+from hadoop_deliver_spark.api import exact_global_ntile
 from hadoop_deliver_spark.registry import register
 from hadoop_deliver_spark.tables import tbl
 
@@ -45,7 +45,7 @@ def events_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus max day), Frequency (event count) and Monetary (exact
     centi-unit purchase total — floor-then-BIGINT, order-free), each
     assigned an exact global quintile. The quintiles use the shared
-    block-ranked ntile core (operators/ranking.py) — three passes,
+    block-ranked ntile core (api.exact_global_ntile) — three passes,
     none of which funnels the table through a single-partition
     window, reproducing `ntile(5) OVER (ORDER BY metric, user_id)`
     hash-exactly. Metrics are all integers, so there is no float

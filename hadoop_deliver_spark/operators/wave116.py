@@ -100,7 +100,7 @@ def agg_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one 2-count grid reduce, two block-ranked cumsums +
     one block-ranked rank, a shuffle equi-join on rank, one reduce."""
     from hadoop_deliver_spark.api import (
-        exact_global_keyed_cumsum_multi,
+        exact_global_keyed_cumsum,
         exact_global_rank,
     )
 
@@ -125,7 +125,7 @@ def agg_wasserstein_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r12: both running sums share the (cents, cents) axis — one
     # multi-measure block-ranked pass (see agg_energy_distance).
-    cdf = exact_global_keyed_cumsum_multi(
+    cdf = exact_global_keyed_cumsum(
         grid, "cents", ["c1", "c2"], "cents", ["cum1", "cum2"]
     )
     ranked = exact_global_rank(cdf, "cents", "cents", "r")
@@ -210,7 +210,7 @@ def agg_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one 2-count grid reduce, four block-ranked cumsums
     on the same grid, one reduce. No pairwise join anywhere."""
-    from hadoop_deliver_spark.api import exact_global_keyed_cumsum_multi
+    from hadoop_deliver_spark.api import exact_global_keyed_cumsum
 
     o = tbl(spark, sf_dir, "orders")
     v = o.select(
@@ -238,7 +238,7 @@ def agg_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # multi-measure block-ranked pass replaces the four chained cores
     # (one materialize + one split probe + one window instead of four
     # of each); results bit-identical (exact sums at any blocking).
-    cdf = exact_global_keyed_cumsum_multi(
+    cdf = exact_global_keyed_cumsum(
         grid,
         "cents",
         ["c1", "c2", "v1", "v2"],

@@ -192,7 +192,7 @@ def agg_kuiper_2sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one 2-count grid reduce, two block-ranked cumsums,
     one integer max reduce, closed-form scalars."""
-    from hadoop_deliver_spark.api import exact_global_keyed_cumsum_multi
+    from hadoop_deliver_spark.api import exact_global_keyed_cumsum
 
     o = tbl(spark, sf_dir, "orders")
     v = o.select(
@@ -212,7 +212,7 @@ def agg_kuiper_2sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c2").cast("long").alias("n2"),
     )
     # r12: one multi-measure block-ranked pass for both CDFs
-    cdf = exact_global_keyed_cumsum_multi(
+    cdf = exact_global_keyed_cumsum(
         grid, "cents", ["c1", "c2"], "cents", ["cum1", "cum2"]
     )
     dev = cdf.crossJoin(F.broadcast(n)).agg(

@@ -358,7 +358,7 @@ def llm_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("n_new", F.lit(0)).cast("long").alias("n_new"),
     )
     # r12: one multi-measure block-ranked pass for both running sums
-    cum = api.exact_global_keyed_cumsum_multi(
+    cum = api.exact_global_keyed_cumsum(
         joined, "doc_id", ["n_toks", "n_new"], "doc_id", ["n_cum", "v_cum"]
     )
     y, x = F.log(F.col("v_cum")), F.log(F.col("n_cum"))

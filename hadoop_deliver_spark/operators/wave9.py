@@ -105,7 +105,7 @@ def agg_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # r12: one multi-measure block-ranked pass for both CDFs
-    cum = api.exact_global_keyed_cumsum_multi(
+    cum = api.exact_global_keyed_cumsum(
         byval, "cents", ["ca", "cb"], "cents", ["cum_a", "cum_b"]
     )
     tot = byval.agg(

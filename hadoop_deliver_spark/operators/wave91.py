@@ -19,6 +19,10 @@ from pyspark.sql import functions as F
 from hadoop_deliver_spark.registry import register
 from hadoop_deliver_spark.tables import dec2, tbl
 
+#: driver-path gate of ts_qn_scale: most daily rows collected for the
+#: NumPy pair-difference selection
+_QN_DRIVER_MAX_DAYS = 4096
+
 
 @register(
     "ts_qn_scale",
@@ -156,7 +160,7 @@ def ts_qn_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     # statistic in NumPy (identical integer-rank semantics: sorted
     # ascending, element k). The distributed pair join below stays as
     # the past-gate fallback and the formulation of record.
-    if 0 < n_days <= 4096:
+    if 0 < n_days <= _QN_DRIVER_MAX_DAYS:
         import numpy as np
 
         _y = np.asarray(

@@ -4,9 +4,11 @@ at the sf dir given as argv[1] (default /root/testdata/sf0.01)
 with the driver-style exact comparator. Rows-only queries are executed
 and schema-checked. This is the strongest local approximation of the
 round driver's t2 gate."""
-import importlib.util, sys, time
-sys.path.insert(0, "/root/repo")
-spec = importlib.util.spec_from_file_location("__spark_entry__", "/root/repo/__spark_entry__.py")
+import importlib.util, os, sys, time
+# the checkout this script lives in, not whichever one is installed
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+spec = importlib.util.spec_from_file_location("__spark_entry__", os.path.join(REPO, "__spark_entry__.py"))
 mod = importlib.util.module_from_spec(spec); spec.loader.exec_module(mod)
 from pyspark.sql import SparkSession
 # vanilla SQL confs; the JVM size alone is pinned (local-mode default is a
@@ -65,7 +67,7 @@ for f in fails: print("FAIL:", f)
 # entries also pay one-time fixture staging inside their spark share). Top
 # offenders drive the optimization loop the round verdicts ask for.
 import json
-with open("/root/repo/TIMINGS.json", "w") as fh:
+with open(os.path.join(REPO, "TIMINGS.json"), "w") as fh:
     json.dump({"sf": sf, "total_sec": round(time.time() - t0, 1),
                "per_query_sec": timings}, fh, indent=1, sort_keys=True)
 top = sorted(timings.items(), key=lambda kv: -kv[1]["total"])[:20]

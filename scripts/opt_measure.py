@@ -15,7 +15,10 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, not whichever one is installed
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PLANS = os.path.join(REPO, "plans", "r12")
+sys.path.insert(0, REPO)
 
 args = sys.argv[1:]
 sf = "/root/testdata/sf0.1"
@@ -44,7 +47,7 @@ spark = (
 )
 spark.sparkContext.setLogLevel("ERROR")
 
-os.makedirs("/root/repo/plans/r12", exist_ok=True)
+os.makedirs(PLANS, exist_ok=True)
 
 for name in args:
     q = REG[name]
@@ -58,7 +61,7 @@ for name in args:
     spark.sparkContext.setJobDescription(None)
     if plan_tag:
         df = q.fn(spark, sf)
-        with open(f"/root/repo/plans/r12/{name}_{plan_tag}.txt", "w") as fh:
+        with open(os.path.join(PLANS, f"{name}_{plan_tag}.txt"), "w") as fh:
             fh.write(df._jdf.queryExecution().explainString(
                 spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
                     "formatted")))

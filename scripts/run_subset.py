@@ -3,10 +3,12 @@
 Usage: python scripts/run_subset.py [--sf DIR] name [name ...]
 The dev loop for new operators — same comparator as the driver sim.
 """
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, not whichever one is installed
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 args = sys.argv[1:]
 sf = "/root/testdata/sf0.001"

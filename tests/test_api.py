@@ -127,6 +127,63 @@ def test_exact_global_rank_custom_columns(spark):
     assert got == [("a", 3, 1), ("a", 5, 3), ("b", 3, 2), ("c", 9, 4)]
 
 
+def _jobs_per_call(spark, build):
+    """Spark jobs one call runs: planning (probes) plus the final
+    collect, read from the status tracker under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        build().collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+# Spark jobs per call (probes while planning plus the final collect),
+# measured when each function still had its own block-ranked body;
+# one shared core may not run more
+_RANK_CORE_JOBS = {
+    "ntile": 6,
+    "rank": 6,
+    "cumsum_desc": 6,
+    "keyed_cumsum": 6,
+    "keyed_cumsum_multi": 6,
+    "stratified_rank": 6,
+    "stratified_cumsum": 6,
+}
+
+
+def test_block_ranked_cores_run_no_more_jobs(spark):
+    df = spark.createDataFrame(
+        [(i, i % 7, i % 3, f"s{i % 4}") for i in range(60)],
+        "k long, o long, v long, s string",
+    )
+    calls = {
+        "ntile": lambda: api.exact_global_ntile(df, "o", "k", 5, "b"),
+        "rank": lambda: api.exact_global_rank(df, "o", "k", "r"),
+        "cumsum_desc": lambda: api.exact_global_cumsum_desc(df, "o", "k", "c"),
+        "keyed_cumsum": lambda: api.exact_global_keyed_cumsum(
+            df, "o", "v", "k", "c"
+        ),
+        "keyed_cumsum_multi": lambda: api.exact_global_keyed_cumsum(
+            df, "o", ["v", "k"], "k", ["c1", "c2"]
+        ),
+        "stratified_rank": lambda: api.exact_stratified_rank(
+            df, "s", "o", ["o", "k"], "r"
+        ),
+        "stratified_cumsum": lambda: api.exact_stratified_cumsum(
+            df, "s", "o", "v", "c", tiebreak_col="k"
+        ),
+    }
+    got = {name: _jobs_per_call(spark, fn) for name, fn in calls.items()}
+    assert all(got[n] <= _RANK_CORE_JOBS[n] for n in got), got
+
+
 def test_asof_join_backward_and_forward(spark):
     quotes = spark.createDataFrame(
         [("A", 10, 1.0), ("A", 20, 2.0), ("B", 15, 9.0)],
@@ -370,6 +427,15 @@ def test_near_dup_pairs_on_nulls_and_empty_frame(spark, refine_path):
         "pk long, body string",
     )
     assert _near_dup_pairs(df) == ([], [(3, 1)])
+    # NULL ids whose gram sets differ in size from their near-dups:
+    # the candidate pair's least/greatest skip the NULL, so a NULL
+    # posting would turn into the self-pair (x, x) with J = 1.0
+    t = "abcdefghijklmnopqrstuvwxyz0123456789"
+    df = spark.createDataFrame(
+        [(1, t), (None, t + "Q"), (None, t + "QR"), (3, t[:-1] + "z")],
+        "pk long, body string",
+    )
+    assert _near_dup_pairs(df)[0] == [(1, 3)]
     empty = spark.createDataFrame([], "pk long, body string")
     assert _near_dup_pairs(empty) == ([], [])
 

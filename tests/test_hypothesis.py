@@ -262,32 +262,52 @@ def test_interpolation_equals_duckdb_on_random_series(spark, seed):
     assert_frames_match(got, want, f"interp seed={seed}")
 
 
+def _nblocks(n):
+    """Run the block-ranked cores with at most ``n`` blocks (a
+    context manager; hypothesis tests cannot take monkeypatch)."""
+    from unittest import mock
+
+    from hadoop_deliver_spark import api
+
+    return mock.patch.object(api, "_NBLOCKS", n)
+
+
+def _maybe_null(rng, null_pct):
+    """A duplicate-heavy order value, NULL with probability
+    ``null_pct`` %."""
+    return None if rng.randrange(100) < null_pct else rng.randint(0, 9)
+
+
 @settings(max_examples=5, deadline=None)
 @given(
     seed=st.integers(min_value=0, max_value=2**31 - 1),
     n_rows=st.sampled_from([3, 17, 40, 101]),
     n_buckets=st.sampled_from([4, 5, 10]),
+    null_pct=st.sampled_from([0, 20, 100]),
 )
-def test_exact_ntile_core_equals_window_ntile(spark, seed, n_rows, n_buckets):
-    """The shared block-ranked ntile core (operators/ranking.py) must
+def test_exact_ntile_core_equals_window_ntile(
+    spark, seed, n_rows, n_buckets, null_pct
+):
+    """api.exact_global_ntile (the shared block-ranked core) must
     reproduce `ntile(n) OVER (ORDER BY value, key)` exactly — for any
     row count (including fewer rows than buckets), duplicate-heavy
-    values, and any bucket count."""
+    values, NULL values (sorted first), and any bucket count."""
     import random
 
     from pyspark.sql import Window
 
-    from hadoop_deliver_spark.operators.ranking import exact_global_ntile
+    from hadoop_deliver_spark.api import exact_global_ntile
 
     rng = random.Random(seed)
-    rows = [(i, rng.randint(0, 9)) for i in range(n_rows)]
+    rows = [(i, _maybe_null(rng, null_pct)) for i in range(n_rows)]
     df = spark.createDataFrame(rows, "key long, value long")
-    got = {
-        (r.key, r.bkt)
-        for r in exact_global_ntile(
-            df, "value", "key", n_buckets, "bkt", nblocks=4
-        ).collect()
-    }
+    with _nblocks(4):
+        got = {
+            (r.key, r.bkt)
+            for r in exact_global_ntile(
+                df, "value", "key", n_buckets, "bkt"
+            ).collect()
+        }
     w = Window.orderBy("value", "key")
     want = {
         (r.key, r.bkt)
@@ -372,28 +392,28 @@ def test_url_canonicalizer_collapses_variants(spark, seed):
 @given(
     seed=st.integers(min_value=0, max_value=2**31 - 1),
     n_rows=st.integers(min_value=1, max_value=200),
+    null_pct=st.sampled_from([0, 20, 100]),
 )
-def test_exact_cumsum_core_equals_window_cumsum(spark, seed, n_rows):
-    """The block-ranked descending cumsum core (operators/ranking.py,
-    used by orders_pareto_abc) must reproduce
+def test_exact_cumsum_core_equals_window_cumsum(spark, seed, n_rows, null_pct):
+    """api.exact_global_cumsum_desc (the block-ranked core, used by
+    orders_pareto_abc) must reproduce
     `sum(value) OVER (ORDER BY value DESC, key ROWS UNBOUNDED
-    PRECEDING)` exactly — duplicate-heavy values, tiny and lopsided
-    block distributions included."""
+    PRECEDING)` exactly — duplicate-heavy values, NULL values (sorted
+    last), tiny and lopsided block distributions included."""
     import random
 
     from pyspark.sql import Window
 
-    from hadoop_deliver_spark.operators.ranking import exact_global_cumsum_desc
+    from hadoop_deliver_spark.api import exact_global_cumsum_desc
 
     rng = random.Random(seed)
-    rows = [(i, rng.randint(0, 9)) for i in range(n_rows)]
+    rows = [(i, _maybe_null(rng, null_pct)) for i in range(n_rows)]
     df = spark.createDataFrame(rows, "key long, value long")
-    got = {
-        (r.key, r.cum)
-        for r in exact_global_cumsum_desc(
-            df, "value", "key", "cum", nblocks=4
-        ).collect()
-    }
+    with _nblocks(4):
+        got = {
+            (r.key, r.cum)
+            for r in exact_global_cumsum_desc(df, "value", "key", "cum").collect()
+        }
     w = (
         Window.orderBy(F.col("value").desc(), F.col("key"))
         .rowsBetween(Window.unboundedPreceding, 0)
@@ -411,24 +431,27 @@ def test_exact_cumsum_core_equals_window_cumsum(spark, seed, n_rows):
 @given(
     seed=st.integers(min_value=0, max_value=2**31 - 1),
     n_rows=st.integers(min_value=1, max_value=150),
+    null_pct=st.sampled_from([0, 20, 100]),
 )
-def test_exact_rank_core_equals_window_row_number(spark, seed, n_rows):
-    """exact_global_rank (operators/ranking.py, used by
+def test_exact_rank_core_equals_window_row_number(spark, seed, n_rows, null_pct):
+    """api.exact_global_rank (the block-ranked core, used by
     orders_global_seq) must reproduce `row_number() OVER (ORDER BY
-    value, key)` exactly, duplicate-heavy values included."""
+    value, key)` exactly, duplicate-heavy and NULL values (sorted
+    first) included."""
     import random
 
     from pyspark.sql import Window
 
-    from hadoop_deliver_spark.operators.ranking import exact_global_rank
+    from hadoop_deliver_spark.api import exact_global_rank
 
     rng = random.Random(seed)
-    rows = [(i, rng.randint(0, 9)) for i in range(n_rows)]
+    rows = [(i, _maybe_null(rng, null_pct)) for i in range(n_rows)]
     df = spark.createDataFrame(rows, "key long, value long")
-    got = {
-        (r.key, r.seq)
-        for r in exact_global_rank(df, "value", "key", "seq", nblocks=4).collect()
-    }
+    with _nblocks(4):
+        got = {
+            (r.key, r.seq)
+            for r in exact_global_rank(df, "value", "key", "seq").collect()
+        }
     w = Window.orderBy("value", "key")
     want = {
         (r.key, r.seq)
@@ -525,7 +548,7 @@ def test_ranking_cores_survive_empty_and_tiny_inputs(spark):
     the splits collect must degrade to a single block instead of a
     driver-side TypeError. Covers all three cores at n=0 and n=1
     (below every fuzz range)."""
-    from hadoop_deliver_spark.operators.ranking import (
+    from hadoop_deliver_spark.api import (
         exact_global_cumsum_desc,
         exact_global_ntile,
         exact_global_rank,
@@ -985,16 +1008,142 @@ def test_keyed_cumsum_matches_global_window(spark, rows, nblocks):
     df = spark.createDataFrame(
         data, "k INT, ord INT, val LONG"
     )
-    got = {
-        r["k"]: r["cum"]
-        for r in exact_global_keyed_cumsum(
-            df, "ord", "val", "k", "cum", nblocks=nblocks
-        ).collect()
-    }
+    with _nblocks(nblocks):
+        got = {
+            r["k"]: r["cum"]
+            for r in exact_global_keyed_cumsum(
+                df, "ord", "val", "k", "cum"
+            ).collect()
+        }
     run, want = 0, {}
     for k, o, v in sorted(data, key=lambda t: (t[1], t[0])):
         run += v
         want[k] = run
+    assert got == want
+
+
+_STRATIFIED_ROWS = st.lists(
+    st.tuples(
+        st.sampled_from(["a", "b", "c"]),
+        st.integers(min_value=-20, max_value=20),
+        st.integers(min_value=-5, max_value=20),
+    ),
+    min_size=0,
+    max_size=60,
+)
+
+
+def _running(rows, key, value):
+    """{k: running sum of value(row)} over ``rows`` sorted by ``key``,
+    restarting per stratum (row[1]) — the single-task window."""
+    run, want = {}, {}
+    for r in sorted(rows, key=key):
+        run[r[1]] = run.get(r[1], 0) + value(r)
+        want[r[0]] = run[r[1]]
+    return want
+
+
+@settings(max_examples=8, deadline=None)
+@given(rows=_STRATIFIED_ROWS, nblocks=st.sampled_from([1, 2, 4, 32]))
+def test_stratified_rank_matches_window(spark, rows, nblocks):
+    """api.exact_stratified_rank must equal `row_number() OVER
+    (PARTITION BY s ORDER BY o, k)` for ANY rows and block count —
+    empty input, duplicate order values and one-row strata
+    included."""
+    from hadoop_deliver_spark.api import exact_stratified_rank
+
+    data = [(i, s, o) for i, (s, o, _) in enumerate(rows)]
+    df = spark.createDataFrame(data, "k INT, s STRING, o INT")
+    with _nblocks(nblocks):
+        got = {
+            r["k"]: r["r"]
+            for r in exact_stratified_rank(
+                df, "s", "o", ["o", "k"], "r"
+            ).collect()
+        }
+    assert got == _running(data, lambda t: (t[2], t[0]), lambda t: 1)
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    rows=_STRATIFIED_ROWS,
+    nblocks=st.sampled_from([1, 2, 4, 32]),
+    tiebreak=st.booleans(),
+)
+def test_stratified_cumsum_matches_window(spark, rows, nblocks, tiebreak):
+    """api.exact_stratified_cumsum must equal `sum(v) OVER (PARTITION
+    BY s ORDER BY o[, k] ROWS UNBOUNDED PRECEDING)` for ANY rows and
+    block count. Without the tiebreak the order value is made unique
+    per stratum (the caller's contract)."""
+    from hadoop_deliver_spark.api import exact_stratified_cumsum
+
+    if not tiebreak:
+        rows = list({(s, o): (s, o, v) for s, o, v in rows}.values())
+    data = [(i, s, o, v) for i, (s, o, v) in enumerate(rows)]
+    df = spark.createDataFrame(data, "k INT, s STRING, o INT, v LONG")
+    with _nblocks(nblocks):
+        got = {
+            r["k"]: r["cum"]
+            for r in exact_stratified_cumsum(
+                df, "s", "o", "v", "cum",
+                tiebreak_col="k" if tiebreak else None,
+            ).collect()
+        }
+    assert got == _running(data, lambda t: (t[2], t[0]), lambda t: t[3])
+
+
+def test_stratified_rank_and_cumsum_reject_null_stratum(spark):
+    """A NULL stratum key would silently drop out of the offset
+    lookup, so both stratified cores raise instead."""
+    import pytest
+
+    from hadoop_deliver_spark.api import (
+        exact_stratified_cumsum,
+        exact_stratified_rank,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "a", 3, 1), (2, None, 4, 2)], "k INT, s STRING, o INT, v LONG"
+    )
+    with pytest.raises(ValueError, match="NULL stratum"):
+        exact_stratified_rank(df, "s", "o", ["o", "k"], "r")
+    with pytest.raises(ValueError, match="NULL stratum"):
+        exact_stratified_cumsum(df, "s", "o", "v", "c", tiebreak_col="k")
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.integers(min_value=-50, max_value=50),
+            st.integers(min_value=0, max_value=20),
+            st.integers(min_value=-20, max_value=20),
+        ),
+        min_size=0,
+        max_size=60,
+    ),
+    nblocks=st.sampled_from([1, 2, 4, 32]),
+)
+def test_multi_measure_keyed_cumsum_matches_window(spark, rows, nblocks):
+    """The multi-measure keyed cumsum (one block-ranked pass, N
+    running sums) must equal N single-task global running sums over
+    (ord, k) — empty input and duplicate order values included."""
+    from hadoop_deliver_spark.api import exact_global_keyed_cumsum
+
+    data = [(i, o, v, w) for i, (o, v, w) in enumerate(rows)]
+    df = spark.createDataFrame(data, "k INT, ord INT, v LONG, w LONG")
+    with _nblocks(nblocks):
+        got = {
+            r["k"]: (r["cv"], r["cw"])
+            for r in exact_global_keyed_cumsum(
+                df, "ord", ["v", "w"], "k", ["cv", "cw"]
+            ).collect()
+        }
+    run_v = run_w = 0
+    want = {}
+    for k, o, v, w in sorted(data, key=lambda t: (t[1], t[0])):
+        run_v, run_w = run_v + v, run_w + w
+        want[k] = (run_v, run_w)
     assert got == want
 
 

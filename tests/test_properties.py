@@ -1773,15 +1773,10 @@ def test_multimodal_stub_is_unconditional(spark, duck, sf_dir, monkeypatch):
 _COLLECT_OK = {
     # 1-scalar fixpoint probe per CC round
     ("api.py", "connected_components"),
-    # ≤ nblocks−1 split points / ≤ nblocks block sizes (block-ranked cores)
+    # ≤ _NBLOCKS−1 split points / ≤ |strata|·_NBLOCKS per-block
+    # aggregate rows (the one block-ranked core)
     ("api.py", "_approx_splits"),
-    ("api.py", "exact_global_ntile"),
-    ("api.py", "exact_global_cumsum_desc"),
-    ("api.py", "exact_global_keyed_cumsum"),
-    ("api.py", "exact_global_keyed_cumsum_multi"),
-    ("api.py", "exact_global_rank"),
-    # |strata|·nblocks offset rows (stratified block-ranked cores)
-    ("api.py", "_stratified_offsets"),
+    ("api.py", "_block_ranked"),
     # unkeyed path only: one row per calendar day of boundary points
     # (keyed path uses a partitioned window, no collect)
     ("api.py", "concurrency_sweep"),
@@ -2560,6 +2555,20 @@ def test_passing_bablok_past_gate_matches_driver_path(
         df = wave162.ts_passing_bablok(spark, sf_dir)
     assert max(sizes, default=0) < n_days, "daily series collected past gate"
     assert_frames_match(df.toPandas(), want, "ts_passing_bablok")
+
+
+def test_qn_scale_past_gate_matches_driver_path(spark, sf_dir, monkeypatch):
+    from hadoop_deliver_spark.operators import wave91
+    from tests.parity import assert_frames_match
+
+    want = wave91.ts_qn_scale(spark, sf_dir).toPandas()
+    n_days = int(want["n_days"][0])
+    monkeypatch.setattr(wave91, "_QN_DRIVER_MAX_DAYS", n_days - 1)
+    with monkeypatch.context() as m:
+        sizes = _collect_sizes(m, tbl(spark, sf_dir, "orders"))
+        df = wave91.ts_qn_scale(spark, sf_dir)
+    assert max(sizes, default=0) < n_days, "daily series collected past gate"
+    assert_frames_match(df.toPandas(), want, "ts_qn_scale")
 
 
 def test_arrow_refine_past_gate_matches_driver_path(
