@@ -475,11 +475,16 @@ def _block_ranked(
     window at any blocking; the split points only balance work.
     Driver state is |strata|·_NBLOCKS entries, never the corpus.
 
+    NULL measures count as the window counts them: a row's sum is
+    NULL only while no non-NULL measure precedes it in its stratum.
+    Each block's offset is NULL when no earlier block holds one, and
+    a block whose own frame is still all NULL takes the offset alone.
+
     Stratum contract: the offset map is keyed by Spark's OWN
     ``cast('string')`` of the stratum on both sides (never a Python
     repr, which diverges for booleans/floats/dates), and a NULL
-    stratum key or NULL per-block measure raises instead of silently
-    yielding NULLs (the ``concat_ws`` lookup drops NULLs)."""
+    stratum key raises instead of silently yielding NULLs (the
+    ``concat_ws`` lookup drops NULLs)."""
     df = _materialize_for_probes(df)
     splits = _approx_splits(df, split_col, _NBLOCKS)
     # typed even when empty: a bare F.array() is array<null>, which
@@ -502,28 +507,32 @@ def _block_ranked(
         key_type = "string"
     rows = (
         blocked.groupBy(*groups)
-        .agg(*[F.sum(m).alias(f"_s{i}") for i, m in enumerate(measures)])
+        .agg(
+            *[F.sum(m).alias(f"_s{i}") for i, m in enumerate(measures)],
+            *[F.count(m).alias(f"_c{i}") for i, m in enumerate(measures)],
+        )
         .collect()
     )
     by_key: dict = {}
     for r in rows:
         k = None if stratum is None else r["_k"]
-        sums = [r[f"_s{i}"] for i in range(len(measures))]
-        if stratum is not None and (k is None or None in sums):
+        if stratum is not None and k is None:
             raise ValueError(
-                f"NULL stratum key or measure in {stratum!r} (the "
-                f"concat_ws offset lookup drops NULLs)"
+                f"NULL stratum key in {stratum!r} (the concat_ws offset "
+                f"lookup drops NULLs)"
             )
+        sums = [(r[f"_s{i}"], r[f"_c{i}"]) for i in range(len(measures))]
         by_key.setdefault(k, []).append((r[blk], sums))
     offsets: list[list] = [[] for _ in measures]
     total = 0
     for k, blocks in by_key.items():
-        run = [0] * len(measures)
+        run, seen = [0] * len(measures), [0] * len(measures)
         for b, sums in sorted(blocks, reverse=descending):
             at = b if stratum is None else f"{k}\x1f{b}"
-            for i, s in enumerate(sums):
-                offsets[i].append((at, int(run[i])))
+            for i, (s, c) in enumerate(sums):
+                offsets[i].append((at, int(run[i]) if seen[i] else None))
                 run[i] += s or 0
+                seen[i] += c
         total += run[0]
     w = (
         Window.partitionBy(*part)
@@ -535,13 +544,18 @@ def _block_ranked(
         # typed even when empty (an empty input): a bare F.create_map()
         # is map<void,void>, which the lookup key cannot index
         off_map = (
-            F.create_map(*[F.lit(x) for kv in offs for x in kv])
+            F.create_map(
+                *[
+                    x
+                    for at, v in offs
+                    for x in (F.lit(at), F.lit(v).cast("long"))
+                ]
+            )
             if offs
             else F.create_map().cast(f"map<{key_type},bigint>")
         )
-        out = out.withColumn(
-            o, (F.sum(m).over(w) + off_map[lookup]).cast("long")
-        )
+        cum, off = F.sum(m).over(w), off_map[lookup]
+        out = out.withColumn(o, F.coalesce(cum + off, cum, off).cast("long"))
     return out.drop(blk), total
 
 
@@ -2817,13 +2831,12 @@ def winnow_fingerprints(
 
 
 #: dense-path gates for the co-membership neighbor-bitmap core
-#: (:func:`co_membership_edges` / :func:`co_membership_degrees`): the
-#: per-id neighbor bitmap is ⌈(max_id+1)/64⌉ longs wide (cap: 4096
-#: words = 32 KiB/row, i.e. ids < 262 144), and the per-block
-#: membership bitmaps are BROADCAST (n_blocks · n_chunks longs within
-#: :data:`_BROADCAST_MAX_WORDS`). Past either gate the core falls back
-#: to the block-equi-join + distinct formulation, which never
-#: materializes anything O(|V|)-wide.
+#: (:func:`co_membership_graph`): the per-id neighbor bitmap is
+#: ⌈(max_id+1)/64⌉ longs wide (cap: 4096 words = 32 KiB/row, i.e.
+#: ids < 262 144), and the per-block membership bitmaps are BROADCAST
+#: (n_blocks · n_chunks longs within :data:`_BROADCAST_MAX_WORDS`).
+#: Past either gate the core falls back to the block-equi-join +
+#: distinct formulation, which never materializes anything O(|V|)-wide.
 _NEIGHBOR_BITMAP_MAX_CHUNKS = 1 << 12
 
 #: 64 single-bit masks as a literal column (signed-long bit 63), so
@@ -2871,7 +2884,7 @@ def neighbor_bitmaps(
     sharing at least one ``block_col`` value with it (the
     co-membership / co-activity adjacency row). ``id_col`` must hold
     non-null integral ids in ``[0, 64·n_chunks)`` — the caller gates
-    (see :func:`co_membership_edges`). ``du`` need NOT be
+    (see :func:`co_membership_graph`). ``du`` need NOT be
     de-duplicated: bit_or is idempotent, so the (block, id) distinct
     shuffle the join formulation pays is skipped entirely.
 
@@ -2960,28 +2973,46 @@ def _co_membership_edges_join(
     )
 
 
-def co_membership_edges(
+def co_membership_graph(
     du: DataFrame, block_col: str, id_col: str
-) -> DataFrame:
-    """(u, v) distinct co-membership edges (u < v): two ids are
-    adjacent iff they share at least one ``block_col`` value. Dense
-    path (ids integral, small, block bitmaps within the broadcast
-    budget — see :data:`_NEIGHBOR_BITMAP_MAX_CHUNKS` /
-    :data:`_BROADCAST_MAX_WORDS`): decode each id's neighbor
-    bitmap to the neighbors ABOVE it — each edge emitted exactly once
-    from its lower endpoint, map-side, so the join formulation's
-    quadratic pair shuffle + distinct never runs. Past the gates:
-    :func:`_co_membership_edges_join` (the prior formulation,
-    unrestricted scale). Both paths proven equal by property test."""
+) -> tuple[DataFrame, DataFrame, DataFrame | None]:
+    """``(edges, degrees, neighbors)`` of the co-membership graph: two
+    ids are adjacent iff they share at least one ``block_col`` value.
+    ``edges`` are the distinct (u, v) with u < v, ``degrees`` are
+    (``id_col``, degree) with degree > 0, and ``neighbors`` is the
+    :func:`neighbor_bitmaps` table on the dense path, else ``None``.
+    Rows with a NULL id or block drop out first.
+
+    Dense path (ids integral, small, block bitmaps within the
+    broadcast budget — see :data:`_NEIGHBOR_BITMAP_MAX_CHUNKS` /
+    :data:`_BROADCAST_MAX_WORDS`): each edge decodes map-side from the
+    neighbor bitmap of its lower endpoint and degrees are popcounts,
+    so the join formulation's quadratic pair shuffle + distinct never
+    runs; the id gate caps the degree table below 262,144 rows, so it
+    comes back broadcast-hinted. Past the gates:
+    :func:`_co_membership_edges_join` (unrestricted ids and scale),
+    degrees counted over the edge endpoints. Both paths are proven
+    equal by property test."""
+    # spelled as isNotNull (not dropna) so every branch over ``du``
+    # carries the same filter the optimizer would infer for a join on
+    # either column, and shared exchanges are reused across branches
+    du = du.select(block_col, id_col).filter(
+        F.col(block_col).isNotNull() & F.col(id_col).isNotNull()
+    )
     gate = _co_membership_gate(du, block_col, id_col)
     if gate is None:
         # the join path pays per-block quadratic fan-out: dedup first
-        return _co_membership_edges_join(
-            du.select(block_col, id_col).distinct(), block_col, id_col
+        edges = _co_membership_edges_join(du.distinct(), block_col, id_col)
+        ends = edges.select(F.col("u").alias(id_col)).unionAll(
+            edges.select(F.col("v").alias(id_col))
         )
+        degrees = ends.groupBy(id_col).agg(
+            F.count(F.lit(1)).cast("long").alias("degree")
+        )
+        return edges, degrees, None
     n_chunks, _ = gate
     nb = neighbor_bitmaps(du, block_col, id_col, n_chunks)
-    return nb.select(
+    edges = nb.select(
         F.col(id_col).alias("u"),
         F.explode(
             F.filter(
@@ -2990,54 +3021,35 @@ def co_membership_edges(
             )
         ).alias("v"),
     )
-
-
-def co_membership_degrees(
-    du: DataFrame, block_col: str, id_col: str, out: str = "degree"
-) -> DataFrame:
-    """(id_col, out) — each id's co-membership degree (count of OTHER
-    ids sharing ≥1 block). Dense path: popcount of the neighbor
-    bitmap — no edge list is ever materialized. Fallback: endpoint
-    unpivot + count over the join-formulation edges (the prior
-    shape). Ids with no co-members (alone in all their blocks) have
-    degree 0 on the dense path but NO ROW in the fallback — callers
-    relying on the zero rows must gate themselves; the fixture
-    operators filter/aggregate in ways where both agree (complete
-    per-block fan-out ⇒ every id with a non-singleton block appears);
-    to keep the two paths IDENTICAL the dense path drops degree-0
-    rows too."""
-    gate = _co_membership_gate(du, block_col, id_col)
-    if gate is None:
-        e = _co_membership_edges_join(
-            du.select(block_col, id_col).distinct(), block_col, id_col
-        )
-        ends = e.select(F.col("u").alias(id_col)).unionAll(
-            e.select(F.col("v").alias(id_col))
-        )
-        return ends.groupBy(id_col).agg(
-            F.count(F.lit(1)).cast("long").alias(out)
-        )
-    n_chunks, _ = gate
-    nb = neighbor_bitmaps(du, block_col, id_col, n_chunks)
-    return nb.select(id_col, bitmap_degree("bm").alias(out)).filter(
-        F.col(out) > 0
+    degrees = nb.select(id_col, bitmap_degree("bm").alias("degree")).filter(
+        F.col("degree") > 0
     )
+    return edges, F.broadcast(degrees), nb
 
 
 def triangle_stats_from_neighbors(
     nb: DataFrame, id_col: str
-) -> tuple[int, int]:
+) -> tuple[int, int] | None:
     """(n_edges, n_triangles) — EXACT counts from a
     :func:`neighbor_bitmaps` table: each edge decodes once from its
     lower endpoint (map-side), and Σ over unordered edges (u<v) of
     |N(u) ∩ N(v)| counts every triangle exactly 3×. The nb table is
-    broadcast: the caller gates |V|·n_chunks on
-    :data:`_BROADCAST_MAX_WORDS`. One
-    aggregate action plus one 1-row width probe."""
-    first = nb.select(F.size("bm").alias("w")).first()
-    if first is None:
+    broadcast, so with |V|·n_chunks past :data:`_BROADCAST_MAX_WORDS`
+    this returns ``None`` and the caller counts on the edge list. The
+    table is materialized once (the id gate of
+    :func:`co_membership_graph` bounds it; only its broadcast needs
+    the budget), then one 1-row (|V|, width) probe and one aggregate
+    action scan it."""
+    nb = _materialize_for_probes(nb)
+    # one task over the materialized rows: no exchange, one job
+    probe = nb.coalesce(1).agg(
+        F.count(F.lit(1)).alias("n"), F.max(F.size("bm")).alias("w")
+    ).first()
+    if probe["w"] is None:
         return 0, 0
-    n_bits = int(first["w"]) * 64
+    if probe["n"] * probe["w"] > _BROADCAST_MAX_WORDS:
+        return None
+    n_bits = int(probe["w"]) * 64
     pairs = nb.select(
         F.col(id_col).alias("_tn_u"),
         F.col("bm").alias("_tn_bm_u"),

@@ -181,19 +181,15 @@ def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the triangle query computes. Edge endpoints unpivot via UNION ALL
     (no shuffle) into one node-keyed count; the quadratic risk lives
     only in the per-day edge fan-out, same bound as the triangle
-    operator. r12 optimization (guide §2.4): degrees now come from
-    api.co_membership_degrees — inside the dense gate that is a
-    neighbor-bitmap popcount (the per-day pair fan-out + distinct
-    never runs), past it the prior join formulation."""
-    from hadoop_deliver_spark.api import co_membership_degrees
+    operator. Degrees come from api.co_membership_graph: neighbor-
+    bitmap popcounts inside its dense gate (the per-day pair fan-out
+    + distinct never runs), endpoint counts over the block-equi-join
+    edges past it."""
+    from hadoop_deliver_spark.api import co_membership_graph
 
     e = tbl(spark, sf_dir, "events")
     du = e.select(F.to_date("ts").alias("day"), "user_id")
-    return (
-        co_membership_degrees(du, "day", "user_id", out="degree")
-        .withColumn("degree", F.col("degree").cast("long"))
-        .orderBy("user_id")
-    )
+    return co_membership_graph(du, "day", "user_id")[1].orderBy("user_id")
 
 
 @register(

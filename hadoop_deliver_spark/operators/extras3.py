@@ -292,49 +292,26 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Core: api.triangle_count (column-parameterized; also fuzzed
     against a brute-force count on random graphs in
-    tests/test_hypothesis.py). r12 optimization (guide §2.4): within
-    the co-membership gate the per-day O(n_d²) pair fan-out + distinct
-    (26.8M rows → 1.12M at sf0.1) never runs — neighbor bitmaps build
-    straight from the (day, user) pairs (one block-bitmap reduce, one
-    map-side-combined bit_or reduce), edges decode map-side from their
-    lower endpoint, and n_edges + 3·triangles come out of ONE
-    aggregate action (api.triangle_stats_from_neighbors), which
-    broadcasts the whole |V|·n_chunks neighbor table, so |V|·n_chunks
-    is gated on the broadcast budget too; past either gate the prior
-    join formulation runs unchanged."""
+    tests/test_hypothesis.py). Edges and neighbor bitmaps come from
+    api.co_membership_graph: inside its dense gate the per-day
+    O(n_d²) pair fan-out + distinct (26.8M rows → 1.12M at sf0.1)
+    never runs, and n_edges + 3·triangles come out of ONE aggregate
+    action (api.triangle_stats_from_neighbors), which broadcasts the
+    whole |V|·n_chunks neighbor table and so declines past the
+    broadcast budget; there, and past the core's gate, the edge list
+    is counted and handed to api.triangle_count."""
     from hadoop_deliver_spark import api
 
     e = tbl(spark, sf_dir, "events")
     du = e.select(F.to_date("ts").alias("day"), "user_id")
-    n_nodes = e.select("user_id").distinct().count()
-    gate = api._co_membership_gate(du, "day", "user_id")
-    if gate is not None and n_nodes * gate[0] <= api._BROADCAST_MAX_WORDS:
-        nb = api.neighbor_bitmaps(
-            du, "day", "user_id", gate[0]
-        ).localCheckpoint(eager=True)
-        n_edges, tri = api.triangle_stats_from_neighbors(nb, "user_id")
-    else:
-        a, b = du.distinct().alias("a"), du.distinct().alias("b")
-        edges = (
-            a.join(
-                b,
-                (F.col("a.day") == F.col("b.day"))
-                & (F.col("a.user_id") < F.col("b.user_id")),
-            )
-            .select(
-                F.col("a.user_id").alias("u"), F.col("b.user_id").alias("v")
-            )
-            .distinct()
-            .cache()
-        )
-        try:
-            n_edges = edges.count()
-            tri = api.triangle_count(edges, "u", "v")
-        finally:
-            # all actions that needed the cache have run; without this
-            # the co-activity edge set (quadratic per day block) stays
-            # pinned in executor storage for the rest of the session
-            edges.unpersist()
+    n_nodes = e.select("user_id").dropna().distinct().count()
+    edges, _, nb = api.co_membership_graph(du, "day", "user_id")
+    stats = None if nb is None else api.triangle_stats_from_neighbors(
+        nb, "user_id"
+    )
+    if stats is None:
+        stats = edges.count(), api.triangle_count(edges, "u", "v")
+    n_edges, tri = stats
     return spark.createDataFrame(
         [(n_nodes, n_edges, tri)],
         "n_nodes long, n_edges long, n_triangles long",

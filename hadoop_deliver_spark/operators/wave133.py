@@ -72,15 +72,17 @@ def graph_percolation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the per-day edge fan-out (bounded like the
     triangle operator), one UNION-ALL endpoint unpivot, one degree
-    reduce, one 4-sum moment reduce. r12 optimization (guide §2.4):
-    degrees via api.co_membership_degrees — neighbor-bitmap popcount
-    inside the dense gate (no quadratic pair fan-out), the prior
-    join formulation past it."""
-    from hadoop_deliver_spark.api import co_membership_degrees
+    reduce, one 4-sum moment reduce. Degrees come from
+    api.co_membership_graph: neighbor-bitmap popcounts inside its
+    dense gate (no quadratic pair fan-out), endpoint counts over the
+    block-equi-join edges past it."""
+    from hadoop_deliver_spark.api import co_membership_graph
 
     e = tbl(spark, sf_dir, "events")
     du = e.select(F.to_date("ts").alias("day"), "user_id")
-    deg = co_membership_degrees(du, "day", "user_id", out="k")
+    deg = co_membership_graph(du, "day", "user_id")[1].withColumnRenamed(
+        "degree", "k"
+    )
     mom = deg.agg(
         F.count(F.lit(1)).cast("long").alias("n_nodes"),
         F.sum("k").cast("long").alias("sk"),

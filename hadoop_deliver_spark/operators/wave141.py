@@ -70,72 +70,17 @@ def graph_randic(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts; one float per edge, summed — drift n·ulp, far inside
     round-4.
 
-    Scale shape: the bounded per-day edge fan-out, one degree
-    reduce joined back onto edges twice (equi-joins on node), two
-    1-row reduces. r12 optimization (guide §2.4): inside the
-    co-membership gate the quadratic pair fan-out + distinct is
-    replaced by neighbor bitmaps (degrees = popcount, edges decode
-    map-side from the lower endpoint) and the degree table attaches
-    by BROADCAST joins — the identical edge/degree multiset, no
-    wide shuffle; past the gate the prior join formulation runs."""
-    from hadoop_deliver_spark.api import (
-        _co_membership_gate,
-        bitmap_degree,
-        bitmap_members,
-        neighbor_bitmaps,
-    )
+    Scale shape: one api.co_membership_graph call (neighbor bitmaps
+    inside its dense gate, the block-equi-join past it), the degree
+    table joined back onto the edges twice (equi-joins on node), two
+    1-row reduces."""
+    from hadoop_deliver_spark.api import co_membership_graph
 
     e = tbl(spark, sf_dir, "events")
-    du0 = e.select(F.to_date("ts").alias("day"), "user_id")
-    gate = _co_membership_gate(du0, "day", "user_id")
-    if gate is not None:
-        nb = neighbor_bitmaps(du0, "day", "user_id", gate[0]).localCheckpoint(
-            eager=True
-        )
-        deg = (
-            nb.select(
-                F.col("user_id").alias("node"),
-                bitmap_degree("bm").alias("k"),
-            )
-            .filter(F.col("k") > 0)
-        )
-        edges = nb.select(
-            F.col("user_id").alias("u"),
-            F.explode(
-                F.filter(
-                    bitmap_members("bm", gate[0] * 64),
-                    lambda v: v > F.col("user_id"),
-                )
-            ).alias("v"),
-        )
-        da = F.broadcast(
-            deg.select(F.col("node").alias("u"), F.col("k").alias("ku"))
-        )
-        db = F.broadcast(
-            deg.select(F.col("node").alias("v"), F.col("k").alias("kv"))
-        )
-    else:
-        du = du0.distinct()
-        a, b = du.alias("a"), du.alias("b")
-        edges = (
-            a.join(
-                b,
-                (F.col("a.day") == F.col("b.day"))
-                & (F.col("a.user_id") < F.col("b.user_id")),
-            )
-            .select(
-                F.col("a.user_id").alias("u"), F.col("b.user_id").alias("v")
-            )
-            .distinct()
-        )
-        ends = edges.select(F.col("u").alias("node")).unionAll(
-            edges.select(F.col("v").alias("node"))
-        )
-        deg = ends.groupBy("node").agg(
-            F.count(F.lit(1)).cast("long").alias("k")
-        )
-        da = deg.select(F.col("node").alias("u"), F.col("k").alias("ku"))
-        db = deg.select(F.col("node").alias("v"), F.col("k").alias("kv"))
+    du = e.select(F.to_date("ts").alias("day"), "user_id")
+    edges, deg, _ = co_membership_graph(du, "day", "user_id")
+    da = deg.select(F.col("user_id").alias("u"), F.col("degree").alias("ku"))
+    db = deg.select(F.col("user_id").alias("v"), F.col("degree").alias("kv"))
     re = (
         edges.join(da, "u")
         .join(db, "v")

@@ -98,16 +98,15 @@ def graph_degree_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     du = e.filter(F.col("event_type") == "error").select(
         F.to_date("ts").alias("day"), "user_id"
     )
-    # r12 optimization (guide §2.4 + §1): degrees via the
-    # co-membership neighbor-bitmap core (no per-day pair fan-out
-    # inside the dense gate), renamed to the edge-endpoint shape, and
-    # localCheckpoint'd ONCE — exact_global_rank's split/offset probe
-    # actions plus the two downstream reduces would otherwise
-    # recompute the degree pipeline four times.
-    from hadoop_deliver_spark.api import co_membership_degrees
+    # degrees via api.co_membership_graph, renamed to the
+    # edge-endpoint shape and localCheckpoint'd ONCE —
+    # exact_global_rank's split/offset probe actions plus the two
+    # downstream reduces would otherwise recompute the degree pipeline
+    # four times.
+    from hadoop_deliver_spark.api import co_membership_graph
 
     deg = (
-        co_membership_degrees(du, "day", "user_id", out="degree")
+        co_membership_graph(du, "day", "user_id")[1]
         .withColumnRenamed("user_id", "node")
         .localCheckpoint(eager=True)
     )

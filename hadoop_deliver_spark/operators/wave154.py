@@ -70,66 +70,22 @@ def graph_leverage_centrality(
     integers, and the per-node mean rounds at 6 (per-node neighbor
     sums are order-sensitive doubles only in the last ulp).
 
-    Scale shape: the bounded per-day co-activity fan-out, one
-    node-keyed degree count, two degree equi-joins onto the
-    symmetrized edge list, one node-keyed mean."""
+    Scale shape: one api.co_membership_graph call (neighbor bitmaps
+    inside its dense gate, the block-equi-join past it), the edge
+    list symmetrized by UNION ALL, two degree equi-joins onto it, one
+    node-keyed mean."""
+    from hadoop_deliver_spark.api import co_membership_graph
+
     e = tbl(spark, sf_dir, "events")
-    du0 = e.filter(F.col("event_type") == "error").select(
+    du = e.filter(F.col("event_type") == "error").select(
         F.to_date("ts").alias("day"), "user_id"
     )
-    # r12 optimization (guide §2.4): inside the co-membership gate the
-    # symmetrized pair list decodes map-side from neighbor bitmaps
-    # (every directed (u, v∈N(u)) pair exactly once — the same
-    # multiset the union-all symmetrization produced), degrees are
-    # popcounts, and the two degree attachments become BROADCAST
-    # joins; past the gate the prior join formulation runs unchanged.
-    from hadoop_deliver_spark.api import (
-        _co_membership_gate,
-        bitmap_degree,
-        bitmap_members,
-        neighbor_bitmaps,
+    edges, deg, _ = co_membership_graph(du, "day", "user_id")
+    sym = edges.unionAll(
+        edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-
-    gate = _co_membership_gate(du0, "day", "user_id")
-    if gate is not None:
-        nb = neighbor_bitmaps(du0, "day", "user_id", gate[0]).localCheckpoint(
-            eager=True
-        )
-        deg = nb.select(
-            F.col("user_id").alias("node"), bitmap_degree("bm").alias("k")
-        ).filter(F.col("k") > 0)
-        sym = nb.select(
-            F.col("user_id").alias("u"),
-            F.explode(bitmap_members("bm", gate[0] * 64)).alias("v"),
-        )
-        di = F.broadcast(
-            deg.select(F.col("node").alias("u"), F.col("k").alias("ki"))
-        )
-        dj = F.broadcast(
-            deg.select(F.col("node").alias("v"), F.col("k").alias("kj"))
-        )
-    else:
-        du = du0.distinct()
-        a, b = du.alias("a"), du.alias("b")
-        edges = (
-            a.join(
-                b,
-                (F.col("a.day") == F.col("b.day"))
-                & (F.col("a.user_id") < F.col("b.user_id")),
-            )
-            .select(
-                F.col("a.user_id").alias("u"), F.col("b.user_id").alias("v")
-            )
-            .distinct()
-        )
-        sym = edges.unionAll(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        deg = sym.groupBy(F.col("u").alias("node")).agg(
-            F.count(F.lit(1)).cast("long").alias("k")
-        )
-        di = deg.select(F.col("node").alias("u"), F.col("k").alias("ki"))
-        dj = deg.select(F.col("node").alias("v"), F.col("k").alias("kj"))
+    di = deg.select(F.col("user_id").alias("u"), F.col("degree").alias("ki"))
+    dj = deg.select(F.col("user_id").alias("v"), F.col("degree").alias("kj"))
     return (
         sym.join(di, "u")
         .join(dj, "v")

@@ -199,3 +199,20 @@ def assert_frames_match(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame, name: s
             assert _cells_equal(sv, dv), (
                 f"{name}: value mismatch row {i} col {c}: spark={sv!r} duck={dv!r}"
             )
+
+
+def jobs_per_call(spark, build) -> int:
+    """Spark jobs one call runs: planning (probes) plus the final
+    collect, read from the status tracker under a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        build().collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

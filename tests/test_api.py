@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hadoop_deliver_spark import api
+from tests.parity import jobs_per_call
 
 
 def test_keyed_dedup_keeps_deterministic_first(spark):
@@ -127,23 +128,6 @@ def test_exact_global_rank_custom_columns(spark):
     assert got == [("a", 3, 1), ("a", 5, 3), ("b", 3, 2), ("c", 9, 4)]
 
 
-def _jobs_per_call(spark, build):
-    """Spark jobs one call runs: planning (probes) plus the final
-    collect, read from the status tracker under a fresh job group."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        build().collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 # Spark jobs per call (probes while planning plus the final collect),
 # measured when each function still had its own block-ranked body;
 # one shared core may not run more
@@ -180,7 +164,7 @@ def test_block_ranked_cores_run_no_more_jobs(spark):
             df, "s", "o", "v", "c", tiebreak_col="k"
         ),
     }
-    got = {name: _jobs_per_call(spark, fn) for name, fn in calls.items()}
+    got = {name: jobs_per_call(spark, fn) for name, fn in calls.items()}
     assert all(got[n] <= _RANK_CORE_JOBS[n] for n in got), got
 
 

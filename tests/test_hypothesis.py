@@ -5,7 +5,7 @@ under test."""
 
 from __future__ import annotations
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 
@@ -990,18 +990,21 @@ def test_holt_smooth_matches_direct_recurrence(spark, series):
     rows=st.lists(
         st.tuples(
             st.integers(min_value=-50, max_value=50),
-            st.integers(min_value=0, max_value=20),
+            st.one_of(st.none(), st.integers(min_value=0, max_value=20)),
         ),
         min_size=0,
         max_size=60,
     ),
     nblocks=st.sampled_from([1, 2, 4, 32]),
 )
+@example(rows=[(o, None if o in (0, 5) else 1) for o in range(10)], nblocks=2)
 def test_keyed_cumsum_matches_global_window(spark, rows, nblocks):
     """api.exact_global_keyed_cumsum must equal the single-task
     global running sum for ANY (order, value) rows and ANY block
     count — including empty input, duplicate order values (unique
-    key tiebreak), and nblocks=1 (degenerate single block)."""
+    key tiebreak), nblocks=1 (degenerate single block) and NULL
+    values (the sum stays NULL until the first non-NULL value, also
+    when a later block starts on a NULL)."""
     from hadoop_deliver_spark.api import exact_global_keyed_cumsum
 
     data = [(i, o, v) for i, (o, v) in enumerate(rows)]
@@ -1015,9 +1018,10 @@ def test_keyed_cumsum_matches_global_window(spark, rows, nblocks):
                 df, "ord", "val", "k", "cum"
             ).collect()
         }
-    run, want = 0, {}
+    run, want = None, {}
     for k, o, v in sorted(data, key=lambda t: (t[1], t[0])):
-        run += v
+        if v is not None:
+            run = (run or 0) + v
         want[k] = run
     assert got == want
 
@@ -1026,7 +1030,7 @@ _STRATIFIED_ROWS = st.lists(
     st.tuples(
         st.sampled_from(["a", "b", "c"]),
         st.integers(min_value=-20, max_value=20),
-        st.integers(min_value=-5, max_value=20),
+        st.one_of(st.none(), st.integers(min_value=-5, max_value=20)),
     ),
     min_size=0,
     max_size=60,
@@ -1035,11 +1039,14 @@ _STRATIFIED_ROWS = st.lists(
 
 def _running(rows, key, value):
     """{k: running sum of value(row)} over ``rows`` sorted by ``key``,
-    restarting per stratum (row[1]) — the single-task window."""
+    restarting per stratum (row[1]) — the single-task window: NULL
+    values add nothing, and the sum is NULL until the stratum's first
+    non-NULL value."""
     run, want = {}, {}
     for r in sorted(rows, key=key):
-        run[r[1]] = run.get(r[1], 0) + value(r)
-        want[r[0]] = run[r[1]]
+        if value(r) is not None:
+            run[r[1]] = run.get(r[1], 0) + value(r)
+        want[r[0]] = run.get(r[1])
     return want
 
 
@@ -1070,11 +1077,16 @@ def test_stratified_rank_matches_window(spark, rows, nblocks):
     nblocks=st.sampled_from([1, 2, 4, 32]),
     tiebreak=st.booleans(),
 )
+@example(
+    rows=[(s, o, None if o in (0, 5) else 1) for s in "ab" for o in range(10)],
+    nblocks=2,
+    tiebreak=True,
+)
 def test_stratified_cumsum_matches_window(spark, rows, nblocks, tiebreak):
     """api.exact_stratified_cumsum must equal `sum(v) OVER (PARTITION
     BY s ORDER BY o[, k] ROWS UNBOUNDED PRECEDING)` for ANY rows and
-    block count. Without the tiebreak the order value is made unique
-    per stratum (the caller's contract)."""
+    block count, NULL values included. Without the tiebreak the order
+    value is made unique per stratum (the caller's contract)."""
     from hadoop_deliver_spark.api import exact_stratified_cumsum
 
     if not tiebreak:

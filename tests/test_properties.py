@@ -2284,18 +2284,36 @@ def test_adaptive_quantizer_engages_and_is_scale_invariant(spark, duck, sf_dir):
             )
 
 
-def test_co_membership_paths_agree(spark):
-    """The co-membership neighbor-bitmap core (r12 optimization) and
-    the block-equi-join + distinct formulation it replaced must agree
-    EXACTLY on edges, degrees and triangle stats — on random messy
-    (block, id) tables with duplicate rows, gappy id spaces, singleton
-    blocks and multi-block ids — and the gate must refuse ids it
-    cannot bitmap (negatives, non-integral, past the width cap)."""
+def _co_membership_on(monkeypatch, du, budget):
+    """api.co_membership_graph on (blk, nid) with the broadcast budget
+    at ``budget``: (edge set, {id: degree}, neighbor table or None)."""
+    from hadoop_deliver_spark import api
+
+    with monkeypatch.context() as m:
+        m.setattr(api, "_BROADCAST_MAX_WORDS", budget)
+        edges, deg, nb = api.co_membership_graph(du, "blk", "nid")
+        return (
+            {(r["u"], r["v"]) for r in edges.collect()},
+            {r["nid"]: r["degree"] for r in deg.collect()},
+            nb,
+        )
+
+
+def test_co_membership_paths_agree(spark, monkeypatch):
+    """api.co_membership_graph's neighbor-bitmap path (shipped budget)
+    and its block-equi-join path (budget 0) must agree EXACTLY with
+    first principles on edges, degrees and triangle stats — on random
+    messy (block, id) tables with duplicate rows, gappy id spaces,
+    singleton blocks and multi-block ids, and on NULL ids and blocks
+    (which belong to no edge and have no degree row) beside an id
+    alone in its block — and the gate must refuse ids it cannot
+    bitmap (negatives, non-integral, past the width cap)."""
     import itertools
     import random
 
     from hadoop_deliver_spark import api
 
+    cases = []
     for seed, n_ids, n_blocks, p_pct in [(3, 25, 6, 35), (9, 60, 4, 15),
                                          (17, 10, 8, 70)]:
         rng = random.Random(seed)
@@ -2307,16 +2325,18 @@ def test_co_membership_paths_agree(spark):
                     rows.append((b, i))
                     if rng.random() < 0.3:  # duplicate membership rows
                         rows.append((b, i))
-        if not rows:
-            rows = [(0, ids[0])]
+        cases.append(rows or [(0, ids[0])])
+    cases.append(
+        [(0, 1), (0, 2), (0, None), (1, 2), (1, 3), (2, 7), (None, 1),
+         (None, 3)]
+    )
+    for rows in cases:
         du = spark.createDataFrame(rows, "blk long, nid long")
-        gate = api._co_membership_gate(du, "blk", "nid")
-        assert gate is not None, "fixture-sized ids must pass the gate"
-
         # first principles: undirected co-membership edge set
         members = {}
         for b, i in rows:
-            members.setdefault(b, set()).add(i)
+            if b is not None and i is not None:
+                members.setdefault(b, set()).add(i)
         want_edges = set()
         for s in members.values():
             want_edges |= set(itertools.combinations(sorted(s), 2))
@@ -2332,28 +2352,16 @@ def test_co_membership_paths_agree(spark):
             and (a, c) in want_edges
         )
 
-        dense = {
-            (r["u"], r["v"])
-            for r in api.co_membership_edges(du, "blk", "nid").collect()
-        }
-        joinp = {
-            (r["u"], r["v"])
-            for r in api._co_membership_edges_join(
-                du.distinct(), "blk", "nid"
-            ).collect()
-        }
-        assert dense == joinp == want_edges
-
-        got_deg = {
-            r["nid"]: r["degree"]
-            for r in api.co_membership_degrees(du, "blk", "nid").collect()
-        }
-        assert got_deg == want_deg
-
-        nb = api.neighbor_bitmaps(du, "blk", "nid", gate[0])
-        ne, tri = api.triangle_stats_from_neighbors(nb, "nid")
-        assert ne == len(want_edges)
-        assert tri == want_tri
+        for budget in (api._BROADCAST_MAX_WORDS, 0):
+            edges, deg, nb = _co_membership_on(monkeypatch, du, budget)
+            assert (nb is None) == (budget == 0), "path not taken"
+            assert edges == want_edges
+            assert deg == want_deg
+            if nb is not None:
+                stats = api.triangle_stats_from_neighbors(nb, "nid")
+                assert stats == (len(want_edges), want_tri)
+    empty = api.neighbor_bitmaps(du.limit(0), "blk", "nid", 1)
+    assert api.triangle_stats_from_neighbors(empty, "nid") == (0, 0)
 
     # gate refusals: negative ids, string ids, past-width ids
     neg = spark.createDataFrame([(0, -1), (0, 3)], "blk long, nid long")
@@ -2364,9 +2372,11 @@ def test_co_membership_paths_agree(spark):
         [(0, 64 * api._NEIGHBOR_BITMAP_MAX_CHUNKS)], "blk long, nid long"
     )
     assert api._co_membership_gate(wide, "blk", "nid") is None
-    # fallback path on a refused input still yields the right edges
-    fb = api.co_membership_edges(neg, "blk", "nid").collect()
-    assert {(r["u"], r["v"]) for r in fb} == {(-1, 3)}
+    # the join path on a refused input still yields the right graph
+    edges, deg, nb = _co_membership_on(
+        monkeypatch, neg, api._BROADCAST_MAX_WORDS
+    )
+    assert (edges, deg, nb) == ({(-1, 3)}, {-1: 1, 3: 1}, None)
 
 
 def test_pair_cooccurrence_stats_first_principles(spark):
@@ -2619,8 +2629,9 @@ def test_triangle_count_bounds_neighbor_broadcast(
 ):
     """graph_triangle_count broadcasts the whole neighbor-bitmap table
     (|V| × n_chunks longs), so with that table past the broadcast
-    budget it must take the join formulation even though the block
-    bitmaps (days × n_chunks) fit. The events are cut to their first
+    budget api.triangle_stats_from_neighbors must decline and the
+    count run on the edge list, even though the block bitmaps
+    (days × n_chunks) fit. The events are cut to their first
     three days, so users outnumber days, and the budget sits between
     the two tables."""
     import duckdb
@@ -2642,16 +2653,20 @@ def test_triangle_count_bounds_neighbor_broadcast(
     assert 3 * n_chunks <= budget
 
     q = load_all()["graph_triangle_count"]
-    real, calls = api.neighbor_bitmaps, []
+    real, stats = api.triangle_stats_from_neighbors, []
     monkeypatch.setattr(
-        api, "neighbor_bitmaps", lambda *a: calls.append(a) or real(*a)
+        api,
+        "triangle_stats_from_neighbors",
+        lambda *a: stats.append(real(*a)) or stats[-1],
     )
     want = q.fn(spark, str(tmp_path)).toPandas()
-    assert calls, "the unpatched run must take the neighbor-bitmap path"
-    calls.clear()
+    assert len(stats) == 1 and stats[0] is not None, (
+        "the unpatched run must count on the neighbor-bitmap table"
+    )
+    stats.clear()
     monkeypatch.setattr(api, "_BROADCAST_MAX_WORDS", budget)
     got = q.fn(spark, str(tmp_path)).toPandas()
-    assert not calls, "neighbor table broadcast past the budget"
+    assert stats == [None], "neighbor table broadcast past the budget"
     assert_frames_match(got, want, q.name)
     duck = duckdb.connect()
     duck.execute(
@@ -2659,6 +2674,91 @@ def test_triangle_count_bounds_neighbor_broadcast(
         f"read_parquet('{tmp_path}/events.parquet/*.parquet')"
     )
     assert_frames_match(got, duck.execute(q.oracle).df(), q.name)
+    duck.close()
+
+
+# Spark jobs per call of the six co-activity graph queries (probes
+# while planning plus the final collect), measured at sf0.001 under
+# this test session when each still had its own gate and join
+# fallback: (shipped budget, budget 0). One shared core may not run
+# more on either path.
+_CO_MEMBERSHIP_JOBS = {
+    "graph_triangle_count": (18, 50),
+    "graph_randic": (15, 15),
+    "graph_leverage_centrality": (15, 13),
+    "graph_degree_stats": (12, 11),
+    "graph_percolation": (11, 10),
+    "graph_degree_gini": (19, 18),
+}
+
+
+@pytest.fixture(params=["bitmap", "join"])
+def co_membership_path(request, monkeypatch):
+    """The api.co_membership_graph path a graph query runs on: the
+    neighbor bitmaps the shipped broadcast budget selects at sf0.001,
+    or the block-equi-join with the budget at 0."""
+    if request.param == "join":
+        from hadoop_deliver_spark import api
+
+        monkeypatch.setattr(api, "_BROADCAST_MAX_WORDS", 0)
+    return request.param
+
+
+@pytest.mark.parametrize("name", sorted(_CO_MEMBERSHIP_JOBS))
+def test_co_membership_queries_match_oracle_on_both_paths(
+    spark, duck, sf_dir, name, co_membership_path
+):
+    from hadoop_deliver_spark.registry import load_all
+    from tests.parity import assert_frames_match
+
+    q = load_all()[name]
+    got = q.fn(spark, sf_dir).toPandas()
+    assert_frames_match(got, duck.execute(q.oracle).df(), name)
+
+
+@pytest.mark.parametrize("name", sorted(_CO_MEMBERSHIP_JOBS))
+def test_co_membership_queries_run_no_more_jobs(
+    spark, sf_dir, name, co_membership_path
+):
+    from hadoop_deliver_spark.registry import load_all
+    from tests.parity import jobs_per_call
+
+    q = load_all()[name]
+    limit = _CO_MEMBERSHIP_JOBS[name][co_membership_path == "join"]
+    got = jobs_per_call(spark, lambda: q.fn(spark, sf_dir))
+    assert got <= limit, f"{name} ({co_membership_path}): {got} > {limit}"
+
+
+def test_co_membership_queries_match_oracle_on_null_ids(
+    spark, sf_dir, tmp_path
+):
+    """Degenerate input: events with a NULL user_id. SQL's joins and
+    count(DISTINCT) skip the NULL, so no query of the six may count
+    it as a node or give it a degree."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hadoop_deliver_spark.registry import load_all
+    from tests.parity import assert_frames_match
+
+    ev = pq.read_table(f"{sf_dir}/events.parquet")
+    uid = ev["user_id"].to_pylist()
+    uid[0] = uid[1] = None
+    i = ev.schema.get_field_index("user_id")
+    _write_table(
+        str(tmp_path), "events",
+        ev.set_column(i, "user_id", pa.array(uid, pa.int64())),
+    )
+    duck = duckdb.connect()
+    duck.execute(
+        "CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/events.parquet/*.parquet')"
+    )
+    for name in sorted(_CO_MEMBERSHIP_JOBS):
+        q = load_all()[name]
+        got = q.fn(spark, str(tmp_path)).toPandas()
+        assert_frames_match(got, duck.execute(q.oracle).df(), name)
     duck.close()
 
 
