@@ -363,6 +363,22 @@ def connected_components(
     )
 
 
+def bounded_collect(df: DataFrame, max_rows: int) -> list:
+    """Collect a frame the caller knows to be small — at most
+    ``max_rows`` rows — in ONE action: ``df.limit(max_rows + 1)``
+    collected, so no size probe runs first and no more than
+    ``max_rows + 1`` rows ever reach the driver. Raises ValueError
+    when the frame holds more than ``max_rows`` rows: the bound is
+    the size the caller's driver-side arithmetic is built for, and
+    there is no distributed second path to fall back to."""
+    rows = df.limit(max_rows + 1).collect()
+    if len(rows) > max_rows:
+        raise ValueError(
+            f"bounded_collect: frame exceeds its gate of {max_rows} rows"
+        )
+    return rows
+
+
 # --------------------------------------------------------------------------
 # exact global ranking without a single-partition window
 # --------------------------------------------------------------------------
@@ -376,24 +392,6 @@ def connected_components(
 # cumulative offsets broadcast back as a map literal; (4) row_number
 # PARTITIONED by block + offset = exact global rank. Every stage is
 # map-side or hash-partitioned; the only collects are scalar probes.
-
-
-def spread_bounded(df: DataFrame, factor: int = 1) -> DataFrame:
-    """Round-robin repartition of a BOUNDED small table (calendar
-    axis, daily series) to the session's default parallelism — for
-    use immediately before a pairwise/cross join that fans it out
-    quadratically. Without this the streamed side of the
-    nested-loop join is typically ONE AQE-coalesced partition, so
-    the O(n²) fan-out and every downstream aggregate run on a
-    single task (r12 measurement, guide §2.5/§2.6: ts_passing_bablok
-    spent 6.3s of 10.7s in single-task stages). The shuffle moved is
-    only the bounded axis itself (≤ a few thousand rows); the
-    partition count follows the session's core count, never a
-    constant. Row-level results are unaffected: every consumer is an
-    order-invariant reduce or an exact-rank core with a total-order
-    tiebreak."""
-    n = df.sparkSession.sparkContext.defaultParallelism * factor
-    return df.repartition(max(2, n))
 
 
 def _materialize_for_probes(df: DataFrame) -> DataFrame:

@@ -17,6 +17,9 @@ regression and community quality.
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,72 +34,9 @@ from hadoop_deliver_spark.operators.wave69 import (
 from hadoop_deliver_spark.registry import register
 from hadoop_deliver_spark.tables import tbl
 
-#: driver-path gate of ts_passing_bablok: most joined daily rows
+#: bounded-collect gate of ts_passing_bablok: most joined daily rows
 #: collected for the NumPy pairwise-slope selection
 _PB_DRIVER_MAX_DAYS = 4096
-
-
-def _pb_slope_distributed(spark: SparkSession, d: DataFrame) -> DataFrame:
-    """Past-gate distributed Passing–Bablok slope: the spread pairwise
-    NLJ + block-ranked offset-rank selection (the pre-r12 in-cluster
-    formulation, kept verbatim as the fallback for histories past the
-    bounded-driver gate)."""
-    from hadoop_deliver_spark import api
-
-    a = api.spread_bounded(
-
-        d.select(
-            F.col("dn").alias("i"),
-            F.col("x").alias("xa"),
-            F.col("y").alias("ya"),
-        )
-    )
-    b2 = d.select(
-        F.col("dn").alias("j"), F.col("x").alias("xb"), F.col("y").alias("yb")
-    )
-    sexpr = (F.col("yb") - F.col("ya")).cast("double") / (
-        F.col("xb") - F.col("xa")
-    )
-    sl = (
-        a.join(F.broadcast(b2), F.col("i") < F.col("j"))
-        .filter(F.col("xa") != F.col("xb"))
-        .select(
-            sexpr.alias("s"),
-            (F.col("i") * 100000 + F.col("j")).alias("key"),
-        )
-        .filter(F.col("s") != -1.0)
-        # evaluate the O(days²) pair table ONCE: the count reduce, the
-        # block-ranked splits, and the three rank probes all reuse this
-        # materialization (the ts_qn_scale checkpoint device) instead
-        # of re-running the pairwise join per consumer
-        .localCheckpoint()
-    )
-    cnt = sl.agg(
-        F.count(F.lit(1)).cast("long").alias("nsl"),
-        F.sum(F.when(F.col("s") < -1.0, 1).otherwise(0))
-        .cast("long")
-        .alias("k"),
-    )
-    rk = api.exact_global_rank(sl, "s", "key", "r")
-    j = rk.crossJoin(F.broadcast(cnt))
-    lo_r = F.expr("nsl div 2") + F.col("k")
-    hi_r = F.expr("nsl div 2") + 1 + F.col("k")
-    odd_r = F.expr("(nsl + 1) div 2") + F.col("k")
-    s_at = lambda r: F.max(F.when(F.col("r") == r, F.col("s")))  # noqa: E731
-    b = j.groupBy("nsl", "k").agg(
-        F.when(F.col("nsl") % 2 == 1, s_at(odd_r))
-        .otherwise(
-            F.when(
-                s_at(lo_r) * s_at(hi_r) > 0,
-                F.signum(s_at(lo_r)) * F.sqrt(s_at(lo_r) * s_at(hi_r)),
-            ).otherwise((s_at(lo_r) + s_at(hi_r)) / 2)
-        )
-        .alias("slope")
-    )
-    # 1-row slope frame: checkpoint so the intercept stage's rank scan
-    # and final reduce do not re-run the 2.9M-row slope ranking
-    b = b.localCheckpoint()
-    return b
 
 
 @register(
@@ -198,12 +138,21 @@ def ts_passing_bablok(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ROUNDED slope is a screening convention (full PB rank CIs
     are the natural extension), stated as such. Slopes divide exact
     integer cent differences, so both engines rank bit-identical
-    doubles.
+    doubles. The joined daily series is CALENDAR-BOUNDED (one row per
+    day at any corpus scale), so the O(days²) slope fan-out is a
+    bounded DRIVER computation: one api.bounded_collect of the
+    series, then the same IEEE arithmetic in NumPy — (yb−ya)/(xb−xa)
+    in float64, s = −1 dropped, k = #{s < −1}, rank picks on the
+    ascending sort, the signed geometric mean in the even case — and
+    the intercept residuals y − b·x in float64, row ⌈n/2⌉ of their
+    (resid, dn) order. No slope (fewer than two distinct x) gives
+    the oracle's all-NULL row; a shift k that pushes a rank past the
+    slopes gives (n, nsl, k, NULL…). Rounding and the bias verdict
+    stay Spark expressions on the 1-row frame.
 
-    Scale shape: two daily reduces and one day equi-join; a TRUE
-    pairwise join of the calendar-bounded daily series (the
-    ts_qn_scale envelope); ranked scans of the bounded slope and
-    residual tables."""
+    Scale shape: two daily reduces and one day equi-join, one bounded
+    collect (ValueError past _PB_DRIVER_MAX_DAYS), a 1-row
+    projection."""
     o = tbl(spark, sf_dir, "orders")
     li = tbl(spark, sf_dir, "lineitem")
     cx = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
@@ -219,86 +168,49 @@ def ts_passing_bablok(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = ox.join(oy, "day").select(
         F.datediff("day", F.lit("1990-01-01")).alias("dn"), "x", "y"
     )
-    # r12 (second pass): the joined daily series is CALENDAR-BOUNDED
-    # (one row per day at any corpus scale), so the O(days²) slope
-    # fan-out and the three offset-rank probes are a bounded DRIVER
-    # computation (the agg_hl_shift_2sample device): collect the
-    # series once, replicate the EXACT slope/filter/offset-median
-    # arithmetic in NumPy (same IEEE doubles: (yb−ya)/(xb−xa) in
-    # float64, s = −1 excluded, k = #{s < −1}, rank picks on the
-    # ascending sort, signed-geometric-mean even-case), and feed the
-    # 1-row slope frame to the unchanged intercept stage. The
-    # distributed pair join below stays as the past-gate fallback and
-    # the formulation of record. The series size is probed first:
-    # nothing is collected past the gate.
-    b = None
-    if 0 < d.count() <= _PB_DRIVER_MAX_DAYS:
-        _drows = d.collect()
-        import math
-
-        import numpy as np
-
-        _x = np.asarray([r["x"] for r in _drows], dtype=np.int64)
-        _y = np.asarray([r["y"] for r in _drows], dtype=np.int64)
-        _i, _j = np.triu_indices(len(_drows), 1)
-        _m = _x[_i] != _x[_j]
-        _s = (_y[_j][_m] - _y[_i][_m]).astype(np.float64) / (
-            _x[_j][_m] - _x[_i][_m]
-        ).astype(np.float64)
-        _s = _s[_s != -1.0]
-        _nsl = int(_s.size)
-        _k = int((_s < -1.0).sum())
-        _s.sort()
-        _slope = None
-        if _nsl % 2 == 1:
-            _r = (_nsl + 1) // 2 + _k
-            if 1 <= _r <= _nsl:
-                _slope = float(_s[_r - 1])
+    rows = api.bounded_collect(d, _PB_DRIVER_MAX_DAYS)
+    n = len(rows)
+    dn, x, y = (
+        np.asarray([r[c] for r in rows], np.int64) for c in ("dn", "x", "y")
+    )
+    i, j = np.triu_indices(n, 1)
+    m = x[i] != x[j]
+    i, j = i[m], j[m]
+    s = (y[j] - y[i]).astype(np.float64) / (x[j] - x[i]).astype(np.float64)
+    s = np.sort(s[s != -1.0])
+    nsl, k = int(s.size), int((s < -1.0).sum())
+    # 1-based ranks of the middle slope(s), shifted by k
+    h = nsl // 2 + k
+    ranks = [h + 1] if nsl % 2 else [h, h + 1]
+    slope = None
+    if all(1 <= r <= nsl for r in ranks):
+        lo, hi = float(s[ranks[0] - 1]), float(s[ranks[-1] - 1])
+        if len(ranks) == 1:
+            slope = lo
+        elif lo * hi > 0:
+            slope = math.copysign(1.0, lo) * math.sqrt(lo * hi)
         else:
-            _rl, _rh = _nsl // 2 + _k, _nsl // 2 + 1 + _k
-            if 1 <= _rl and _rh <= _nsl:
-                _lo, _hi = float(_s[_rl - 1]), float(_s[_rh - 1])
-                if _lo * _hi > 0:
-                    _slope = math.copysign(1.0, _lo) * math.sqrt(
-                        _lo * _hi
-                    )
-                else:
-                    _slope = (_lo + _hi) / 2
-        if _slope is not None:
-            b = spark.createDataFrame(
-                [(_nsl, _k, _slope)], "nsl long, k long, slope double"
-            )
-    if b is None:
-        b = _pb_slope_distributed(spark, d)
-    ik = d.crossJoin(F.broadcast(b)).select(
-        "dn",
-        (F.col("y") - F.col("slope") * F.col("x")).alias("resid"),
-        "slope",
-        "nsl",
-        "k",
+            slope = (lo + hi) / 2
+    if slope is None:
+        row = (n, nsl, k, None, None) if nsl else (None,) * 5
+    else:
+        resid = y.astype(np.float64) - slope * x.astype(np.float64)
+        med = np.lexsort((dn, resid))[(n + 1) // 2 - 1]
+        row = (n, nsl, k, slope, float(resid[med]))
+    b = spark.createDataFrame(
+        [row],
+        "n_days long, n_slopes long, k_shift long, slope double, "
+        "resid double",
     )
-    irk = api.exact_global_rank(ik, "resid", "dn", "r")
-    n1 = irk.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    out = irk.crossJoin(F.broadcast(n1)).agg(
-        F.max("n").alias("n_days"),
-        F.max("nsl").alias("n_slopes"),
-        F.max("k").alias("k_shift"),
-        F.round(F.max("slope"), 6).alias("pb_slope"),
-        F.round(
-            F.max(
-                F.when(
-                    F.col("r") == F.ceil(0.5 * F.col("n")).cast("long"),
-                    F.col("resid"),
-                )
-            )
-            / 100.0,
-            4,
-        ).alias("pb_intercept_dollars"),
-        (F.abs(F.round(F.max("slope"), 6) - 1) > 0.05).alias(
-            "proportional_bias"
-        ),
+    pb_slope = F.round("slope", 6)
+    return b.select(
+        "n_days",
+        "n_slopes",
+        "k_shift",
+        pb_slope.alias("pb_slope"),
+        F.round(F.col("resid") / 100.0, 4).alias("pb_intercept_dollars"),
+        (F.abs(pb_slope - 1) > 0.05).alias("proportional_bias"),
     )
-    return out
 
 
 @register(

@@ -19,6 +19,7 @@ count-dispersion, heteroskedastic ANOVA, and reliability classics
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -33,7 +34,7 @@ from hadoop_deliver_spark.tables import dec2, tbl
 _CHI2_4_95 = "9.487729"
 _KUIPER_SQ_1E6 = 3052009
 _Z95_SQ = "2.705543"
-#: driver-path gate of agg_hl_shift_2sample: most daily rows (both
+#: bounded-collect gate of agg_hl_shift_2sample: most daily rows (both
 #: samples together) collected for the NumPy pair ranking
 _HL_DRIVER_MAX_DAYS = 8192
 
@@ -114,95 +115,34 @@ def agg_hl_shift_2sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (30%-efficiency-loss-free under normality, 0.29 breakdown). The
     doubled median hl2 = sum of the two middle order statistics (or
     2× the single middle one) is an EXACT integer — the
-    agg_brown_forsythe even-n device — selected by exact cumulative
-    counts over the distinct-difference grid: positions ⌈T/2⌉ and
-    ⌈(T+1)/2⌉ via the two floor-div literals (T+1)÷2 and (T+2)÷2.
-    The pairwise stage is a TRUE cross join of the two daily series
-    — legitimate at 100 TB because both axes are calendar-bounded
-    (≤2.4k rows each at ANY corpus scale, ≤6M pairs); the cumsum
-    runs block-ranked (api.exact_global_keyed_cumsum), never a
-    single-partition window over the pair grid.
+    agg_brown_forsythe even-n device — at positions ⌈T/2⌉ and
+    ⌈(T+1)/2⌉, the two floor-div literals (T+1)÷2 and (T+2)÷2 (the
+    oracle selects them by exact cumulative counts over the
+    distinct-difference grid; the Spark side indexes the sorted
+    differences).
+    Both samples are CALENDAR-BOUNDED daily series (≤2.4k rows each at
+    ANY corpus scale), so the ≤6M-pair fan-out is a bounded DRIVER
+    computation: one api.bounded_collect of the two series, the
+    differences sorted in NumPy, and the same exact-integer order
+    statistics on a 1-row frame whose final projection keeps the
+    Spark division and verdict. An empty sample gives the oracle's
+    all-NULL row (no pairs: max and sum over nothing).
 
-    Scale shape: one keyed reduce to ≤2·days rows, a bounded ≤6M
-    cross join, a distinct-value reduce, a block-ranked cumsum, a
-    1-row reduce."""
-    daily = _daily_2sample(spark, sf_dir)
-    # r12 (second pass): the two samples are CALENDAR-BOUNDED daily
-    # series (≤2.4k rows each at ANY corpus scale — the cross-join
-    # allowlist argument this operator has carried since it landed),
-    # so the ≤6M-pair fan-out is a bounded DRIVER computation, the
-    # events_markov_reach / events_kleinberg_bursts device: collect
-    # the two series once, rank the differences in NumPy, return the
-    # same exact-integer order statistics. The distributed pair join
-    # below stays as the past-gate fallback and the formulation of
-    # record. The series size is probed first: nothing is collected
-    # past the gate.
-    _ca = _cb = None
-    if daily.count() <= _HL_DRIVER_MAX_DAYS:
-        _rows = daily.select("smp", "cents").collect()
-        _ca = [r["cents"] for r in _rows if r["smp"] == 1]
-        _cb = [r["cents"] for r in _rows if r["smp"] == 2]
-    if _ca and _cb:
-        import numpy as np
-
-        _d = (
-            np.asarray(_ca, dtype=np.int64)[:, None]
-            - np.asarray(_cb, dtype=np.int64)[None, :]
-        ).ravel()
-        _d.sort()
-        _t = int(_d.size)
-        _p1, _p2 = (_t + 1) // 2, (_t + 2) // 2
-        _hl2 = int(_d[_p1 - 1]) + int(_d[_p2 - 1])
-        return spark.createDataFrame(
-            [(_t, _hl2, _hl2 / 2.0, _hl2 > 0)],
-            "n_pairs long, hl2 long, hl_shift_cents double, "
-            "urgent_shifted_up boolean",
-        )
-    a = daily.filter(F.col("smp") == 1).select(
-        F.col("cents").alias("ca")
+    Scale shape: one keyed reduce to ≤2·days rows, one bounded
+    collect (ValueError past _HL_DRIVER_MAX_DAYS), a 1-row
+    projection."""
+    rows = api.bounded_collect(
+        _daily_2sample(spark, sf_dir).select("smp", "cents"),
+        _HL_DRIVER_MAX_DAYS,
     )
-    b = daily.filter(F.col("smp") == 2).select(
-        F.col("cents").alias("cb")
-    )
-    # r12 (guide §2.5/§2.6): spread the streamed side — the filtered
-    # daily series is one AQE-coalesced partition, serializing the
-    # ≤6M-pair fan-out and its groupBy behind a single task otherwise.
-    diffs = (
-        api.spread_bounded(a)
-        .crossJoin(F.broadcast(b))
-        .select((F.col("ca") - F.col("cb")).alias("d"))
-    )
-    # pin the ≤6M-row distinct-difference frame: the block-ranked
-    # cumsum needs three more actions (split sampling, block sizes,
-    # total) and each would otherwise recompute the cross join
-    byval = (
-        diffs.groupBy("d")
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint()
-    )
-    cum = api.exact_global_keyed_cumsum(byval, "d", "cnt", "d", "cs")
-    t_total = byval.agg(F.sum("cnt").cast("long").alias("t"))
-    cum = cum.crossJoin(F.broadcast(t_total))
-    p1 = F.expr("(t + 1) div 2")
-    p2 = F.expr("(t + 2) div 2")
-    hit = F.col("cs") - F.col("cnt")
-    med = cum.agg(
-        F.max("t").cast("long").alias("t"),
-        (
-            F.sum(
-                F.when((hit < p1) & (F.col("cs") >= p1), F.col("d"))
-                .otherwise(0)
-            )
-            + F.sum(
-                F.when((hit < p2) & (F.col("cs") >= p2), F.col("d"))
-                .otherwise(0)
-            )
-        )
-        .cast("long")
-        .alias("hl2"),
-    )
+    ca = np.asarray([r["cents"] for r in rows if r["smp"] == 1], np.int64)
+    cb = np.asarray([r["cents"] for r in rows if r["smp"] == 2], np.int64)
+    d = np.sort((ca[:, None] - cb[None, :]).ravel())
+    t = int(d.size)
+    hl2 = int(d[(t + 1) // 2 - 1]) + int(d[(t + 2) // 2 - 1]) if t else None
+    med = spark.createDataFrame([(t or None, hl2)], "n_pairs long, hl2 long")
     return med.select(
-        F.col("t").alias("n_pairs"),
+        "n_pairs",
         "hl2",
         (F.col("hl2").cast("double") / 2).alias("hl_shift_cents"),
         (F.col("hl2") > 0).alias("urgent_shifted_up"),

@@ -13,14 +13,18 @@ concordance correlation.
 
 from __future__ import annotations
 
+from decimal import Decimal
+
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hadoop_deliver_spark import api
 from hadoop_deliver_spark.registry import register
 from hadoop_deliver_spark.tables import dec2, tbl
 
-#: driver-path gate of ts_qn_scale: most daily rows collected for the
-#: NumPy pair-difference selection
+#: bounded-collect gate of ts_qn_scale: most daily rows collected for
+#: the NumPy pair-difference selection
 _QN_DRIVER_MAX_DAYS = 4096
 
 
@@ -90,121 +94,48 @@ def ts_qn_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     axis (≤ days²/2 rows at ANY corpus scale — the ts_theil_sen
     frame argument) and every difference is an exact integer, so the
     order-statistic selection is exact: the oracle ranks by (d, i,
-    j) and picks rank k; the Spark side selects by EXACT INTEGER
-    RANK — the pair table reduces to (d, count) by a map-side-
-    combined groupBy, the block-ranked keyed cumsum
-    (:func:`~hadoop_deliver_spark.api.exact_global_keyed_cumsum`)
-    accumulates counts over d ascending with no single-partition
-    window, and the answer is min d with cum ≥ k. No float-fraction
-    percentile anywhere (the r11 form interpolated at (k−1)/(m−1),
-    whose index can land an ulp off k — exact only while adjacent
-    difference gaps stay below ~1e9; this form is exact at ANY
-    magnitude). The n/k scalars come from a count of the bounded
-    daily axis — the split-probe budget the block-ranked cores
-    already use.
-    The companion
-    column is the exact-moment sample SD, and the verdict — Qn sits
-    BELOW the SD, i.e. the tails inflate the classical estimate —
-    squares the 2.2219 literal textually on both engines against the
-    exact integer n-scaled SS (one double cast per side, fixed
-    order).
+    j) and picks rank k; the Spark side collects the daily series
+    once (api.bounded_collect) and takes element k of the NumPy
+    partition of the |y_i − y_j| — the same value, since ties at
+    rank k share it. No float-fraction percentile anywhere (the r11
+    form interpolated at (k−1)/(m−1), whose index can land an ulp
+    off k). The companion column is the exact-moment sample SD: n,
+    Σy and Σy² come from the collected series as exact Python ints
+    (Σy² as DECIMAL(38,0)), and the verdict — Qn sits BELOW the SD,
+    i.e. the tails inflate the classical estimate — squares the
+    2.2219 literal textually on both engines against the exact
+    integer n-scaled SS (one double cast per side, fixed order);
+    both stay Spark expressions on the 1-row frame. Fewer than two
+    days give no pair and no row, as in the oracle.
 
-    Scale shape: one keyed reduce to the bounded daily axis, a
-    bounded pairwise join, ONE exact sort-based percentile aggregate
-    over the bounded pair table, a 1-row moment reduce."""
+    Scale shape: one keyed reduce to the bounded daily axis, one
+    bounded collect (ValueError past _QN_DRIVER_MAX_DAYS), a 1-row
+    projection."""
     o = tbl(spark, sf_dir, "orders")
     daily = o.groupBy(F.to_date("o_orderdate").alias("day")).agg(
         F.sum(F.floor("o_totalprice").cast("long"))
         .cast("long")
         .alias("y")
     )
-    from pyspark.sql import Window
-
-    idx = daily.select(
-        "y",
-        F.row_number().over(Window.orderBy("day")).cast("long").alias("i"),
-        F.count(F.lit(1)).over(Window.partitionBy()).cast("long").alias("n"),
+    ys = [r["y"] for r in api.bounded_collect(daily, _QN_DRIVER_MAX_DAYS)]
+    n = len(ys)
+    rows = []
+    if n >= 2:
+        h = n // 2 + 1
+        k = h * (h - 1) // 2
+        y = np.asarray(ys, dtype=np.int64)
+        d = np.abs(y[:, None] - y[None, :])[np.triu_indices(n, 1)]
+        q = int(np.partition(d, k - 1)[k - 1])
+        rows = [(n, q, sum(ys), Decimal(sum(v * v for v in ys)))]
+    j = spark.createDataFrame(
+        rows, "mn long, q long, s long, qq decimal(38,0)"
     )
-    # r12 (guide §2.5/§2.6): spread the streamed side of the pairwise
-    # NLJ — the single-partition daily table otherwise serializes the
-    # O(days²) difference fan-out and its groupBy behind one task.
-    from hadoop_deliver_spark.api import spread_bounded
-
-    a = spread_bounded(
-        idx.select(
-            F.col("y").alias("ya"), F.col("i").alias("ia"), F.col("n")
-        )
-    )
-    b = idx.select(F.col("y").alias("yb"), F.col("i").alias("ib"))
-    pairs = a.join(F.broadcast(b), F.col("ia") < F.col("ib")).select(
-        F.abs(F.col("ya") - F.col("yb")).alias("d")
-    )
-    # scalar probes on the BOUNDED daily axis (one row per calendar
-    # day at any corpus scale): n days → k = C(⌊n/2⌋+1, 2). Exact
-    # integer-rank selection: the ~n²/2 pair table reduces to
-    # (d, count) via a map-side-combined groupBy (far fewer rows
-    # than pairs), the block-ranked keyed cumsum accumulates counts
-    # over d ascending WITHOUT a single-partition window, and the
-    # k-th order statistic is min d with cum ≥ k. Exact at any value
-    # magnitude — the r11 percentile-at-(k−1)/(m−1) form could land
-    # an ulp off rank k once adjacent gaps exceeded ~1e9.
-    from hadoop_deliver_spark.api import exact_global_keyed_cumsum
-
-    n_days = daily.count()
-    h = n_days // 2 + 1
-    k = h * (h - 1) // 2
-    # r12 (second pass): the daily series is CALENDAR-BOUNDED (one row
-    # per day at any corpus scale), so the O(days²) absolute-difference
-    # fan-out is a bounded DRIVER computation (the agg_hl_shift_2sample
-    # device): collect the series once, select the exact k-th order
-    # statistic in NumPy (identical integer-rank semantics: sorted
-    # ascending, element k). The distributed pair join below stays as
-    # the past-gate fallback and the formulation of record.
-    if 0 < n_days <= _QN_DRIVER_MAX_DAYS:
-        import numpy as np
-
-        _y = np.asarray(
-            [r["y"] for r in daily.select("y").collect()], dtype=np.int64
-        )
-        _iu = np.triu_indices(n_days, 1)
-        _d = np.abs(_y[:, None] - _y[None, :])[_iu]
-        _q = (
-            int(np.partition(_d, k - 1)[k - 1])
-            if 1 <= k <= _d.size
-            else None
-        )
-        sel = spark.createDataFrame(
-            [(n_days, _q)], "n long, q long"
-        )
-    else:
-        # localCheckpoint: the block-ranked core evaluates its input
-        # three times (split probe, block sizes, final pass) — without
-        # the checkpoint each pass would recompute the O(days²) pairwise
-        # self-join; the (d, count) table it pins is far smaller than the
-        # pair table (distinct differences only).
-        byd = (
-            pairs.groupBy("d")
-            .agg(F.count(F.lit(1)).cast("long").alias("c"))
-            .localCheckpoint(eager=True)
-        )
-        cdf = exact_global_keyed_cumsum(byd, "d", "c", "d", "cum")
-        sel = (
-            cdf.filter(F.col("cum") >= k)
-            .agg(F.min("d").cast("long").alias("q"))
-            .select(F.lit(n_days).cast("long").alias("n"), "q")
-        )
-    mom = daily.agg(
-        F.count(F.lit(1)).cast("long").alias("mn"),
-        F.sum("y").cast("long").alias("s"),
-        F.sum(F.col("y").cast("decimal(38,0)") * F.col("y")).alias("qq"),
-    )
-    j = sel.crossJoin(F.broadcast(mom))
     mn, s, qq, q = F.col("mn"), F.col("s"), F.col("qq"), F.col("q")
     css = (
         mn.cast("decimal(38,0)") * qq - s.cast("decimal(38,0)") * s
     ).cast("double")
     return j.select(
-        F.col("n").alias("n_days"),
+        mn.alias("n_days"),
         q.alias("qn_raw_dollars"),
         F.round(2.2219 * q, 4).alias("qn_scale"),
         F.round(

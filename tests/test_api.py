@@ -168,6 +168,16 @@ def test_block_ranked_cores_run_no_more_jobs(spark):
     assert all(got[n] <= _RANK_CORE_JOBS[n] for n in got), got
 
 
+def test_bounded_collect_refuses_past_its_gate(spark):
+    df = spark.range(5).withColumnRenamed("id", "k")
+    # exactly at the gate: every row comes back
+    assert sorted(r["k"] for r in api.bounded_collect(df, 5)) == list(range(5))
+    # one row past it: refused, naming the gate
+    with pytest.raises(ValueError, match="gate of 4 rows"):
+        api.bounded_collect(df, 4)
+    assert api.bounded_collect(df.filter("k < 0"), 0) == []
+
+
 def test_asof_join_backward_and_forward(spark):
     quotes = spark.createDataFrame(
         [("A", 10, 1.0), ("A", 20, 2.0), ("B", 15, 9.0)],

@@ -299,10 +299,6 @@ _NESTED_LOOP_OK = {
     "agg_pps_systematic",
     # 1-row beta-prior frame onto the per-user rates
     "customers_eb_shrinkage",
-    # TRUE pairwise cross join of two CALENDAR-BOUNDED daily series
-    # (≤2.4k × ≤2.4k at ANY corpus scale); plus the 1-row total
-    # broadcast
-    "agg_hl_shift_2sample",
     # 1-row grand-totals broadcast onto the 1-row items pivot
     "agg_cronbach_alpha",
     # 1-row moment frame broadcast onto the screening scan
@@ -346,20 +342,15 @@ _NESTED_LOOP_OK = {
     "orders_ks_uniform_dates",
     # 1-row corpus-count scalar onto the block-ranked pass
     "agg_wolfson_polarization",
-    # TRUE pairwise join of the CALENDAR-BOUNDED daily series with
-    # itself (≤2.4k × 2.4k at any corpus scale — the
-    # agg_hl_shift_2sample argument) + 1-row moment broadcast
-    "ts_qn_scale",
     # 1-row centerline total broadcast onto the bounded daily series
     "events_c_chart",
     # 1-row runs-count scalar broadcast onto the 1-row sample totals
     "orders_runs_ww",
     # 1-row moment frame × two 1-row top/bottom-3 ladder frames
     "ts_generalized_esd",
-    "llm_sim_ivf",         # 10-row centroid table broadcast
-    # recall summary composes llm_sim_ivf (centroid broadcast) with
-    # llm_sim_bruteforce (broadcast probe pass) — both already
-    # justified above / below; the composition adds no new NLJ
+    # recall summary composes the memoized llm_sim_ivf result with
+    # llm_sim_bruteforce (broadcast probe pass, justified below); the
+    # composition adds no new NLJ
     "llm_sim_ivf_recall",
     "ts_resample_gapfill", # 1-row min/max bounds broadcast for the grid
     "ts_interpolate_linear",  # same 1-row bounds broadcast as gapfill
@@ -483,7 +474,6 @@ _NESTED_LOOP_OK = {
     "graph_degree_gini",
     # TRUE pairwise join of the calendar-bounded daily series
     # (≤days²/2 pairs at ANY corpus scale) + 1-row ε/n broadcasts
-    # (the agg_hl_shift_2sample envelope)
     "ts_rqa_recurrence",
     # TRUE pairwise join of the calendar-bounded daily rank pairs
     # for the bivariate dominance counts (the ts_rqa_recurrence
@@ -491,23 +481,19 @@ _NESTED_LOOP_OK = {
     "ts_hoeffding_d",
     # TRUE pairwise joins of the calendar-bounded daily series for
     # the medcouple kernel / nested-median distances (the
-    # ts_qn_scale envelope) + 1-row quantile/fence broadcasts
+    # ts_rqa_recurrence envelope) + 1-row quantile/fence broadcasts
     "ts_medcouple",
     "ts_sn_scale",
     # TRUE day×day pair grid for the double-centered distance
-    # matrices (the ts_qn_scale envelope) + 1-row grand-mean/count
+    # matrices (the ts_rqa_recurrence envelope) + 1-row grand-mean/count
     # broadcasts
     "ts_distance_correlation",
-    # TRUE pairwise slope join of the calendar-bounded daily series
-    # (checkpointed once) + 1-row slope/count broadcasts
-    "ts_passing_bablok",
     # window-expansion range join + window-pair cross products, BOTH
-    # sides calendar-bounded (the ts_qn_scale envelope) + 1-row
+    # sides calendar-bounded (the ts_rqa_recurrence envelope) + 1-row
     # count broadcast
     "ts_matrix_profile",
     # day×frequency Schuster grids, BOTH axes calendar-bounded (the
-    # ts_qn_scale envelope) + 1-row total broadcasts
-    "ts_fisher_g_test",
+    # ts_rqa_recurrence envelope) + 1-row total broadcasts
     "ts_bartlett_cumpgram",
     # 1-row (n, T) broadcast for the order-free Lorenz-length terms
     # (the agg_hoover_index pattern)
@@ -591,9 +577,6 @@ _NESTED_LOOP_OK = {
     # two 1-row broadcasts: the grand total/dof and the chi2 sum;
     # marginals join back by hash on their keys
     "agg_chi2_independence",
-    # 10-row seed-centroid broadcast (the llm_sim_ivf pattern); the
-    # within-cell pair join is an equi-join on the cell key
-    "llm_semdedup",
     # two 1-row broadcasts: the (n1, n2) totals and the sup |dnum|
     "agg_ks_test",
     # 1-row broadcasts throughout: total, Q1, Q3, fence count — the
@@ -1140,13 +1123,15 @@ def test_no_accidental_nested_loop_joins(spark, sf_dir):
     llm_dedup_ngram_jaccard hash gram ids) — a regression to an
     all-pairs theta join fails here even though fixture-scale parity
     would still pass."""
-    offenders = [
+    nested = {
         name
         for name, plan in _registry_plans(spark, sf_dir).items()
-        if name not in _NESTED_LOOP_OK
-        and ("CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan)
-    ]
+        if "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan
+    }
+    offenders = sorted(nested - _NESTED_LOOP_OK)
     assert not offenders, f"nested-loop join leaked into: {offenders}"
+    gone = sorted(_NESTED_LOOP_OK - nested)
+    assert not gone, f"stale allowlist entries (update _NESTED_LOOP_OK): {gone}"
 
 
 def test_grid_cosine_pairs_lossless(spark, sf_dir):
@@ -1787,13 +1772,12 @@ _COLLECT_OK = {
     # ANY corpus scale) + 1-row bounds — the sequential Viterbi DP
     # runs driver-side like events_markov_reach's 25-cell recurrence
     ("wave167.py", "events_kleinberg_bursts"),
-    # calendar-bounded daily series collects (≤ days-of-history rows
-    # at ANY corpus scale, gated) — the bounded O(days²) pairwise rank
-    # selections run driver-side in NumPy (r12); the distributed pair
-    # joins remain as the past-gate fallbacks
-    ("wave65.py", "agg_hl_shift_2sample"),
-    ("wave91.py", "ts_qn_scale"),
-    ("wave162.py", "ts_passing_bablok"),
+    # ≤ max_rows + 1 rows, one action; raises past max_rows. Callers:
+    # the calendar-bounded daily series (≤ days-of-history rows at ANY
+    # corpus scale) of agg_hl_shift_2sample, ts_qn_scale and
+    # ts_passing_bablok, whose O(days²) pairwise rank selections run
+    # driver-side in NumPy
+    ("api.py", "bounded_collect"),
     # 1-row scalar aggregates (grand totals, maxima, anchors, averages)
     ("analytics3.py", "orders_pareto_abc"),
     ("classics.py", "supplier_top_revenue"),
@@ -2516,8 +2500,7 @@ def test_memo_misses_after_source_rewrite(spark, sf_dir, tmp_path, table):
 
 
 # ---------------------------------------------------------------------------
-# driver-path gates: probe first, collect only inside the gate; the
-# past-gate path must equal the driver path
+# driver-path gates: nothing is collected past a gate
 # ---------------------------------------------------------------------------
 
 
@@ -2537,48 +2520,141 @@ def _collect_sizes(monkeypatch, df):
     return sizes
 
 
-def test_hl_shift_past_gate_matches_driver_path(spark, sf_dir, monkeypatch):
-    from hadoop_deliver_spark.operators import wave65
-    from tests.parity import assert_frames_match
+# The three calendar-bounded pairwise operators: one api.bounded_collect
+# of a daily series, NumPy arithmetic, a 1-row frame. name → (module,
+# gate constant, Spark jobs per call at sf0.001 on local[4] when each
+# still probed the series size first and kept a distributed pair-join
+# fallback — measured twice, identical). None may run more.
+_BOUNDED_OPS = {
+    "agg_hl_shift_2sample": ("wave65", "_HL_DRIVER_MAX_DAYS", 7),
+    "ts_qn_scale": ("wave91", "_QN_DRIVER_MAX_DAYS", 10),
+    "ts_passing_bablok": ("wave162", "_PB_DRIVER_MAX_DAYS", 28),
+}
 
-    want = wave65.agg_hl_shift_2sample(spark, sf_dir).toPandas()
-    n_days = wave65._daily_2sample(spark, sf_dir).count()
-    monkeypatch.setattr(wave65, "_HL_DRIVER_MAX_DAYS", n_days - 1)
+
+@pytest.mark.parametrize("name", sorted(_BOUNDED_OPS))
+def test_bounded_operators_refuse_past_gate(spark, sf_dir, monkeypatch, name):
+    """With the gate one below the series size the operator raises
+    ValueError, and no collect brings back more than gate + 1 rows.
+    At the shipped gate its one collect is the whole series."""
+    import importlib
+
+    from hadoop_deliver_spark.registry import load_all
+
+    modname, gate, _ = _BOUNDED_OPS[name]
+    mod = importlib.import_module(f"hadoop_deliver_spark.operators.{modname}")
+    fn = load_all()[name].fn
     with monkeypatch.context() as m:
         sizes = _collect_sizes(m, tbl(spark, sf_dir, "orders"))
-        df = wave65.agg_hl_shift_2sample(spark, sf_dir)
-    assert max(sizes, default=0) < n_days, "daily series collected past gate"
-    assert_frames_match(df.toPandas(), want, "agg_hl_shift_2sample")
+        fn(spark, sf_dir)
+    assert len(sizes) == 1 and sizes[0] > 1, sizes
+    n = sizes[0]
+    monkeypatch.setattr(mod, gate, n - 1)
+    with monkeypatch.context() as m:
+        sizes = _collect_sizes(m, tbl(spark, sf_dir, "orders"))
+        with pytest.raises(ValueError, match=f"gate of {n - 1} rows"):
+            fn(spark, sf_dir)
+    assert max(sizes, default=0) <= n, "collected past gate + 1"
 
 
-def test_passing_bablok_past_gate_matches_driver_path(
-    spark, sf_dir, monkeypatch
+@pytest.mark.parametrize("name", sorted(_BOUNDED_OPS))
+def test_bounded_operators_run_no_more_jobs(spark, sf_dir, name):
+    from hadoop_deliver_spark.registry import load_all
+    from tests.parity import jobs_per_call
+
+    q = load_all()[name]
+    got = jobs_per_call(spark, lambda: q.fn(spark, sf_dir))
+    assert got <= _BOUNDED_OPS[name][2], f"{name}: {got} jobs"
+
+
+def _one_order_per_day(o, li, days, priorities, x_cents, y_cents):
+    """``o``/``li`` cut to one order per day with one line each, so the
+    order-header daily revenue is ``x_cents`` and the line-recomputed
+    one ``y_cents``."""
+    import pyarrow as pa
+
+    def put(tab, col, vals):
+        typ = tab.schema.field(col).type
+        i = tab.schema.get_field_index(col)
+        return tab.set_column(i, col, pa.array(vals, typ))
+
+    n = len(days)
+    o = put(o.slice(0, n), "o_orderdate", days)
+    o = put(o, "o_orderpriority", priorities)
+    o = put(o, "o_totalprice", [v / 100 for v in x_cents])
+    li = put(li.slice(0, n), "l_orderkey", o["o_orderkey"].to_pylist())
+    li = put(li, "l_extendedprice", [v / 100 for v in y_cents])
+    return o, li
+
+
+_DEGENERATE_ORDERS = [
+    "empty",
+    "one_day",
+    "two_days",
+    "urgent_only",
+    # PB: even slope count whose two middle slopes (0 and 1) do not
+    # share a sign — the arithmetic mean; the slope of −1 is dropped
+    "pb_middle_slopes_cross_zero",
+    # PB: the only slope is < −1, so the k-shifted rank (2) lies past
+    # the one slope — NULL slope and intercept, counts kept
+    "pb_shift_past_slopes",
+]
+
+
+@pytest.mark.parametrize("case", _DEGENERATE_ORDERS)
+def test_bounded_operators_match_oracle_on_degenerate_orders(
+    spark, sf_dir, tmp_path, case
 ):
-    from hadoop_deliver_spark.operators import wave162
+    """Degenerate input for the three bounded-collect operators:
+    ``orders`` cut from the fixtures to nothing, one day, two days or
+    URGENT only, and two crafted one-order-per-day series for the
+    Passing-Bablok edge cases. Every other table is linked from the
+    fixtures; each result must match the DuckDB oracle."""
+    import os
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from hadoop_deliver_spark.registry import load_all
+    from hadoop_deliver_spark.tables import TABLES
     from tests.parity import assert_frames_match
 
-    want = wave162.ts_passing_bablok(spark, sf_dir).toPandas()
-    n_days = int(want["n_days"][0])
-    monkeypatch.setattr(wave162, "_PB_DRIVER_MAX_DAYS", n_days - 1)
-    with monkeypatch.context() as m:
-        sizes = _collect_sizes(m, tbl(spark, sf_dir, "orders"))
-        df = wave162.ts_passing_bablok(spark, sf_dir)
-    assert max(sizes, default=0) < n_days, "daily series collected past gate"
-    assert_frames_match(df.toPandas(), want, "ts_passing_bablok")
-
-
-def test_qn_scale_past_gate_matches_driver_path(spark, sf_dir, monkeypatch):
-    from hadoop_deliver_spark.operators import wave91
-    from tests.parity import assert_frames_match
-
-    want = wave91.ts_qn_scale(spark, sf_dir).toPandas()
-    n_days = int(want["n_days"][0])
-    monkeypatch.setattr(wave91, "_QN_DRIVER_MAX_DAYS", n_days - 1)
-    with monkeypatch.context() as m:
-        sizes = _collect_sizes(m, tbl(spark, sf_dir, "orders"))
-        df = wave91.ts_qn_scale(spark, sf_dir)
-    assert max(sizes, default=0) < n_days, "daily series collected past gate"
-    assert_frames_match(df.toPandas(), want, "ts_qn_scale")
+    o = pq.read_table(f"{sf_dir}/orders.parquet")
+    li = pq.read_table(f"{sf_dir}/lineitem.parquet")
+    typ = o.schema.field("o_orderdate").type
+    days = pc.unique(o["o_orderdate"]).sort().to_pylist()
+    if case == "empty":
+        o = o.slice(0, 0)
+    elif case in ("one_day", "two_days"):
+        last = days[0 if case == "one_day" else 1]
+        o = o.filter(pc.less_equal(o["o_orderdate"], pa.scalar(last, typ)))
+    elif case == "urgent_only":
+        o = o.filter(pc.equal(o["o_orderpriority"], "1-URGENT"))
+    elif case == "pb_middle_slopes_cross_zero":
+        o, li = _one_order_per_day(
+            o, li, days[:3], ["1-URGENT", "5-LOW", "5-LOW"],
+            [100, 200, 300], [100, 200, 100],
+        )
+    else:
+        o, li = _one_order_per_day(
+            o, li, days[:2], ["1-URGENT", "5-LOW"], [100, 200], [300, 100]
+        )
+    written = {"orders": o, "lineitem": li}
+    duck = duckdb.connect()
+    for t in TABLES:
+        path = os.path.join(tmp_path, f"{t}.parquet")
+        if t in written:
+            pq.write_table(written[t], path)
+        else:
+            os.symlink(os.path.join(sf_dir, f"{t}.parquet"), path)
+        duck.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    R = load_all()
+    for name in sorted(_BOUNDED_OPS):
+        got = R[name].fn(spark, str(tmp_path)).toPandas()
+        assert_frames_match(got, duck.execute(R[name].oracle).df(), name)
+    duck.close()
 
 
 def test_arrow_refine_past_gate_matches_driver_path(
