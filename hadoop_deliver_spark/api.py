@@ -67,6 +67,7 @@ __all__ = [
     "dedup_chunks",
     "gopher_quality",
     "survival_km",
+    "risk_sets",
     "ewma_smooth",
     "holt_smooth",
     "winnow_fingerprints",
@@ -2615,6 +2616,88 @@ def gopher_quality(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+def risk_sets(
+    df: DataFrame,
+    duration_col: str,
+    event_col: str,
+    by: str | None = None,
+    levels: Sequence = (),
+) -> DataFrame:
+    """Per-duration risk sets from per-subject observations:
+    ``duration_col`` (integer time-to-event-or-censoring) and
+    ``event_col`` (true = the event happened, false = right-censored
+    at that time). Returns ``(by, duration_col, deaths, at_risk)``,
+    one row per (group, observed duration): ``deaths`` counts the
+    events at that duration and ``at_risk`` the subjects whose
+    duration is at least it, both exact longs. ``by`` splits the
+    subjects into groups with their own risk sets. With ``levels``,
+    every listed ``by`` value gets a row at EVERY observed duration
+    (zero-filled, so ``at_risk`` may be 0), the common grid a
+    two-sample test pivots on.
+
+    Scale shape: one keyed reduce to the per-duration aggregate, whose
+    cardinality is bounded by the TIME AXIS (days of history), never
+    the subject count; the reverse running sum is a ROWS window over
+    that aggregate, partitioned by ``by``. The ``levels`` grid is a
+    literal explode, not a scan of the data for its groups.
+
+    >>> risk_sets(lives, "t_obs", "died", by="grp", levels=["a", "b"])
+    """
+    keys = [by] if by else []
+    lt = df.groupBy(*keys, duration_col).agg(
+        F.count(F.lit(1)).alias("_rs_n"),
+        F.count_if(F.col(event_col)).alias("deaths"),
+    )
+    if levels:
+        grid = (
+            lt.select(duration_col)
+            .distinct()
+            .select(
+                duration_col,
+                F.explode(F.array(*[F.lit(v) for v in levels])).alias(by),
+            )
+        )
+        lt = grid.join(lt, [by, duration_col], "left").select(
+            by,
+            duration_col,
+            F.coalesce("deaths", F.lit(0)).alias("deaths"),
+            F.coalesce("_rs_n", F.lit(0)).alias("_rs_n"),
+        )
+    w = (
+        Window.partitionBy(*keys)
+        .orderBy(F.col(duration_col).desc())
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    return lt.select(
+        *keys,
+        duration_col,
+        F.col("deaths").cast("long").alias("deaths"),
+        F.sum("_rs_n").over(w).cast("long").alias("at_risk"),
+    )
+
+
+def _km_product(duration_col: str, by: str | None = None) -> Column:
+    """Kaplan-Meier S(t) = Π_{t'≤t} (1 − d/n) over :func:`risk_sets`
+    rows, as exp(Σ ln(1 − d/n)) in a running window (partitioned by
+    ``by``). The d = n extinction step is CASE-guarded (no ln(0)) and
+    zeroes the product from there on. Apply it to rows already cut to
+    ``deaths > 0``: a zero-filled row (d = n = 0) would trip the
+    guard."""
+    w = (
+        Window.partitionBy(*([by] if by else []))
+        .orderBy(duration_col)
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    d, n = F.col("deaths"), F.col("at_risk")
+    logsum = F.sum(
+        F.when(n > d, F.log(1.0 - d.cast("double") / n)).otherwise(
+            F.lit(0.0)
+        )
+    ).over(w)
+    hit_zero = F.max(F.when(d == n, 1).otherwise(0)).over(w)
+    return F.exp(logsum) * (1 - hit_zero)
+
+
 def survival_km(
     df: DataFrame, duration_col: str, event_col: str
 ) -> DataFrame:
@@ -2623,51 +2706,24 @@ def survival_km(
     ``event_col`` (true = the event happened, false = right-censored
     at that time). Returns one row per duration WITH events:
     (duration_col, at_risk, deaths, survival) where survival is the
-    KM product Π_{t'≤t} (1 − d/n) rounded to 4 decimals.
+    KM product Π_{t'≤t} (1 − d/n) rounded to 4 decimals; survival
+    after extinction is exactly 0.
 
-    Scale shape: the subject table reduces to a per-duration
-    aggregate in one keyed shuffle; every cumulative window runs over
-    that aggregate, whose cardinality is bounded by the TIME AXIS
-    (days of history), never the subject count. The d = n extinction
-    step is CASE-guarded (no ln(0)); survival after extinction is
-    exactly 0.
+    Scale shape: :func:`risk_sets` (one keyed reduce, a reverse
+    running sum over the time-axis-bounded aggregate), then the
+    product's running windows over the same aggregate.
 
     >>> survival_km(lives, "t_obs", "died")
     """
-    lt = df.groupBy(duration_col).agg(
-        F.count(F.lit(1)).alias("_km_n"),
-        F.count_if(F.col(event_col)).alias("deaths"),
-    )
-    w_risk = Window.orderBy(F.col(duration_col).desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    risk = lt.select(
-        duration_col,
-        "deaths",
-        F.sum("_km_n").over(w_risk).alias("at_risk"),
-    ).where(F.col("deaths") > 0)
-    w_cum = Window.orderBy(duration_col).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    ln_term = F.when(
-        F.col("at_risk") > F.col("deaths"),
-        F.log(1.0 - F.col("deaths").cast("double") / F.col("at_risk")),
-    ).otherwise(F.lit(0.0))
-    zero_flag = F.when(F.col("deaths") == F.col("at_risk"), 1).otherwise(0)
-    km = risk.select(
-        duration_col,
-        F.col("at_risk").cast("long").alias("at_risk"),
-        "deaths",
-        F.sum(ln_term).over(w_cum).alias("_km_logsum"),
-        F.max(zero_flag).over(w_cum).alias("_km_zero"),
-    )
-    return km.select(
-        duration_col,
-        "at_risk",
-        "deaths",
-        F.when(F.col("_km_zero") == 1, F.lit(0.0))
-        .otherwise(F.round(F.exp("_km_logsum"), 4))
-        .alias("survival"),
+    return (
+        risk_sets(df, duration_col, event_col)
+        .where(F.col("deaths") > 0)
+        .select(
+            duration_col,
+            "at_risk",
+            "deaths",
+            F.round(_km_product(duration_col), 4).alias("survival"),
+        )
     )
 
 
@@ -2990,7 +3046,13 @@ def co_membership_graph(
     comes back broadcast-hinted. Past the gates:
     :func:`_co_membership_edges_join` (unrestricted ids and scale),
     degrees counted over the edge endpoints. Both paths are proven
-    equal by property test."""
+    equal by property test.
+
+    On the dense path ``neighbors`` is a lazy local checkpoint: no job
+    runs for it here, the first action that reads it stores it, and
+    every later read (the other branch of the same query, a probe, the
+    caller's fallback) scans the stored rows instead of rebuilding the
+    per-id assembly from the source."""
     # spelled as isNotNull (not dropna) so every branch over ``du``
     # carries the same filter the optimizer would infer for a join on
     # either column, and shared exchanges are reused across branches
@@ -3009,7 +3071,9 @@ def co_membership_graph(
         )
         return edges, degrees, None
     n_chunks, _ = gate
-    nb = neighbor_bitmaps(du, block_col, id_col, n_chunks)
+    nb = neighbor_bitmaps(du, block_col, id_col, n_chunks).localCheckpoint(
+        eager=False
+    )
     edges = nb.select(
         F.col(id_col).alias("u"),
         F.explode(
@@ -3037,7 +3101,8 @@ def triangle_stats_from_neighbors(
     table is materialized once (the id gate of
     :func:`co_membership_graph` bounds it; only its broadcast needs
     the budget), then one 1-row (|V|, width) probe and one aggregate
-    action scan it."""
+    action scan it. The lazy checkpoint that core returns is stored by
+    the probe, so a caller that is declined counts on the stored rows."""
     nb = _materialize_for_probes(nb)
     # one task over the materialized rows: no exchange, one job
     probe = nb.coalesce(1).agg(

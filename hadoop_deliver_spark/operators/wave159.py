@@ -18,8 +18,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hadoop_deliver_spark import api
+from hadoop_deliver_spark.operators.wave46 import (
+    parity_lives,
+    parity_risk_pivot,
+)
 from hadoop_deliver_spark.registry import register
-from hadoop_deliver_spark.tables import tbl
 
 _CHI2_1_95 = "3.841459"
 _TAU = 5  # the KM cutoff construction bounds t_obs to [0, 5] days
@@ -100,93 +104,19 @@ _LIVES_SQL = """
 )
 def events_survival_gehan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gehan–Breslow–Wilcoxon test (Gehan 1965, Breslow 1970) on the
-    events_survival_km conversion cohort with the parity A/B split:
-    the log-rank's per-time terms (O₁ₜ − E₁ₜ, Vₜ) reweighted by the
-    TOTAL at-risk count nₜ — U = Σ nₜ(d₁ₜ − dₜn₁ₜ/nₜ),
-    Var = Σ nₜ²·Vₜ, χ² = U²/Var vs χ²₁. Early event times carry the
-    full cohort's weight, late ones only the survivors', so Gehan
-    beats the unweighted events_survival_logrank when the hazard gap
-    is front-loaded and loses when it is proportional — reporting
-    both is the standard referee request precisely because their
-    disagreement localizes WHERE the curves part. Frame, cutoff,
-    censoring and the hypergeometric variance are textually
-    events_survival_logrank's; the weights multiply exact integer
+    :func:`parity_lives` conversion cohort: the log-rank's per-time
+    terms (O₁ₜ − E₁ₜ, Vₜ) reweighted by the TOTAL at-risk count nₜ —
+    U = Σ nₜ(d₁ₜ − dₜn₁ₜ/nₜ), Var = Σ nₜ²·Vₜ, χ² = U²/Var vs χ²₁.
+    Early event times carry the full cohort's weight, late ones only
+    the survivors', so Gehan beats the unweighted
+    events_survival_logrank when the hazard gap is front-loaded and
+    loses when it is proportional — reporting both is the standard
+    referee request precisely because their disagreement localizes
+    WHERE the curves part. The per-time table is log-rank's own
+    (:func:`parity_risk_pivot`); the weights multiply exact integer
     at-risk counts, and the significance flag cross-multiplies
-    U² > χ²crit·Var.
-
-    Scale shape: the survival-family plan — one keyed per-user
-    reduce, then a calendar-bounded (day × 2 group) grid with
-    partitioned reverse-cumsum at-risk windows and a 1-row reduce."""
-    e = tbl(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.to_date("ts").alias("d")
-    )
-    b = e.agg(F.date_add(F.min("d"), 5).alias("cutoff"))
-    u = e.groupBy("user_id").agg(
-        F.min("d").alias("first_d"),
-        F.min(F.when(F.col("event_type") == "purchase", F.col("d"))).alias(
-            "purch_d"
-        ),
-    )
-    died = F.col("purch_d").isNotNull() & (
-        F.col("purch_d") <= F.col("cutoff")
-    )
-    lives = (
-        u.crossJoin(F.broadcast(b))
-        .where(F.col("first_d") <= F.col("cutoff"))
-        .select(
-            F.when(F.col("user_id") % 2 == 0, F.lit("even"))
-            .otherwise(F.lit("odd"))
-            .alias("grp"),
-            F.when(died, F.datediff("purch_d", "first_d"))
-            .otherwise(F.datediff("cutoff", "first_d"))
-            .alias("t_obs"),
-            died.alias("died"),
-        )
-    )
-    lt = lives.groupBy("grp", "t_obs").agg(
-        F.count(F.lit(1)).cast("long").alias("n_tot"),
-        F.count_if(F.col("died")).cast("long").alias("d"),
-    )
-    grid = (
-        lt.select("t_obs")
-        .distinct()
-        .crossJoin(
-            F.broadcast(
-                lt.sparkSession.createDataFrame(
-                    [("even",), ("odd",)], "grp STRING"
-                )
-            )
-        )
-    )
-    risk = (
-        grid.join(lt, ["grp", "t_obs"], "left")
-        .select(
-            "grp",
-            "t_obs",
-            F.coalesce(F.col("d"), F.lit(0)).cast("long").alias("d"),
-            F.coalesce(F.col("n_tot"), F.lit(0)).alias("nt"),
-        )
-        .withColumn(
-            "n_risk",
-            F.sum("nt")
-            .over(
-                Window.partitionBy("grp")
-                .orderBy(F.col("t_obs").desc())
-                .rowsBetween(Window.unboundedPreceding, 0)
-            )
-            .cast("long"),
-        )
-    )
-    piv = risk.groupBy("t_obs").agg(
-        F.sum(F.when(F.col("grp") == "even", F.col("d")))
-        .cast("long")
-        .alias("d1"),
-        F.sum(F.when(F.col("grp") == "even", F.col("n_risk")))
-        .cast("long")
-        .alias("n1"),
-        F.sum("d").cast("long").alias("d"),
-        F.sum("n_risk").cast("long").alias("n"),
-    )
+    U² > χ²crit·Var. With Var = 0, χ² is NULL, as in SQL."""
+    piv, tot = parity_risk_pivot(spark, sf_dir)
     n, n1, d = F.col("n"), F.col("n1"), F.col("d")
     wt = n.cast("double") * (
         F.col("d1") - d.cast("double") * n1 / n
@@ -203,19 +133,17 @@ def events_survival_gehan(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (n - 1)
         ),
     ).otherwise(F.lit(0.0))
-    terms = piv.filter(d > 0).select(wt.alias("wt"), vv.alias("wv"))
+    terms = piv.select(wt.alias("wt"), vv.alias("wv"))
     s = terms.agg(F.sum("wt").alias("u"), F.sum("wv").alias("v"))
-    tot = lives.agg(
-        F.count_if(F.col("grp") == "even").cast("long").alias("n_even"),
-        F.count_if(F.col("grp") == "odd").cast("long").alias("n_odd"),
-    )
     return (
         s.crossJoin(F.broadcast(tot))
         .select(
             "n_even",
             "n_odd",
             F.round("u", 6).alias("gehan_u"),
-            F.round(F.col("u") * F.col("u") / F.col("v"), 6).alias("chi2"),
+            F.round(
+                F.try_divide(F.col("u") * F.col("u"), F.col("v")), 6
+            ).alias("chi2"),
             (
                 F.col("u") * F.col("u")
                 > float(_CHI2_1_95) * F.col("v")
@@ -276,7 +204,7 @@ def events_survival_gehan(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_survival_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Restricted mean survival time (Irwin 1949; Royston & Parmar
-    2013) per parity group on the events_survival_km cohort:
+    2013) per parity group on the :func:`parity_lives` cohort:
     RMST(τ) = ∫₀^τ S(t)dt — the area under the step KM curve to
     τ = 5 days (the cutoff construction's horizon), assembled as
     1·t₁ (the all-alive first interval) + Σ S(tₖ)·(tₖ₊₁−tₖ) with
@@ -285,82 +213,17 @@ def events_survival_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
     plateau (median survival undefined) and, unlike the hazard
     ratio, needs no proportional-hazards assumption — the natural
     summary beside events_survival_logrank / _gehan, which only
-    test. S(t) uses the exact same exp(Σln(1−d/n)) construction and
-    zero-hit guard as events_survival_km, partitioned by group;
-    interval widths are exact integer day differences.
+    test. S(t) is events_survival_km's product over
+    ``api.risk_sets``, partitioned by group; interval widths are
+    exact integer day differences.
 
-    Scale shape: the survival-family plan — keyed per-user reduce,
-    per-group reverse-cumsum at-risk windows over the
-    calendar-bounded day grid, lead/row_number on the ≤6-row event
+    Scale shape: per-group ``api.risk_sets`` over the
+    calendar-bounded day axis, lead/row_number on the ≤6-row event
     grid, one group-keyed reduce."""
-    e = tbl(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.to_date("ts").alias("d")
-    )
-    b = e.agg(F.date_add(F.min("d"), 5).alias("cutoff"))
-    u = e.groupBy("user_id").agg(
-        F.min("d").alias("first_d"),
-        F.min(F.when(F.col("event_type") == "purchase", F.col("d"))).alias(
-            "purch_d"
-        ),
-    )
-    died = F.col("purch_d").isNotNull() & (
-        F.col("purch_d") <= F.col("cutoff")
-    )
-    lives = (
-        u.crossJoin(F.broadcast(b))
-        .where(F.col("first_d") <= F.col("cutoff"))
-        .select(
-            F.when(F.col("user_id") % 2 == 0, F.lit("even"))
-            .otherwise(F.lit("odd"))
-            .alias("grp"),
-            F.when(died, F.datediff("purch_d", "first_d"))
-            .otherwise(F.datediff("cutoff", "first_d"))
-            .alias("t_obs"),
-            died.alias("died"),
-        )
-    )
-    lt = lives.groupBy("grp", "t_obs").agg(
-        F.count(F.lit(1)).cast("long").alias("n_total"),
-        F.count_if(F.col("died")).cast("long").alias("deaths"),
-    )
-    wdesc = (
-        Window.partitionBy("grp")
-        .orderBy(F.col("t_obs").desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wasc = (
-        Window.partitionBy("grp")
-        .orderBy("t_obs")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    risk = lt.withColumn(
-        "at_risk", F.sum("n_total").over(wdesc).cast("long")
-    )
+    lives = parity_lives(spark, sf_dir)
+    risk = api.risk_sets(lives, "t_obs", "died", by="grp")
     km = risk.filter(F.col("deaths") > 0).select(
-        "grp",
-        "t_obs",
-        (
-            F.exp(
-                F.sum(
-                    F.when(
-                        F.col("at_risk") > F.col("deaths"),
-                        F.log(
-                            1.0
-                            - F.col("deaths").cast("double")
-                            / F.col("at_risk")
-                        ),
-                    ).otherwise(F.lit(0.0))
-                ).over(wasc)
-            )
-            * (
-                1
-                - F.max(
-                    F.when(
-                        F.col("deaths") == F.col("at_risk"), 1
-                    ).otherwise(0)
-                ).over(wasc)
-            )
-        ).alias("surv"),
+        "grp", "t_obs", api._km_product("t_obs", by="grp").alias("surv")
     )
     wg = Window.partitionBy("grp").orderBy("t_obs")
     seg = km.filter(F.col("t_obs") < _TAU).select(

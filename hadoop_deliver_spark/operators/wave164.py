@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from hadoop_deliver_spark import api
+from hadoop_deliver_spark.operators.wave6 import conversion_lives
 from hadoop_deliver_spark.registry import register
 from hadoop_deliver_spark.tables import tbl
 
@@ -89,69 +91,16 @@ def events_survival_greenwood(
     and plain Wald bands Ŝ ± 1.96·SE clamped to [0,1] (the pinned
     convention — log-log bands are the refinement, stated, not
     implied), plus the `past_median` flag whose FIRST true row is
-    the KM median survival time. Frame, cutoff, censoring and the
-    exp(Σln) product construction are textually
-    events_survival_km's; the Greenwood sum adds one more running
+    the KM median survival time. The cohort is
+    ``conversion_lives`` and Ŝ is events_survival_km's product over
+    ``api.risk_sets``; the Greenwood sum adds one more running
     accumulation over the same bounded event-day grid, with the
     dᵢ=nᵢ guard contributing zero exactly as the survival product
     hits zero. Every count is an exact integer; SE/bands are one
-    fixed textual float chain rounded at 6.
-
-    Scale shape: the survival-family plan — keyed per-user reduce,
-    reverse-cumsum at-risk window and two running sums over the
-    calendar-bounded (≤6-row) event grid."""
-    e = tbl(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.to_date("ts").alias("d")
-    )
-    b = e.agg(F.date_add(F.min("d"), 5).alias("cutoff"))
-    u = e.groupBy("user_id").agg(
-        F.min("d").alias("first_d"),
-        F.min(F.when(F.col("event_type") == "purchase", F.col("d"))).alias(
-            "purch_d"
-        ),
-    )
-    died = F.col("purch_d").isNotNull() & (
-        F.col("purch_d") <= F.col("cutoff")
-    )
-    lives = (
-        u.crossJoin(F.broadcast(b))
-        .where(F.col("first_d") <= F.col("cutoff"))
-        .select(
-            F.when(died, F.datediff("purch_d", "first_d"))
-            .otherwise(F.datediff("cutoff", "first_d"))
-            .alias("t_obs"),
-            died.alias("died"),
-        )
-    )
-    lt = lives.groupBy("t_obs").agg(
-        F.count(F.lit(1)).cast("long").alias("n_total"),
-        F.count_if(F.col("died")).cast("long").alias("deaths"),
-    )
-    wdesc = (
-        Window.orderBy(F.col("t_obs").desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    fixed textual float chain rounded at 6."""
+    risk = api.risk_sets(conversion_lives(spark, sf_dir), "t_obs", "died")
     wasc = Window.orderBy("t_obs").rowsBetween(
         Window.unboundedPreceding, 0
-    )
-    risk = lt.withColumn(
-        "at_risk", F.sum("n_total").over(wdesc).cast("long")
-    )
-    surv = F.exp(
-        F.sum(
-            F.when(
-                F.col("at_risk") > F.col("deaths"),
-                F.log(
-                    1.0
-                    - F.col("deaths").cast("double") / F.col("at_risk")
-                ),
-            ).otherwise(F.lit(0.0))
-        ).over(wasc)
-    ) * (
-        1
-        - F.max(
-            F.when(F.col("deaths") == F.col("at_risk"), 1).otherwise(0)
-        ).over(wasc)
     )
     gsum = F.sum(
         F.when(
@@ -167,7 +116,7 @@ def events_survival_greenwood(
         "t_obs",
         "at_risk",
         "deaths",
-        surv.alias("surv"),
+        api._km_product("t_obs").alias("surv"),
         gsum.alias("gsum"),
     )
     z = float(_Z)

@@ -20,12 +20,49 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from hadoop_deliver_spark import api
+from hadoop_deliver_spark.operators.wave6 import conversion_lives
 from hadoop_deliver_spark.registry import register
 from hadoop_deliver_spark.tables import tbl
 
 # χ²₁ upper 5% critical value, shipped as a shared literal (the
 # engine/oracle transcendental-parity convention)
 _CHI2_1_95 = "3.841459"
+
+
+def parity_lives(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The :func:`conversion_lives` cohort with the deterministic
+    user_id-parity A/B split as ``grp`` ('even' / 'odd')."""
+    return conversion_lives(spark, sf_dir).withColumn(
+        "grp", F.when(F.col("user_id") % 2 == 0, "even").otherwise("odd")
+    )
+
+
+def parity_risk_pivot(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """``(piv, tot)`` for the two-sample survival tests on
+    :func:`parity_lives`: ``piv`` is one row per event time
+    (t_obs, d1, n1, d, n) — the 'even' group's deaths and at-risk
+    count beside the pooled ones, read off ``api.risk_sets`` zero-filled
+    over both literal groups — and ``tot`` the 1-row cohort sizes
+    (n_even, n_odd)."""
+    lives = parity_lives(spark, sf_dir)
+    risk = api.risk_sets(
+        lives, "t_obs", "died", by="grp", levels=("even", "odd")
+    )
+    even = F.col("grp") == "even"
+    piv = risk.groupBy("t_obs").agg(
+        F.sum(F.when(even, F.col("deaths"))).cast("long").alias("d1"),
+        F.sum(F.when(even, F.col("at_risk"))).cast("long").alias("n1"),
+        F.sum("deaths").cast("long").alias("d"),
+        F.sum("at_risk").cast("long").alias("n"),
+    )
+    tot = lives.agg(
+        F.count_if(even).cast("long").alias("n_even"),
+        F.count_if(~even).cast("long").alias("n_odd"),
+    )
+    return piv.filter(F.col("d") > 0), tot
 
 
 @register(
@@ -102,88 +139,27 @@ _CHI2_1_95 = "3.841459"
 )
 def events_survival_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample log-rank test (Mantel 1966; Peto & Peto 1972) on the
-    events_survival_km conversion cohort: at every event time t the
+    :func:`parity_lives` conversion cohort: at every event time t the
     deaths split between the groups as a hypergeometric draw from the
     at-risk sets, so O₁ = Σ d₁ₜ is compared against E₁ = Σ dₜ·n₁ₜ/nₜ
     with variance Σ dₜ(n₁ₜ/nₜ)(1−n₁ₜ/nₜ)(nₜ−dₜ)/(nₜ−1); χ² =
     (O₁−E₁)²/V vs χ²₁. The grouping covariate is the deterministic
     user_id parity (a synthetic A/B split — the MACHINERY is the
-    operator; any time-independent covariate slots in). Censoring,
-    cutoff and cohort definition are exactly events_survival_km's.
+    operator; any time-independent covariate slots in).
 
     Exactness: O₁, every dₜ/nₜ count, and the cohort sizes are exact
     integers; E₁/V are short sums (≤ 6 event days by the cutoff
     construction) of doubles of exact-int ratios, round-6 display;
     the significance flag compares cross-multiplied (O₁−E₁)² > χ²crit·V
-    with the critical value shipped as a shared literal.
+    with the critical value shipped as a shared literal. With V = 0
+    (say, every event time empties its risk set) χ² is NULL, as in SQL.
 
-    Scale shape: one keyed shuffle reduces the fact table to per-user
-    rows; everything after lives on the (day × 2 groups) grid —
-    calendar-bounded at any corpus size. The at-risk windows partition
-    by group OVER THE GRID AGGREGATE (bounded input, the
-    events_survival_km allowlist argument); the final 1-row reduce is
-    the allowlisted SinglePartition."""
-    e = tbl(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.to_date("ts").alias("d")
-    )
-    b = e.agg(F.date_add(F.min("d"), 5).alias("cutoff"))
-    u = e.groupBy("user_id").agg(
-        F.min("d").alias("first_d"),
-        F.min(F.when(F.col("event_type") == "purchase", F.col("d"))).alias(
-            "purch_d"
-        ),
-    )
-    died = F.col("purch_d").isNotNull() & (
-        F.col("purch_d") <= F.col("cutoff")
-    )
-    lives = (
-        u.crossJoin(F.broadcast(b))
-        .where(F.col("first_d") <= F.col("cutoff"))
-        .select(
-            F.when(F.col("user_id") % 2 == 0, F.lit("even"))
-            .otherwise(F.lit("odd"))
-            .alias("grp"),
-            F.when(died, F.datediff("purch_d", "first_d"))
-            .otherwise(F.datediff("cutoff", "first_d"))
-            .alias("t_obs"),
-            died.alias("died"),
-        )
-    )
-    lt = lives.groupBy("grp", "t_obs").agg(
-        F.count(F.lit(1)).cast("long").alias("n_tot"),
-        F.count_if(F.col("died")).cast("long").alias("d"),
-    )
-    grid = (
-        lt.select("t_obs")
-        .distinct()
-        .select(
-            "t_obs",
-            F.explode(F.array(F.lit("even"), F.lit("odd"))).alias("grp"),
-        )
-    )
-    w_risk = (
-        Window.partitionBy("grp")
-        .orderBy(F.col("t_obs").desc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    risk = grid.join(lt, ["grp", "t_obs"], "left").select(
-        "grp",
-        "t_obs",
-        F.coalesce("d", F.lit(0)).cast("long").alias("d"),
-        F.sum(F.coalesce("n_tot", F.lit(0))).over(w_risk).alias("n_risk"),
-    )
-    piv = risk.groupBy("t_obs").agg(
-        F.sum(F.when(F.col("grp") == "even", F.col("d")))
-        .cast("long")
-        .alias("d1"),
-        F.sum(F.when(F.col("grp") == "even", F.col("n_risk")))
-        .cast("long")
-        .alias("n1"),
-        F.sum("d").cast("long").alias("d"),
-        F.sum("n_risk").cast("long").alias("n"),
-    )
+    Scale shape: :func:`parity_risk_pivot` — ``api.risk_sets`` on the
+    (day × 2 groups) grid, calendar-bounded at any corpus size — then
+    the allowlisted 1-row SinglePartition reduce."""
+    piv, tot = parity_risk_pivot(spark, sf_dir)
     p1 = F.col("n1").cast("double") / F.col("n")
-    terms = piv.filter(F.col("d") > 0).select(
+    terms = piv.select(
         "d1",
         (F.col("d").cast("double") * F.col("n1") / F.col("n")).alias("e1"),
         F.when(
@@ -202,17 +178,13 @@ def events_survival_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("e1").alias("e1"),
         F.sum("v").alias("v"),
     )
-    tot = lives.agg(
-        F.count_if(F.col("grp") == "even").cast("long").alias("n_even"),
-        F.count_if(F.col("grp") == "odd").cast("long").alias("n_odd"),
-    )
     dev = F.col("o1") - F.col("e1")
     return s.crossJoin(F.broadcast(tot)).select(
         "n_even",
         "n_odd",
         F.col("o1").alias("observed_even"),
         F.round("e1", 6).alias("expected_even"),
-        F.round(dev * dev / F.col("v"), 6).alias("chi2"),
+        F.round(F.try_divide(dev * dev, F.col("v")), 6).alias("chi2"),
         (dev * dev > F.expr(_CHI2_1_95) * F.col("v")).alias("significant"),
     )
 
@@ -258,57 +230,21 @@ def events_survival_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_survival_na(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nelson-Aalen cumulative-hazard estimator (Nelson 1972; Aalen
-    1978) on the events_survival_km cohort: Ĥ(t) = Σ_{t'≤t} d/n with
-    Aalen's variance Σ d/n² — the hazard-scale companion of the KM
-    survival curve (exp(−Ĥ) is the Breslow/Fleming-Harrington
+    1978) on the :func:`conversion_lives` cohort: Ĥ(t) = Σ_{t'≤t} d/n
+    with Aalen's variance Σ d/n² — the hazard-scale companion of the
+    KM survival curve (exp(−Ĥ) is the Breslow/Fleming-Harrington
     survival alternative; comparing it against KM's product form is
-    the standard small-sample diagnostic). Cohort, censoring and
-    cutoff are exactly events_survival_km's.
+    the standard small-sample diagnostic).
 
     Exactness: d and n are exact integers per day; the cumulative
     sums are ≤ 6 double terms (cutoff construction), round-6.
 
-    Scale shape: identical to events_survival_km — one keyed per-user
-    reduce, then every estimator quantity on the per-day aggregate
-    bounded by the calendar; the cumulative windows run over that
-    bounded axis (the allowlisted SinglePartition shape)."""
-    e = tbl(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.to_date("ts").alias("d")
-    )
-    b = e.agg(F.date_add(F.min("d"), 5).alias("cutoff"))
-    u = e.groupBy("user_id").agg(
-        F.min("d").alias("first_d"),
-        F.min(F.when(F.col("event_type") == "purchase", F.col("d"))).alias(
-            "purch_d"
-        ),
-    )
-    died = F.col("purch_d").isNotNull() & (
-        F.col("purch_d") <= F.col("cutoff")
-    )
-    lives = (
-        u.crossJoin(F.broadcast(b))
-        .where(F.col("first_d") <= F.col("cutoff"))
-        .select(
-            F.when(died, F.datediff("purch_d", "first_d"))
-            .otherwise(F.datediff("cutoff", "first_d"))
-            .alias("t_obs"),
-            died.alias("died"),
-        )
-    )
-    lt = lives.groupBy("t_obs").agg(
-        F.count(F.lit(1)).cast("long").alias("n_tot"),
-        F.count_if(F.col("died")).cast("long").alias("deaths"),
-    )
-    w_risk = Window.orderBy(F.col("t_obs").desc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
+    Scale shape: ``api.risk_sets`` on the calendar-bounded per-day
+    aggregate, then the cumulative windows over that bounded axis
+    (the allowlisted SinglePartition shape)."""
+    risk = api.risk_sets(conversion_lives(spark, sf_dir), "t_obs", "died")
     w_cum = Window.orderBy("t_obs").rowsBetween(
         Window.unboundedPreceding, 0
-    )
-    risk = lt.select(
-        "t_obs",
-        "deaths",
-        F.sum("n_tot").over(w_risk).cast("long").alias("at_risk"),
     )
     hz = F.col("deaths").cast("double") / F.col("at_risk")
     return (

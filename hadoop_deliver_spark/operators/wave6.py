@@ -258,6 +258,42 @@ def llm_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def conversion_lives(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The conversion cohort every survival operator analyzes:
+    ``(user_id, t_obs, died)``, one row per user whose first event
+    falls on or before the cutoff (corpus start + 5 days). ``t_obs``
+    is the days from the first event to the first 'purchase' when
+    that purchase is on or before the cutoff (``died``), else to the
+    cutoff (right-censored). The fact table is reduced to a per-user
+    min/min-conditional by ONE keyed shuffle; the 1-row cutoff
+    aggregate rides a broadcast cross join (the ts_resample_gapfill
+    bounds pattern)."""
+    e = tbl(spark, sf_dir, "events").select(
+        "user_id", "event_type", F.to_date("ts").alias("d")
+    )
+    b = e.agg(F.date_add(F.min("d"), 5).alias("cutoff"))
+    u = e.groupBy("user_id").agg(
+        F.min("d").alias("first_d"),
+        F.min(F.when(F.col("event_type") == "purchase", F.col("d"))).alias(
+            "purch_d"
+        ),
+    )
+    died = F.col("purch_d").isNotNull() & (
+        F.col("purch_d") <= F.col("cutoff")
+    )
+    return (
+        u.crossJoin(F.broadcast(b))
+        .where(F.col("first_d") <= F.col("cutoff"))
+        .select(
+            "user_id",
+            F.when(died, F.datediff("purch_d", "first_d"))
+            .otherwise(F.datediff("cutoff", "first_d"))
+            .alias("t_obs"),
+            died.alias("died"),
+        )
+    )
+
+
 @register(
     "events_survival_km",
     """
@@ -307,48 +343,24 @@ def llm_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "stats"),
 )
 def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kaplan-Meier survival estimator for TIME TO FIRST CONVERSION:
-    per user, days from first event to first 'purchase', analyzed as
-    of an explicit cutoff (corpus start + 5 days) — users whose
-    conversion falls after the cutoff are RIGHT-CENSORED at it, the
-    textbook S(t) = Π_{t'≤t} (1 − d_t'/n_t') with real censoring
-    (the naive lifetime spelling censors everyone in a uniformly
-    active fixture and returns an empty curve — this spec keeps both
-    deaths and censored mass non-trivial). The fact table is reduced
-    to a per-user min/min-conditional by ONE keyed shuffle, then
-    every KM quantity lives on the per-day aggregate whose
-    cardinality is bounded by the CALENDAR, not the corpus — the
-    global cumulative windows run there, the same bounded-axis
-    argument as orders_open_backlog's allowlist entry. The 1-row
-    cutoff aggregate rides a broadcast cross join (the
-    ts_resample_gapfill bounds pattern). Survival is exp of the
+    """Kaplan-Meier survival estimator for TIME TO FIRST CONVERSION on
+    the :func:`conversion_lives` cohort: per user, days from first
+    event to first 'purchase', analyzed as of an explicit cutoff
+    (corpus start + 5 days) — users whose conversion falls after the
+    cutoff are RIGHT-CENSORED at it, the textbook
+    S(t) = Π_{t'≤t} (1 − d_t'/n_t') with real censoring (the naive
+    lifetime spelling censors everyone in a uniformly active fixture
+    and returns an empty curve — this spec keeps both deaths and
+    censored mass non-trivial). Every KM quantity lives on the
+    per-day aggregate of ``api.risk_sets``, whose cardinality is
+    bounded by the CALENDAR, not the corpus — the global cumulative
+    windows run there, the same bounded-axis argument as
+    orders_open_backlog's allowlist entry. Survival is exp of the
     cumulative sum of ln(1 − d/n) — both factors integer-exact, the
     ln/exp round-trip drifts ≤ ~1e-13 over a calendar of terms,
     absorbed by round-4; the d = n extinction day is CASE-guarded on
     both sides (DuckDB raises on ln(0) rather than returning −inf)."""
-    e = tbl(spark, sf_dir, "events").select(
-        "user_id", "event_type", F.to_date("ts").alias("d")
-    )
-    b = e.agg(F.date_add(F.min("d"), 5).alias("cutoff"))
-    u = e.groupBy("user_id").agg(
-        F.min("d").alias("first_d"),
-        F.min(F.when(F.col("event_type") == "purchase", F.col("d"))).alias(
-            "purch_d"
-        ),
-    )
-    died = F.col("purch_d").isNotNull() & (
-        F.col("purch_d") <= F.col("cutoff")
-    )
-    lives = (
-        u.crossJoin(F.broadcast(b))
-        .where(F.col("first_d") <= F.col("cutoff"))
-        .select(
-            F.when(died, F.datediff("purch_d", "first_d"))
-            .otherwise(F.datediff("cutoff", "first_d"))
-            .alias("t_obs"),
-            died.alias("died"),
-        )
-    )
+    lives = conversion_lives(spark, sf_dir)
     return api.survival_km(lives, "t_obs", "died").orderBy("t_obs")
 
 

@@ -843,6 +843,59 @@ def test_survival_km_matches_textbook_estimator(spark, data):
 
 @settings(max_examples=10, deadline=None)
 @given(
+    data=st.lists(
+        st.tuples(
+            st.sampled_from(["a", "b"]),
+            st.integers(min_value=0, max_value=8),
+            st.booleans(),
+        ),
+        min_size=1,
+        max_size=40,
+    )
+)
+def test_risk_sets_match_brute_force_per_group_counts(spark, data):
+    """api.risk_sets must count, per group and duration, the deaths at
+    that duration and the subjects still at risk — with ``by`` alone
+    one row per observed (group, duration), and with ``levels`` one
+    row per level at EVERY observed duration. Level 'c' has no
+    subjects at all and 'a'/'b' may miss some durations, so the grid
+    holds zero-filled rows with at_risk = 0."""
+    from hadoop_deliver_spark.api import risk_sets
+
+    df = spark.createDataFrame(data, "grp STRING, t_obs INT, died BOOLEAN")
+
+    def brute(g, t):
+        return (
+            sum(1 for gg, tt, dd in data if gg == g and tt == t and dd),
+            sum(1 for gg, tt, _ in data if gg == g and tt >= t),
+        )
+
+    def rows(**kw):
+        return {
+            (r["grp"], r["t_obs"]): (r["deaths"], r["at_risk"])
+            for r in risk_sets(df, "t_obs", "died", by="grp", **kw).collect()
+        }
+
+    seen = {(g, t) for g, t, _ in data}
+    assert rows() == {k: brute(*k) for k in seen}
+    durations = {t for _, t, _ in data}
+    grid = rows(levels=("a", "b", "c"))
+    assert grid == {
+        (g, t): brute(g, t) for g in ("a", "b", "c") for t in durations
+    }
+    assert all(grid[("c", t)] == (0, 0) for t in durations)
+    pooled = {
+        r["t_obs"]: (r["deaths"], r["at_risk"])
+        for r in risk_sets(df, "t_obs", "died").collect()
+    }
+    assert pooled == {
+        t: tuple(map(sum, zip(brute("a", t), brute("b", t))))
+        for t in durations
+    }
+
+
+@settings(max_examples=10, deadline=None)
+@given(
     vals=st.lists(st.integers(min_value=0, max_value=1000), min_size=1, max_size=25),
     gaps=st.lists(st.integers(min_value=1, max_value=5), min_size=0, max_size=24),
 )

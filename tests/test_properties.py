@@ -1034,12 +1034,9 @@ def _registry_plans(spark, sf_dir):
 # Queries that may explode a LARGE literal array: the round-4 verdict
 # noted that moving a broadcast pairing out of a join node and into
 # explode(<literal array>) dodges the NLJ sweep while doing identical
-# work — this companion sweep closes that blind spot.
-_LITERAL_EXPLODE_OK = {
-    # probes are a FIXED 1% sample, broadcast-small by documented
-    # contract; the literal ride-along is the one-pass exact-top-k shape
-    "llm_sim_bruteforce",
-}
+# work — this companion sweep closes that blind spot. Empty today;
+# an entry must name a query whose plan still explodes such a literal.
+_LITERAL_EXPLODE_OK: set[str] = set()
 
 # Trivial literal explodes (grid neighbor offsets [-1,0,1], small enum
 # arrays) are fine — only a literal whose printed form exceeds this is
@@ -1079,13 +1076,17 @@ def test_no_smuggled_literal_explode_tables(spark, sf_dir):
     driver materialized the data and baked it into the plan, which
     grows with it). Companion to test_no_accidental_nested_loop_joins;
     allowlist documented above."""
-    offenders = [
-        (name, _max_literal_explode(plan))
+    flagged = {
+        name: _max_literal_explode(plan)
         for name, plan in _registry_plans(spark, sf_dir).items()
-        if name not in _LITERAL_EXPLODE_OK
-        and _max_literal_explode(plan) > _LITERAL_EXPLODE_LIMIT
-    ]
+        if _max_literal_explode(plan) > _LITERAL_EXPLODE_LIMIT
+    }
+    offenders = {
+        name: n for name, n in flagged.items() if name not in _LITERAL_EXPLODE_OK
+    }
     assert not offenders, f"literal-array explode leaked into: {offenders}"
+    gone = sorted(_LITERAL_EXPLODE_OK - set(flagged))
+    assert not gone, f"stale allowlist entries (_LITERAL_EXPLODE_OK): {gone}"
 
 
 def test_literal_explode_detector_fires_on_synthetic_offender(spark):
@@ -1255,7 +1256,9 @@ def test_no_low_cardinality_raw_windows(spark, sf_dir):
         if offs and name not in _LOW_CARD_WINDOW_OK
     }
     assert not offenders, f"low-cardinality raw window leaked into: {offenders}"
-    gone = _LOW_CARD_WINDOW_OK - set(_lowcard_cache)
+    gone = _LOW_CARD_WINDOW_OK - {
+        name for name, offs in _lowcard_cache.items() if offs
+    }
     assert not gone, f"stale allowlist entries (_LOW_CARD_WINDOW_OK): {gone}"
 
 
@@ -2610,15 +2613,11 @@ def test_bounded_operators_match_oracle_on_degenerate_orders(
     URGENT only, and two crafted one-order-per-day series for the
     Passing-Bablok edge cases. Every other table is linked from the
     fixtures; each result must match the DuckDB oracle."""
-    import os
-
-    import duckdb
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     from hadoop_deliver_spark.registry import load_all
-    from hadoop_deliver_spark.tables import TABLES
     from tests.parity import assert_frames_match
 
     o = pq.read_table(f"{sf_dir}/orders.parquet")
@@ -2641,7 +2640,25 @@ def test_bounded_operators_match_oracle_on_degenerate_orders(
         o, li = _one_order_per_day(
             o, li, days[:2], ["1-URGENT", "5-LOW"], [100, 200], [300, 100]
         )
-    written = {"orders": o, "lineitem": li}
+    duck = _fixture_copy(sf_dir, tmp_path, {"orders": o, "lineitem": li})
+    R = load_all()
+    for name in sorted(_BOUNDED_OPS):
+        got = R[name].fn(spark, str(tmp_path)).toPandas()
+        assert_frames_match(got, duck.execute(R[name].oracle).df(), name)
+    duck.close()
+
+
+def _fixture_copy(sf_dir, tmp_path, written):
+    """A DuckDB connection over a copy of the fixtures in ``tmp_path``:
+    each table in ``written`` (name → Arrow table) is written as one
+    parquet file, every other table is linked from ``sf_dir``."""
+    import os
+
+    import duckdb
+    import pyarrow.parquet as pq
+
+    from hadoop_deliver_spark.tables import TABLES
+
     duck = duckdb.connect()
     for t in TABLES:
         path = os.path.join(tmp_path, f"{t}.parquet")
@@ -2650,11 +2667,7 @@ def test_bounded_operators_match_oracle_on_degenerate_orders(
         else:
             os.symlink(os.path.join(sf_dir, f"{t}.parquet"), path)
         duck.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
-    R = load_all()
-    for name in sorted(_BOUNDED_OPS):
-        got = R[name].fn(spark, str(tmp_path)).toPandas()
-        assert_frames_match(got, duck.execute(R[name].oracle).df(), name)
-    duck.close()
+    return duck
 
 
 def test_arrow_refine_past_gate_matches_driver_path(
@@ -2717,7 +2730,7 @@ def test_triangle_count_bounds_neighbor_broadcast(
 
     from hadoop_deliver_spark import api
     from hadoop_deliver_spark.registry import load_all
-    from tests.parity import assert_frames_match
+    from tests.parity import assert_frames_match, jobs_per_call
 
     ev = pq.read_table(f"{sf_dir}/events.parquet")
     day = pc.floor_temporal(ev["ts"], unit="day")
@@ -2744,6 +2757,9 @@ def test_triangle_count_bounds_neighbor_broadcast(
     got = q.fn(spark, str(tmp_path)).toPandas()
     assert stats == [None], "neighbor table broadcast past the budget"
     assert_frames_match(got, want, q.name)
+    # the edge list decodes from the neighbor table the declined probe
+    # stored: 28 jobs here, 44 when each action rebuilt it from events
+    assert jobs_per_call(spark, lambda: q.fn(spark, str(tmp_path))) <= 28
     duck = duckdb.connect()
     duck.execute(
         "CREATE VIEW events AS SELECT * FROM "
@@ -2862,3 +2878,138 @@ def test_raking_ipf_zero_priority_matches_oracle(spark, sf_dir, tmp_path):
     )
     assert_frames_match(df.toPandas(), duck.execute(q.oracle).df(), q.name)
     duck.close()
+
+
+# The six survival operators: one conversion cohort
+# (wave6.conversion_lives) and one risk-set core (api.risk_sets).
+# Spark jobs per call at sf0.001 on local[4] when each carried its own
+# cohort and at-risk running sum (measured twice, identical). None may
+# run more.
+_SURVIVAL_JOBS = {
+    "events_survival_km": 7,
+    "events_survival_na": 7,
+    "events_survival_logrank": 14,
+    "events_survival_gehan": 15,
+    "events_survival_rmst": 9,
+    "events_survival_greenwood": 7,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_SURVIVAL_JOBS))
+def test_survival_family_runs_no_more_jobs(spark, sf_dir, name):
+    from hadoop_deliver_spark.registry import load_all
+    from tests.parity import jobs_per_call
+
+    q = load_all()[name]
+    got = jobs_per_call(spark, lambda: q.fn(spark, sf_dir))
+    assert got <= _SURVIVAL_JOBS[name], f"{name}: {got} jobs"
+
+
+_DEGENERATE_EVENTS = [
+    "empty",
+    "one_row",
+    "first_hour",
+    "no_purchase",
+    "one_type",
+    # every user converts on day 0: the survival curve dies at once and
+    # the two-sample tests have zero variance (NULL chi2, not an error)
+    "purchase_only",
+]
+
+# Operators over ``events`` checked on the degenerate cuts: the six
+# survival operators and the driver-side recurrences.
+_DEGENERATE_EVENTS_OPS = sorted(_SURVIVAL_JOBS) + [
+    "events_markov_reach",
+    "events_markov_stationary",
+    "graph_harmonic_centrality",
+]
+
+
+@pytest.mark.parametrize("case", _DEGENERATE_EVENTS)
+def test_events_operators_match_oracle_on_degenerate_events(
+    spark, sf_dir, tmp_path, case
+):
+    """Degenerate input for the survival family and the driver-side
+    recurrences over ``events``: the fixture cut to nothing, its first
+    row, its first hour, everything but 'purchase', 'view' only or
+    'purchase' only. Every other table is linked from the fixtures;
+    each result must match the DuckDB oracle. events_kleinberg_bursts
+    has no error stream to fit on the cuts without 'error' events:
+    there both engines raise, and Spark must raise rather than return
+    a frame."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from hadoop_deliver_spark.registry import load_all
+    from tests.parity import assert_frames_match
+
+    ev = pq.read_table(f"{sf_dir}/events.parquet")
+    etype = ev["event_type"]
+    if case == "empty":
+        ev = ev.slice(0, 0)
+    elif case == "one_row":
+        ev = ev.slice(0, 1)
+    elif case == "first_hour":
+        start = pc.min(ev["ts"]).as_py()
+        end = pa.scalar(start + datetime.timedelta(hours=1), ev["ts"].type)
+        ev = ev.filter(pc.less(ev["ts"], end))
+    elif case == "no_purchase":
+        ev = ev.filter(pc.not_equal(etype, "purchase"))
+    else:
+        keep = "view" if case == "one_type" else "purchase"
+        ev = ev.filter(pc.equal(etype, keep))
+    duck = _fixture_copy(sf_dir, tmp_path, {"events": ev})
+    R = load_all()
+    for name in _DEGENERATE_EVENTS_OPS:
+        got = R[name].fn(spark, str(tmp_path)).toPandas()
+        assert_frames_match(got, duck.execute(R[name].oracle).df(), name)
+    kb = R["events_kleinberg_bursts"]
+    if case in ("empty", "one_type", "purchase_only"):
+        with pytest.raises((TypeError, ValueError)):
+            kb.fn(spark, str(tmp_path)).toPandas()
+    else:
+        got = kb.fn(spark, str(tmp_path)).toPandas()
+        assert_frames_match(got, duck.execute(kb.oracle).df(), kb.name)
+    duck.close()
+
+
+def test_clone_detector_groups_a_synthetic_family(tmp_path):
+    """scripts/clones.py must report a 4-statement run copied into
+    three functions (names and constants differ) as one family, and
+    nothing for a run that only two functions share."""
+    import importlib.util
+    import os
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(__file__)), "scripts", "clones.py"
+    )
+    spec = importlib.util.spec_from_file_location("clones", path)
+    clones = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(clones)
+
+    body = """
+    e = tbl(spark, sf_dir, "{t}").select("a", F.col("b").alias("c"))
+    u = e.groupBy("a").agg(F.min("c").alias("lo"), F.max("c").alias("hi"))
+    w = u.where(F.col("lo") <= F.col("hi")).select("a", "lo", "hi")
+    return w.orderBy("a").limit({k})
+"""
+    pkg = tmp_path / "pkg"
+    pkg.mkdir()
+    for i, name in enumerate(["one", "two", "three"]):
+        (pkg / f"m{i}.py").write_text(
+            f"def {name}(spark, sf_dir):" + body.format(t=name, k=i)
+        )
+    pairs = "\n".join(
+        f"def pair{i}(x):\n    a = x + 1\n    b = a * 2\n    c = b - 3\n"
+        f"    return [a, b, c, x, x, x, x, x]\n"
+        for i in range(2)
+    )
+    (pkg / "pairs.py").write_text(pairs)
+    fams = clones.find_families(str(pkg), min_nodes=10)
+    assert [sorted(f["funcs"]) for f in fams] == [
+        ["pkg/m0.py::one", "pkg/m1.py::two", "pkg/m2.py::three"]
+    ]
+    assert fams[0]["run"] == 4
