@@ -67,7 +67,6 @@ __all__ = [
     "dedup_chunks",
     "gopher_quality",
     "survival_km",
-    "risk_sets",
     "ewma_smooth",
     "holt_smooth",
     "winnow_fingerprints",
@@ -2616,12 +2615,8 @@ def gopher_quality(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def risk_sets(
-    df: DataFrame,
-    duration_col: str,
-    event_col: str,
-    by: str | None = None,
-    levels: Sequence = (),
+def _risk_sets(
+    df: DataFrame, duration_col: str, event_col: str, by: str | None = None
 ) -> DataFrame:
     """Per-duration risk sets from per-subject observations:
     ``duration_col`` (integer time-to-event-or-censoring) and
@@ -2630,59 +2625,48 @@ def risk_sets(
     one row per (group, observed duration): ``deaths`` counts the
     events at that duration and ``at_risk`` the subjects whose
     duration is at least it, both exact longs. ``by`` splits the
-    subjects into groups with their own risk sets. With ``levels``,
-    every listed ``by`` value gets a row at EVERY observed duration
-    (zero-filled, so ``at_risk`` may be 0), the common grid a
-    two-sample test pivots on.
+    subjects into groups with their own risk sets.
 
     Scale shape: one keyed reduce to the per-duration aggregate, whose
     cardinality is bounded by the TIME AXIS (days of history), never
-    the subject count; the reverse running sum is a ROWS window over
-    that aggregate, partitioned by ``by``. The ``levels`` grid is a
-    literal explode, not a scan of the data for its groups.
-
-    >>> risk_sets(lives, "t_obs", "died", by="grp", levels=["a", "b"])
-    """
+    the subject count, then :func:`_at_risk` over that aggregate."""
     keys = [by] if by else []
-    lt = df.groupBy(*keys, duration_col).agg(
-        F.count(F.lit(1)).alias("_rs_n"),
-        F.count_if(F.col(event_col)).alias("deaths"),
-    )
-    if levels:
-        grid = (
-            lt.select(duration_col)
-            .distinct()
-            .select(
-                duration_col,
-                F.explode(F.array(*[F.lit(v) for v in levels])).alias(by),
-            )
+    return (
+        df.groupBy(*keys, duration_col)
+        .agg(
+            F.count(F.lit(1)).alias("_rs_n"),
+            F.count_if(F.col(event_col)).cast("long").alias("deaths"),
         )
-        lt = grid.join(lt, [by, duration_col], "left").select(
-            by,
+        .select(
+            *keys,
             duration_col,
-            F.coalesce("deaths", F.lit(0)).alias("deaths"),
-            F.coalesce("_rs_n", F.lit(0)).alias("_rs_n"),
+            "deaths",
+            _at_risk("_rs_n", duration_col, by).alias("at_risk"),
         )
+    )
+
+
+def _at_risk(
+    count_col: str, duration_col: str, by: str | None = None
+) -> Column:
+    """Subjects still at risk at each duration of a per-duration
+    aggregate: the reverse ROWS running sum of ``count_col`` (the
+    subjects observed at that duration), partitioned by ``by``, as an
+    exact long."""
     w = (
-        Window.partitionBy(*keys)
+        Window.partitionBy(*([by] if by else []))
         .orderBy(F.col(duration_col).desc())
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    return lt.select(
-        *keys,
-        duration_col,
-        F.col("deaths").cast("long").alias("deaths"),
-        F.sum("_rs_n").over(w).cast("long").alias("at_risk"),
-    )
+    return F.sum(count_col).over(w).cast("long")
 
 
 def _km_product(duration_col: str, by: str | None = None) -> Column:
-    """Kaplan-Meier S(t) = Π_{t'≤t} (1 − d/n) over :func:`risk_sets`
+    """Kaplan-Meier S(t) = Π_{t'≤t} (1 − d/n) over :func:`_risk_sets`
     rows, as exp(Σ ln(1 − d/n)) in a running window (partitioned by
     ``by``). The d = n extinction step is CASE-guarded (no ln(0)) and
     zeroes the product from there on. Apply it to rows already cut to
-    ``deaths > 0``: a zero-filled row (d = n = 0) would trip the
-    guard."""
+    ``deaths > 0``, the durations the product steps at."""
     w = (
         Window.partitionBy(*([by] if by else []))
         .orderBy(duration_col)
@@ -2709,14 +2693,14 @@ def survival_km(
     KM product Π_{t'≤t} (1 − d/n) rounded to 4 decimals; survival
     after extinction is exactly 0.
 
-    Scale shape: :func:`risk_sets` (one keyed reduce, a reverse
+    Scale shape: :func:`_risk_sets` (one keyed reduce, a reverse
     running sum over the time-axis-bounded aggregate), then the
     product's running windows over the same aggregate.
 
     >>> survival_km(lives, "t_obs", "died")
     """
     return (
-        risk_sets(df, duration_col, event_col)
+        _risk_sets(df, duration_col, event_col)
         .where(F.col("deaths") > 0)
         .select(
             duration_col,
@@ -3048,11 +3032,13 @@ def co_membership_graph(
     degrees counted over the edge endpoints. Both paths are proven
     equal by property test.
 
-    On the dense path ``neighbors`` is a lazy local checkpoint: no job
-    runs for it here, the first action that reads it stores it, and
-    every later read (the other branch of the same query, a probe, the
+    On the dense path ``neighbors`` is a lazy local checkpoint. With
+    adaptive execution on, its shuffle stages run here, at the call;
+    only the per-id assembly after the last shuffle waits for the
+    first action that reads the table, and that action stores it.
+    Every later read (the other branch of the same query, a probe, the
     caller's fallback) scans the stored rows instead of rebuilding the
-    per-id assembly from the source."""
+    assembly from the source."""
     # spelled as isNotNull (not dropna) so every branch over ``du``
     # carries the same filter the optimizer would infer for a join on
     # either column, and shared exchanges are reused across branches
@@ -3104,7 +3090,8 @@ def triangle_stats_from_neighbors(
     action scan it. The lazy checkpoint that core returns is stored by
     the probe, so a caller that is declined counts on the stored rows."""
     nb = _materialize_for_probes(nb)
-    # one task over the materialized rows: no exchange, one job
+    # one task over the checkpoint: no exchange, one job (on the lazy
+    # checkpoint that task also runs the post-shuffle assembly)
     probe = nb.coalesce(1).agg(
         F.count(F.lit(1)).alias("n"), F.max(F.size("bm")).alias("w")
     ).first()

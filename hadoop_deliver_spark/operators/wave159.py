@@ -214,14 +214,14 @@ def events_survival_rmst(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio, needs no proportional-hazards assumption — the natural
     summary beside events_survival_logrank / _gehan, which only
     test. S(t) is events_survival_km's product over
-    ``api.risk_sets``, partitioned by group; interval widths are
+    ``api._risk_sets``, partitioned by group; interval widths are
     exact integer day differences.
 
-    Scale shape: per-group ``api.risk_sets`` over the
+    Scale shape: per-group ``api._risk_sets`` over the
     calendar-bounded day axis, lead/row_number on the ≤6-row event
     grid, one group-keyed reduce."""
     lives = parity_lives(spark, sf_dir)
-    risk = api.risk_sets(lives, "t_obs", "died", by="grp")
+    risk = api._risk_sets(lives, "t_obs", "died", by="grp")
     km = risk.filter(F.col("deaths") > 0).select(
         "grp", "t_obs", api._km_product("t_obs", by="grp").alias("surv")
     )

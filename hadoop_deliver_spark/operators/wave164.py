@@ -93,12 +93,12 @@ def events_survival_greenwood(
     implied), plus the `past_median` flag whose FIRST true row is
     the KM median survival time. The cohort is
     ``conversion_lives`` and Ŝ is events_survival_km's product over
-    ``api.risk_sets``; the Greenwood sum adds one more running
+    ``api._risk_sets``; the Greenwood sum adds one more running
     accumulation over the same bounded event-day grid, with the
     dᵢ=nᵢ guard contributing zero exactly as the survival product
     hits zero. Every count is an exact integer; SE/bands are one
     fixed textual float chain rounded at 6."""
-    risk = api.risk_sets(conversion_lives(spark, sf_dir), "t_obs", "died")
+    risk = api._risk_sets(conversion_lives(spark, sf_dir), "t_obs", "died")
     wasc = Window.orderBy("t_obs").rowsBetween(
         Window.unboundedPreceding, 0
     )

@@ -44,19 +44,24 @@ def parity_risk_pivot(
     """``(piv, tot)`` for the two-sample survival tests on
     :func:`parity_lives`: ``piv`` is one row per event time
     (t_obs, d1, n1, d, n) — the 'even' group's deaths and at-risk
-    count beside the pooled ones, read off ``api.risk_sets`` zero-filled
-    over both literal groups — and ``tot`` the 1-row cohort sizes
+    count beside the pooled ones, from one per-day aggregate of
+    conditional counts and its ``api._at_risk`` running sums over the
+    pooled day axis — and ``tot`` the 1-row cohort sizes
     (n_even, n_odd)."""
     lives = parity_lives(spark, sf_dir)
-    risk = api.risk_sets(
-        lives, "t_obs", "died", by="grp", levels=("even", "odd")
-    )
     even = F.col("grp") == "even"
-    piv = risk.groupBy("t_obs").agg(
-        F.sum(F.when(even, F.col("deaths"))).cast("long").alias("d1"),
-        F.sum(F.when(even, F.col("at_risk"))).cast("long").alias("n1"),
-        F.sum("deaths").cast("long").alias("d"),
-        F.sum("at_risk").cast("long").alias("n"),
+    lt = lives.groupBy("t_obs").agg(
+        F.count(F.lit(1)).alias("n_t"),
+        F.count_if(even).alias("n1_t"),
+        F.count_if(F.col("died")).cast("long").alias("d"),
+        F.count_if(even & F.col("died")).cast("long").alias("d1"),
+    )
+    piv = lt.select(
+        "t_obs",
+        "d1",
+        api._at_risk("n1_t", "t_obs").alias("n1"),
+        "d",
+        api._at_risk("n_t", "t_obs").alias("n"),
     )
     tot = lives.agg(
         F.count_if(even).cast("long").alias("n_even"),
@@ -154,9 +159,9 @@ def events_survival_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the critical value shipped as a shared literal. With V = 0
     (say, every event time empties its risk set) χ² is NULL, as in SQL.
 
-    Scale shape: :func:`parity_risk_pivot` — ``api.risk_sets`` on the
-    (day × 2 groups) grid, calendar-bounded at any corpus size — then
-    the allowlisted 1-row SinglePartition reduce."""
+    Scale shape: :func:`parity_risk_pivot` — one per-day aggregate
+    and its at-risk running sums, calendar-bounded at any corpus size
+    — then the allowlisted 1-row SinglePartition reduce."""
     piv, tot = parity_risk_pivot(spark, sf_dir)
     p1 = F.col("n1").cast("double") / F.col("n")
     terms = piv.select(
@@ -239,10 +244,10 @@ def events_survival_na(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: d and n are exact integers per day; the cumulative
     sums are ≤ 6 double terms (cutoff construction), round-6.
 
-    Scale shape: ``api.risk_sets`` on the calendar-bounded per-day
+    Scale shape: ``api._risk_sets`` on the calendar-bounded per-day
     aggregate, then the cumulative windows over that bounded axis
     (the allowlisted SinglePartition shape)."""
-    risk = api.risk_sets(conversion_lives(spark, sf_dir), "t_obs", "died")
+    risk = api._risk_sets(conversion_lives(spark, sf_dir), "t_obs", "died")
     w_cum = Window.orderBy("t_obs").rowsBetween(
         Window.unboundedPreceding, 0
     )

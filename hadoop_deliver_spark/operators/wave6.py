@@ -352,7 +352,7 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     lifetime spelling censors everyone in a uniformly active fixture
     and returns an empty curve — this spec keeps both deaths and
     censored mass non-trivial). Every KM quantity lives on the
-    per-day aggregate of ``api.risk_sets``, whose cardinality is
+    per-day aggregate of ``api._risk_sets``, whose cardinality is
     bounded by the CALENDAR, not the corpus — the global cumulative
     windows run there, the same bounded-axis argument as
     orders_open_backlog's allowlist entry. Survival is exp of the

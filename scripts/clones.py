@@ -1,6 +1,6 @@
 """List hand-copied code families in the package.
 
-Usage: python scripts/clones.py [--top N] [--min-nodes M] [DIR]
+Usage: python scripts/clones.py
 
 Every package function is cut into its statement blocks (function
 body, loop and branch bodies; nested functions count as their own
@@ -8,21 +8,20 @@ functions). Each run of 4-6 consecutive statements is normalized:
 variable, argument and function names become ``_`` and every constant
 becomes a placeholder of its type, while attribute and keyword names
 (the DataFrame API calls) are kept. A run whose normalized form occurs
-in 3 or more functions is a clone; runs of fewer than ``--min-nodes``
-AST nodes (default 60) are skipped as boilerplate. Clones are grouped
-into families by the set of functions that share them, and a family
-whose functions are all in a larger reported family is folded into
-it. Families print largest first (total lines of their functions),
-each with its longest shared run and where that run starts.
+in 3 or more functions is a clone; runs of fewer than 60 AST nodes
+are skipped as boilerplate. Clones are grouped into families by the
+set of functions that share them, and a family whose functions are
+all in a larger reported family is folded into it. The ten largest
+families (total lines of their functions) are printed, each with its
+longest shared run and where that run starts.
 
-stdlib only (``ast``); DIR defaults to the package of this checkout.
+stdlib only (``ast``); it reads the package of this checkout.
 """
 
 from __future__ import annotations
 
 import ast
 import os
-import sys
 from collections import defaultdict
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -136,22 +135,11 @@ def find_families(root, min_nodes=60):
     return families
 
 
-def main(argv):
-    top, min_nodes = 10, 60
+def main():
     root = os.path.join(REPO, "hadoop_deliver_spark")
-    while argv and argv[0].startswith("--"):
-        if argv[0] == "--top":
-            top = int(argv[1])
-        elif argv[0] == "--min-nodes":
-            min_nodes = int(argv[1])
-        else:
-            sys.exit(__doc__)
-        argv = argv[2:]
-    if argv:
-        root = os.path.abspath(argv[0])
-    families = find_families(root, min_nodes)
+    families = find_families(root)
     print(f"{len(families)} clone families under {root}")
-    for i, fam in enumerate(families[:top], 1):
+    for i, fam in enumerate(families[:10], 1):
         total = sum(fam["funcs"].values())
         print(
             f"{i}. {len(fam['funcs'])} functions, {total} lines, "
@@ -162,4 +150,4 @@ def main(argv):
 
 
 if __name__ == "__main__":
-    main(sys.argv[1:])
+    main()

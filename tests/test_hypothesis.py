@@ -854,44 +854,29 @@ def test_survival_km_matches_textbook_estimator(spark, data):
     )
 )
 def test_risk_sets_match_brute_force_per_group_counts(spark, data):
-    """api.risk_sets must count, per group and duration, the deaths at
-    that duration and the subjects still at risk — with ``by`` alone
-    one row per observed (group, duration), and with ``levels`` one
-    row per level at EVERY observed duration. Level 'c' has no
-    subjects at all and 'a'/'b' may miss some durations, so the grid
-    holds zero-filled rows with at_risk = 0."""
-    from hadoop_deliver_spark.api import risk_sets
+    """api._risk_sets must count, per group and duration, the deaths at
+    that duration and the subjects still at risk: with ``by`` one row
+    per observed (group, duration), pooled one row per duration."""
+    from hadoop_deliver_spark.api import _risk_sets
 
     df = spark.createDataFrame(data, "grp STRING, t_obs INT, died BOOLEAN")
 
-    def brute(g, t):
+    def brute(groups, t):
         return (
-            sum(1 for gg, tt, dd in data if gg == g and tt == t and dd),
-            sum(1 for gg, tt, _ in data if gg == g and tt >= t),
+            sum(1 for g, tt, dd in data if g in groups and tt == t and dd),
+            sum(1 for g, tt, _ in data if g in groups and tt >= t),
         )
 
-    def rows(**kw):
-        return {
-            (r["grp"], r["t_obs"]): (r["deaths"], r["at_risk"])
-            for r in risk_sets(df, "t_obs", "died", by="grp", **kw).collect()
-        }
-
-    seen = {(g, t) for g, t, _ in data}
-    assert rows() == {k: brute(*k) for k in seen}
-    durations = {t for _, t, _ in data}
-    grid = rows(levels=("a", "b", "c"))
-    assert grid == {
-        (g, t): brute(g, t) for g in ("a", "b", "c") for t in durations
+    per_group = {
+        (r["grp"], r["t_obs"]): (r["deaths"], r["at_risk"])
+        for r in _risk_sets(df, "t_obs", "died", by="grp").collect()
     }
-    assert all(grid[("c", t)] == (0, 0) for t in durations)
+    assert per_group == {(g, t): brute({g}, t) for g, t, _ in data}
     pooled = {
         r["t_obs"]: (r["deaths"], r["at_risk"])
-        for r in risk_sets(df, "t_obs", "died").collect()
+        for r in _risk_sets(df, "t_obs", "died").collect()
     }
-    assert pooled == {
-        t: tuple(map(sum, zip(brute("a", t), brute("b", t))))
-        for t in durations
-    }
+    assert pooled == {t: brute({"a", "b"}, t) for _, t, _ in data}
 
 
 @settings(max_examples=10, deadline=None)

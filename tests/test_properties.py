@@ -745,11 +745,14 @@ _SINGLE_PARTITION_WINDOW_OK = {
     # unbounded-frame accuracy window over the ≤9-row confusion
     # DOMAIN frame
     "agg_naive_bayes_eval",
-    # KM/NA windows run over the per-lifetime-DAY aggregate
-    # (cardinality = days of history at any corpus scale)
+    # KM/NA windows and the log-rank/Gehan pooled at-risk sums run
+    # over the per-lifetime-DAY aggregate (cardinality = days of
+    # history at any corpus scale)
     "events_survival_km",
     "events_survival_na",
     "events_survival_greenwood",
+    "events_survival_logrank",
+    "events_survival_gehan",
     # position row_numbers over the 20-row TRUNCATED top-k lists
     # (TakeOrdered bounds them before the window)
     "llm_rank_rbo",
@@ -2881,7 +2884,7 @@ def test_raking_ipf_zero_priority_matches_oracle(spark, sf_dir, tmp_path):
 
 
 # The six survival operators: one conversion cohort
-# (wave6.conversion_lives) and one risk-set core (api.risk_sets).
+# (wave6.conversion_lives) and one risk-set core (api._risk_sets).
 # Spark jobs per call at sf0.001 on local[4] when each carried its own
 # cohort and at-risk running sum (measured twice, identical). None may
 # run more.
