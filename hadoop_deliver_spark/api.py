@@ -33,6 +33,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
+from hadoop_deliver_spark.tables import data_version
+
 __all__ = [
     "dot",
     "vec_norm",
@@ -840,18 +842,6 @@ _STAGE_MEMO: "OrderedDict[tuple, DataFrame]" = OrderedDict()
 _STAGE_MEMO_MAX = 16
 
 
-def _data_version(df: DataFrame) -> int:
-    """Driver-side data-version fingerprint for stage-memo keys: a
-    hash of the sorted source-file listing behind ``df``. File-based
-    rewrites (new part-file UUIDs) change it; non-file sources hash
-    the empty listing (fall back to plan-only keying)."""
-    try:
-        files = df.inputFiles()
-    except Exception:  # non-file plans (e.g. in-memory relations)
-        files = []
-    return hash(tuple(sorted(files)))
-
-
 def memo_stage(
     tag: str,
     sources: Sequence[DataFrame],
@@ -868,14 +858,15 @@ def memo_stage(
 
     - The key is ``(tag, applicationId, params)`` plus
       ``(semanticHash, schema, data version)`` of EVERY DataFrame in
-      ``sources``, where the data version hashes the sorted source-file
-      listing. A stage must list every DataFrame its build reads.
-      Rewriting a parquet path produces fresh part-file names, so a
-      re-read of a rewritten source misses instead of serving stale
-      data.
-    - Mutating the SAME files in place within one application (or a
-      non-file source, whose listing is empty) is not detected: call
-      :func:`clear_stage_caches` first.
+      ``sources``, where the data version is the sorted
+      ``(file, size, mtime_ns)`` listing of its ``inputFiles()``
+      (:func:`tables.data_version`). A stage must list every DataFrame
+      its build reads. Rewriting a local source, under fresh part-file
+      names or the same ones in place, changes the listing, so a
+      re-read misses instead of serving stale data.
+    - A non-local file (listed by name only) rewritten under the same
+      name, or a non-file source (empty listing), is not detected:
+      call :func:`clear_stage_caches` first.
     - localCheckpoint truncates lineage WITHOUT fault tolerance: after
       an executor loss a later hit fails instead of recomputing, so
       call :func:`clear_stage_caches`. At 100 TB, if recomputation on
@@ -888,7 +879,10 @@ def memo_stage(
         tag,
         sources[0].sparkSession.sparkContext.applicationId,
         tuple(params),
-        *((s.semanticHash(), str(s.schema), _data_version(s)) for s in sources),
+        *(
+            (s.semanticHash(), str(s.schema), data_version(s.inputFiles()))
+            for s in sources
+        ),
     )
     hit = _STAGE_MEMO.get(key)
     if hit is not None:

@@ -142,7 +142,7 @@ def scan_file_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is a single file with a fixed name at every sf, so the
     oracle can state the expected (file_name, counts) row exactly
     without filesystem access."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = tbl(spark, sf_dir, "lineitem")
     return (
         li.select(
             F.regexp_extract(

@@ -32,23 +32,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_deliver_spark.registry import register
-from hadoop_deliver_spark.tables import dec2, tbl
+from hadoop_deliver_spark.tables import data_version, dec2, tbl
 
 _STAGE = "/tmp/hds_stage"
 _counter = itertools.count()
 
 def _fixture_tag(sf_dir: str) -> str:
-    """Fingerprint of the fixture generation (name/size/mtime of every
-    parquet in sf_dir). Baked into the stage path so a driver-side
+    """Fingerprint of the fixture generation: the data version of every
+    parquet table in sf_dir. Baked into the stage path so a driver-side
     fixture regeneration (e.g. the ts dtype change between rounds)
     can never be served a stale staged copy — even mid-process:
     deliberately NOT cached (the stat loop is ~10 files, trivially
     cheap), so a regeneration during a long-lived driver is picked up
     on the next call."""
     h = hashlib.sha1(b"stage-format-v2;")  # bump when staged layout/dtypes change
-    for p in sorted(glob.glob(os.path.join(sf_dir, "*.parquet"))):
-        st = os.stat(p)
-        h.update(f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns};".encode())
+    h.update(repr(data_version(glob.glob(os.path.join(sf_dir, "*.parquet")))).encode())
     return h.hexdigest()[:10]
 
 

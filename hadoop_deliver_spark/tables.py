@@ -11,15 +11,30 @@ ns→µs cast; a float ``/1e9`` division would drift by ~0.5 µs at 2024
 epochs). Current fixtures write TIMESTAMP(MICROS) which decodes
 natively as TIMESTAMP_NTZ; the shim is applied only when the column
 actually arrives as int64.
+
+Schema inference runs once per data version. Without a schema,
+``spark.read.parquet`` runs one Spark job per call to read the footers.
+:func:`tbl` keeps each table's inferred ``StructType`` (the raw read's,
+before the events shim) in :data:`_SCHEMA_MEMO`, keyed on
+``(applicationId, table path)`` and valid for one :func:`data_version`
+of the table's files, their sorted ``(file, size, mtime_ns)`` listing.
+Later reads of that version pass the schema and run no job. A rewrite,
+in place or under new part-file names, changes the version, so the next
+read infers again and replaces the entry: the memo holds one schema per
+table and application, and ``api.clear_stage_caches`` leaves it alone.
+It holds a schema, never a ``DataFrame``: two reads of one table joined
+to each other need distinct attribute ids.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
 TABLES = [
     "region",
@@ -71,10 +86,51 @@ def prepare_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+#: (applicationId, table path) -> (data version, inferred schema)
+_SCHEMA_MEMO: dict[tuple[str, str], tuple[tuple, StructType]] = {}
+
+
+def data_version(paths: Iterable[str]) -> tuple:
+    """Sorted ``(file, size, mtime_ns)`` of every file at ``paths``.
+
+    A path is a local file, a local directory (every file under it
+    counts) or a ``file:`` URI as ``DataFrame.inputFiles()`` returns it.
+    A path of another scheme, or one ``os.stat`` cannot see, counts by
+    name only, so a rewrite under the same name goes unseen there."""
+    out = []
+    for p in paths:
+        local = unquote(urlsplit(p).path) if p.startswith("file:") else p
+        files = [os.path.join(d, f) for d, _, fs in os.walk(local) for f in fs]
+        for f in files or [local]:
+            try:
+                st = os.stat(f)
+                out.append((f, st.st_size, st.st_mtime_ns))
+            except OSError:
+                out.append((f,))
+    return tuple(sorted(out))
+
+
 def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one fixture table, applying ingestion shims."""
+    """Load one fixture table, applying ingestion shims.
+
+    The raw read's schema is pinned in :data:`_SCHEMA_MEMO` under
+    ``(applicationId, table path)`` for the table's current
+    :func:`data_version`; a read of that version passes it and runs no
+    job, and a rewrite (new listing) infers again. Only the schema is
+    kept, not the ``DataFrame``, so every call returns fresh attribute
+    ids. A path ``os.stat`` cannot see (another scheme) and an
+    inference that raises read as without the memo and store nothing."""
     prepare_session(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    key = (spark.sparkContext.applicationId, path)
+    version = data_version([path]) if os.path.exists(path) else None
+    pinned = _SCHEMA_MEMO.get(key)
+    if pinned and pinned[0] == version:
+        df = spark.read.schema(pinned[1]).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        if version is not None:
+            _SCHEMA_MEMO[key] = (version, df.schema)
     if name == "events":
         dt = df.schema["ts"].dataType
         if isinstance(dt, LongType):

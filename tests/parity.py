@@ -201,16 +201,19 @@ def assert_frames_match(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame, name: s
             )
 
 
-def jobs_per_call(spark, build) -> int:
-    """Spark jobs one call runs: planning (probes) plus the final
-    collect, read from the status tracker under a fresh job group."""
+def jobs_per_call(spark, build, collect=True) -> int:
+    """Spark jobs one call runs: planning (probes) plus, with
+    ``collect``, the final collect, read from the status tracker under
+    a fresh job group."""
     import uuid
 
     sc = spark.sparkContext
     group = f"jobs-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
-        build().collect()
+        df = build()
+        if collect:
+            df.collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)

@@ -1885,7 +1885,9 @@ def test_no_unjustified_driver_collects():
 
 def test_one_stage_memo():
     """Static guard: every memoized stage goes through api.memo_stage,
-    whose key always covers the data version of every source. A
+    whose key always covers the data version of every source. The one
+    other memo is tables._SCHEMA_MEMO, the pinned parquet schema of each
+    fixture table, keyed on the table's data version the same way. A
     module-level cache or memo anywhere else in the engine package
     brings back a private key policy (the stale-key defect class) and
     fails here by name."""
@@ -1910,7 +1912,46 @@ def test_one_stage_memo():
                 for t in targets
                 if isinstance(t, ast.Name) and pat.search(t.id)
             }
-    assert found == {("api.py", "_STAGE_MEMO"), ("api.py", "_STAGE_MEMO_MAX")}
+    assert found == {
+        ("api.py", "_STAGE_MEMO"),
+        ("api.py", "_STAGE_MEMO_MAX"),
+        ("tables.py", "_SCHEMA_MEMO"),
+    }
+
+
+def test_fixture_reads_go_through_tbl():
+    """Static guard: a fixture table is read only by tables.tbl, which
+    pins its schema and applies the ingestion shims. Any ``.parquet(``
+    call elsewhere in the engine package whose path argument is built
+    from ``sf_dir`` fails here by name."""
+    import ast
+    import pathlib
+
+    import hadoop_deliver_spark
+
+    pkg = pathlib.Path(hadoop_deliver_spark.__file__).parent
+    found = set()
+    for py in pkg.rglob("*.py"):
+        if py.name == "tables.py":
+            continue
+        tree = ast.parse(py.read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if not (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "parquet"
+                ):
+                    continue
+                if any(
+                    isinstance(n, ast.Name) and n.id == "sf_dir"
+                    for arg in node.args
+                    for n in ast.walk(arg)
+                ):
+                    found.add(f"{py.relative_to(pkg)}::{fn.name}")
+    assert not found, f"fixture reads that bypass tables.tbl: {sorted(found)}"
 
 
 def test_candidate_volume_bounds(spark, sf_dir):
@@ -2505,6 +2546,149 @@ def test_memo_misses_after_source_rewrite(spark, sf_dir, tmp_path, table):
     duck.close()
 
 
+def test_memo_misses_after_in_place_rewrite(spark, sf_dir, tmp_path):
+    """A source file overwritten in place under the same name changes
+    its data version: first as a row subset with the same schema, then
+    as another subset with one more column. Each time tables.tbl must
+    return the new schema, the stage memo must miss (grow), and the
+    memo consumer must match the DuckDB oracle over the new file."""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hadoop_deliver_spark import api
+    from hadoop_deliver_spark.registry import load_all
+    from tests.parity import assert_frames_match
+
+    q = load_all()["graph_clustering_local"]
+    base = pq.read_table(f"{sf_dir}/orders.parquet")
+    duck = _fixture_copy(sf_dir, tmp_path, {"orders": base})
+    sf, path = str(tmp_path), os.path.join(tmp_path, "orders.parquet")
+    api.clear_stage_caches()
+    q.fn(spark, sf).collect()
+    rng = np.random.default_rng(7)
+    for extra in (False, True):
+        cut = base.filter(pa.array(rng.random(base.num_rows) < 0.8))
+        if extra:
+            cut = cut.append_column("o_note", pa.array(["x"] * cut.num_rows))
+        before = len(api._STAGE_MEMO)
+        pq.write_table(cut, path)
+        assert tbl(spark, sf, "orders").columns == cut.column_names
+        got = q.fn(spark, sf).toPandas()
+        assert len(api._STAGE_MEMO) > before, f"no memo miss (extra={extra})"
+        duck.execute(
+            f"CREATE OR REPLACE VIEW orders AS SELECT * FROM read_parquet('{path}')"
+        )
+        assert_frames_match(got, duck.execute(q.oracle).df(), q.name)
+    duck.close()
+
+
+# ---------------------------------------------------------------------------
+# fixture reads: tables.tbl pins each table's schema per data version
+# ---------------------------------------------------------------------------
+
+
+def _read_jobs(spark, sf_dir, name):
+    """Spark jobs one tables.tbl call runs, with no action after it."""
+    from tests.parity import jobs_per_call
+
+    return jobs_per_call(spark, lambda: tbl(spark, sf_dir, name), collect=False)
+
+
+def test_data_version_lists_name_size_mtime(tmp_path):
+    """tables.data_version: a directory lists every file under it; the
+    percent-encoded ``file:`` URI ``inputFiles()`` returns lists the
+    same; a rewrite in place under the same name changes the listing;
+    a path of another scheme counts by name only."""
+    from hadoop_deliver_spark.tables import data_version
+
+    table = tmp_path / "a b.parquet"
+    table.mkdir()
+    part = table / "part-0.parquet"
+    part.write_bytes(b"one")
+    v = data_version([str(table)])
+    assert [e[:2] for e in v] == [(str(part), 3)]
+    assert data_version([part.as_uri()]) == v
+    part.write_bytes(b"three")
+    assert data_version([str(table)]) != v
+    uri = "hdfs://nn/t.parquet/part-0.parquet"
+    assert data_version([uri]) == ((uri,),)
+
+
+def test_tbl_infers_once_per_data_version(spark, sf_dir, tmp_path):
+    """Under a fresh job group the first read of a copied table runs
+    the one schema-inference job and the second runs none; both give
+    the same schema and rows, with distinct attribute ids. A rewrite
+    of the table infers again."""
+    import pyarrow.parquet as pq
+
+    sf = str(tmp_path)
+    base = pq.read_table(f"{sf_dir}/orders.parquet")
+    _write_table(sf, "orders", base)
+    assert _read_jobs(spark, sf, "orders") == 1
+    assert _read_jobs(spark, sf, "orders") == 0
+    a, b = tbl(spark, sf, "orders"), tbl(spark, sf, "orders")
+    assert a.schema == b.schema and a.sameSemantics(b)
+    assert a.join(b, a.o_orderkey == b.o_orderkey).count() == base.num_rows
+    _write_table(sf, "orders", base.slice(0, 10))
+    assert _read_jobs(spark, sf, "orders") == 1
+    assert tbl(spark, sf, "orders").count() == 10
+
+
+@pytest.mark.parametrize("unit", ["ns", "us"])
+def test_tbl_events_shim_on_pinned_schema(spark, sf_dir, tmp_path, unit):
+    """The events shim runs on the pinned path too: a TIMESTAMP(NANOS)
+    copy (int64 under nanosAsLong) and a TIMESTAMP(MICROS) copy (NTZ)
+    both give TimestampType ``ts`` equal to the fixture's, on the first
+    (inferred) read and on the second (pinned, no job) read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
+
+    sf = str(tmp_path)
+    ev = pq.read_table(f"{sf_dir}/events.parquet")
+    ts = ev["ts"].cast(pa.timestamp(unit))
+    _write_table(sf, "events", ev.set_column(ev.schema.get_field_index("ts"), "ts", ts))
+    raw = spark.read.parquet(f"{sf}/events.parquet").schema["ts"].dataType
+    assert isinstance(raw, LongType if unit == "ns" else TimestampNTZType)
+    want = tbl(spark, sf_dir, "events").orderBy("event_id").toPandas()
+    first = tbl(spark, sf, "events")
+    assert _read_jobs(spark, sf, "events") == 0
+    for df in (first, tbl(spark, sf, "events")):
+        assert isinstance(df.schema["ts"].dataType, TimestampType)
+        pd.testing.assert_frame_equal(df.orderBy("event_id").toPandas(), want)
+
+
+def test_tbl_non_local_path_falls_back(spark, sf_dir):
+    """A path os.stat cannot see (here a ``file:`` URI) is read as
+    without the memo: every read infers, and nothing is stored."""
+    from hadoop_deliver_spark import tables
+
+    want = tbl(spark, sf_dir, "region").count()
+    memo = dict(tables._SCHEMA_MEMO)
+    uri = f"file:{sf_dir}"
+    for _ in range(2):
+        assert _read_jobs(spark, uri, "region") == 1
+    assert tbl(spark, uri, "region").count() == want
+    assert tables._SCHEMA_MEMO == memo
+
+
+def test_tbl_failed_read_stores_nothing(spark, tmp_path):
+    """An inference that raises (a file that is not parquet) raises as
+    before and leaves the schema memo unchanged."""
+    from py4j.protocol import Py4JJavaError
+
+    from hadoop_deliver_spark import tables
+
+    (tmp_path / "orders.parquet").write_bytes(b"not parquet")
+    memo = dict(tables._SCHEMA_MEMO)
+    with pytest.raises(Py4JJavaError, match="not a Parquet file"):
+        tbl(spark, str(tmp_path), "orders")
+    assert tables._SCHEMA_MEMO == memo
+
+
 # ---------------------------------------------------------------------------
 # driver-path gates: nothing is collected past a gate
 # ---------------------------------------------------------------------------
@@ -2773,14 +2957,14 @@ def test_triangle_count_bounds_neighbor_broadcast(
 
 
 # Spark jobs per call of the six co-activity graph queries (probes
-# while planning plus the final collect), measured at sf0.001 under
-# this test session when each still had its own gate and join
-# fallback: (shipped budget, budget 0). One shared core may not run
-# more on either path.
+# while planning plus the final collect) at sf0.001: (shipped budget,
+# budget 0). Each is the count with the schema and stage memos cleared
+# first, the most a call runs; identical over two runs each at
+# SPARK_GRAFT_CPUS 2 and 4. None may run more.
 _CO_MEMBERSHIP_JOBS = {
-    "graph_triangle_count": (18, 50),
-    "graph_randic": (15, 15),
-    "graph_leverage_centrality": (15, 13),
+    "graph_triangle_count": (17, 29),
+    "graph_randic": (14, 15),
+    "graph_leverage_centrality": (14, 13),
     "graph_degree_stats": (12, 11),
     "graph_percolation": (11, 10),
     "graph_degree_gini": (19, 18),
@@ -2977,6 +3161,33 @@ def test_events_operators_match_oracle_on_degenerate_events(
         got = kb.fn(spark, str(tmp_path)).toPandas()
         assert_frames_match(got, duck.execute(kb.oracle).df(), kb.name)
     duck.close()
+
+
+@pytest.mark.parametrize("n", [0, 1])
+def test_embedding_spectrum_on_degenerate_embeddings(spark, sf_dir, tmp_path, n):
+    """llm_embedding_spectrum (rows-only) on ``embeddings`` cut to no
+    row or one: no row gives the empty frame with the query's columns;
+    one vector gives a rank-one moment matrix, so the top share is 1,
+    the participation ratio is 1 and the corpus is flagged unhealthy."""
+    import pyarrow.parquet as pq
+
+    from hadoop_deliver_spark.registry import load_all
+
+    emb = pq.read_table(f"{sf_dir}/embeddings.parquet")
+    _write_table(str(tmp_path), "embeddings", emb.slice(0, n))
+    got = load_all()["llm_embedding_spectrum"].fn(spark, str(tmp_path)).toPandas()
+    assert list(got.columns) == [
+        "rank", "eig_share", "participation_ratio", "effective_dim_share", "healthy"
+    ]
+    if n == 0:
+        assert got.empty
+        return
+    d = len(emb["embedding"][0])
+    assert got["rank"].tolist() == list(range(1, min(8, d) + 1))
+    assert got["eig_share"].tolist() == [1.0] + [0.0] * (len(got) - 1)
+    assert set(got["participation_ratio"]) == {1.0}
+    assert set(got["effective_dim_share"]) == {round(1 / d, 4)}
+    assert not got["healthy"].any()
 
 
 def test_clone_detector_groups_a_synthetic_family(tmp_path):
